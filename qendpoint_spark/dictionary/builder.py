@@ -11,17 +11,20 @@ Reference semantics (SURVEY.md §1.3, qendpoint-core):
   id = rank(SH) or |SH| + rank(O); predicate ids are their own 1..|P|
   space (BaseDictionary.getGlobalId, BaseDictionary.java:60-81).
 
-Spark realization: distinct() per role, an inner/anti join pair for the
-SH split (the reference's sorted co-scan is a sort-merge join here —
-same algorithm, cluster-wide), then one `zip_with_rank` per section.
-All shuffles key on `term`; Catalyst's AQE handles skewed term
-prefixes, and each section rank is an independent job, so P (tiny) does
-not serialize behind O (huge).
+Spark realization: one map-side-combined groupBy(term) over role facts
+computes each term's section key (the reference's sorted co-scan of the
+subject and object streams), then ONE `zip_with_rank` over
+(sec_key, term) ranks every section at once; per-section ranks and
+global ids are CASE arithmetic over the section sizes that the rank's
+stats pass returns. The result is a plain DataFrame over the rank's
+checkpointed range partitioning, so consumers may scan it any number of
+times; nothing needs releasing or re-checkpointing.
 
 At 100 TB the term table is billions of rows: everything here is
-hash/range-shuffle parallel, there is no driver-side collection except
-the per-partition offset table (num_partitions rows) inside
-zip_with_rank, and no global-window bottleneck.
+hash/range-shuffle parallel, the only driver-side collection is
+zip_with_rank's per-partition stats (<= num_partitions x 5 rows, which
+also carry the section sizes), and there is no global-window
+bottleneck.
 """
 
 from __future__ import annotations
@@ -39,9 +42,7 @@ SECTION_GRAPH = "G"
 
 
 def build_dictionary(
-    triples_str: DataFrame,
-    num_partitions: int | None = None,
-    eager: bool = True,
+    triples_str: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """triples_str(s,p,o string) -> dict_terms(term, section, sec_rank, id).
 
@@ -71,21 +72,12 @@ def build_dictionary(
        order, so per-section ranks fall out by subtracting the section's
        cumulative offset (the section totals ride on zip_with_rank's
        per-partition stats pass — no extra job).
-
-    eager=False returns a LAZY frame over the persisted range
-    partitioning for single-action consumers (the pipeline's dict write);
-    call the attached `_zwr_release()` after that action (see
-    dictionary.rank module docstring).
     """
-    return rank_sections(
-        role_sections(triples_str), num_partitions=num_partitions, eager=eager
-    )
+    return rank_sections(role_sections(triples_str), num_partitions=num_partitions)
 
 
 def rank_sections(
-    sectioned: DataFrame,
-    num_partitions: int | None = None,
-    eager: bool = True,
+    sectioned: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """(term, sec_key) -> dict_terms(term, section, sec_rank, id): the
     ranking half of build_dictionary, factored out so dictionary MERGES
@@ -93,19 +85,17 @@ def rank_sections(
     dictionaries' term tables directly — no triple decode, cost
     ∝ |terms| (KCatMerger merges sorted dictionary sections the same
     way, KCatMerger.java:49-511)."""
-    ranked = zip_with_rank(
+    ranked, counts = zip_with_rank(
         sectioned,
         ["sec_key", "term"],
         "grank",
         num_partitions=num_partitions,
         count_by="sec_key",
-        eager=eager,
     )
     # section totals come from zip_with_rank's own stats pass — the
     # groupBy("sec_key").collect() second full scan this replaced cost a
     # whole extra job over the ranked table per build (measured ~1-2 s
     # at the sf0.1 bench).
-    counts = ranked._zwr_counts
     n_sh = counts.get(0, 0)
     n_s = counts.get(1, 0)
     n_o = counts.get(2, 0)
@@ -119,7 +109,7 @@ def rank_sections(
     sec_col = F.col("sec_key")
     rank_col = F.col("grank")
 
-    def by_key(mapping: dict[int, object], as_lit=True):
+    def by_key(mapping: dict[int, object]):
         expr = None
         for key, val in mapping.items():
             lit = F.lit(val)
@@ -133,14 +123,26 @@ def rank_sections(
     section = by_key(sec_name)
     sec_rank = (rank_col - by_key(sec_offset)).cast("long")
     gid = (sec_rank + by_key(id_base)).cast("long")
-    out = ranked.select(
+    return ranked.select(
         "term",
         section.alias("section"),
         sec_rank.alias("sec_rank"),
         gid.alias("id"),
     )
-    out._zwr_release = ranked._zwr_release
-    return out
+
+
+def _section_key(roles: DataFrame) -> DataFrame:
+    """(term, ns, is_s, is_o) -> (term, sec_key): the SH < S < O < P < G
+    section split as 0..4 (ns 1 = predicate, 2 = graph namespace)."""
+    return roles.select(
+        "term",
+        F.when(F.col("ns") == 1, F.lit(3))
+        .when(F.col("ns") == 2, F.lit(4))
+        .when((F.col("is_s") == 1) & (F.col("is_o") == 1), F.lit(0))
+        .when(F.col("is_s") == 1, F.lit(1))
+        .otherwise(F.lit(2))
+        .alias("sec_key"),
+    )
 
 
 def role_sections(triples_str: DataFrame) -> DataFrame:
@@ -174,15 +176,7 @@ def role_sections(triples_str: DataFrame) -> DataFrame:
         .agg(F.max(F.when(F.col("f") == 1, 1).otherwise(0)).alias("is_s"),
              F.max(F.when(F.col("f") == 2, 1).otherwise(0)).alias("is_o"))
     )
-    return roles.select(
-        "term",
-        F.when(F.col("ns") == 1, F.lit(3))
-        .when(F.col("ns") == 2, F.lit(4))
-        .when((F.col("is_s") == 1) & (F.col("is_o") == 1), F.lit(0))
-        .when(F.col("is_s") == 1, F.lit(1))
-        .otherwise(F.lit(2))
-        .alias("sec_key"),
-    )
+    return _section_key(roles)
 
 
 def merge_role_sections(dicts: list[DataFrame]) -> DataFrame:
@@ -213,17 +207,10 @@ def merge_role_sections(dicts: list[DataFrame]) -> DataFrame:
             .alias("is_o"),
         )
         facts = f if facts is None else facts.unionByName(f)
-    roles = facts.groupBy("term", "ns").agg(
-        F.max("is_s").alias("is_s"), F.max("is_o").alias("is_o")
-    )
-    return roles.select(
-        "term",
-        F.when(F.col("ns") == 1, F.lit(3))
-        .when(F.col("ns") == 2, F.lit(4))
-        .when((F.col("is_s") == 1) & (F.col("is_o") == 1), F.lit(0))
-        .when(F.col("is_s") == 1, F.lit(1))
-        .otherwise(F.lit(2))
-        .alias("sec_key"),
+    return _section_key(
+        facts.groupBy("term", "ns").agg(
+            F.max("is_s").alias("is_s"), F.max("is_o").alias("is_o")
+        )
     )
 
 

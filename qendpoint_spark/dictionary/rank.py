@@ -10,11 +10,16 @@ bottleneck Spark must not reproduce. Here:
    spread across partitions),
 2. `monotonically_increasing_id()` — a narrow op that increments by 1
    within each partition, so after the local sort it enumerates rows in
-   global order *within* each range partition,
+   global order *within* each range partition. A lazy
+   `localCheckpoint` pins that partitioning (and the ids, which depend
+   on it) for every later scan,
 3. per-partition (min_mid, count) — a map-side-combined aggregate of
    num_partitions rows collected to the driver (bounded metadata:
-   <= num_partitions x |groups| rows) — turned into cumulative offsets
-   joined back by broadcast, then `rank = offset + (mid - min_mid) + 1`.
+   <= num_partitions x |groups| rows). This stats pass is the action
+   that materializes the checkpoint. Its cumulative counts become one
+   per-partition base, applied as an array literal lookup
+   `rank = element_at(array(base...), __pid + 1) + mid` — no join, and
+   codegen-safe at thousands of partitions.
 
 Cost: one range shuffle + one cheap stats pass. No global
 single-partition window (`Window.orderBy` without partitionBy
@@ -28,21 +33,14 @@ tests.
 callers that need group totals (the dictionary's section sizes) get
 them without a second full scan of the ranked table.
 
-`eager=False` skips the final localCheckpoint: the returned frame is a
-LAZY projection over the persisted range partitioning, for callers
-that consume the result in exactly ONE downstream action (the
-pipeline's dict_terms write). That saves a full materialize+rescan of
-the table. The caller must invoke the attached `_zwr_release()` after
-its action to free the cached blocks. Default stays eager: multiple
-consumers (encode's three section-map joins) would otherwise re-plan
-the join per consumer, and long-lived sessions would leak blocks.
+The checkpointed blocks live as long as the returned frame, like every
+other `localCheckpoint` in the package; there is nothing to release.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def zip_with_rank(
@@ -52,10 +50,9 @@ def zip_with_rank(
     start: int = 1,
     num_partitions: int | None = None,
     count_by: str | None = None,
-    eager: bool = True,
-) -> DataFrame:
-    """Attach a contiguous `start`-based rank over the total order of
-    sort_cols.
+) -> tuple[DataFrame, dict]:
+    """(ranked, counts): attach a contiguous `start`-based rank over the
+    total order of sort_cols.
 
     Rows must be distinct on sort_cols (dictionary terms are — the
     reference enforces the same with DuplicatedIterator,
@@ -63,26 +60,24 @@ def zip_with_rank(
     Spark's native StringType order, matching HDT section order
     (CompactString.java:104-106).
 
-    The returned DataFrame stays range-partitioned and locally sorted on
+    The ranked DataFrame stays range-partitioned and locally sorted on
     sort_cols — callers writing section tables get the HDT on-disk sort
     order for free.
 
-    count_by: optional column name; per-value row counts from the same
-    stats job are attached to the result as `._zwr_counts` (dict
-    value -> n). eager=False: see module docstring.
+    counts: per-value row counts of the `count_by` column (value -> n)
+    from the same stats job; empty when count_by is None.
     """
-    spark = df.sparkSession
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
     part = (
         df.repartitionByRange(num_partitions, *[F.col(c) for c in sort_cols])
         .sortWithinPartitions(*sort_cols)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__mid", F.monotonically_increasing_id())
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    # ONE stats pass materializes the cached partitioning and yields both
-    # the per-partition offsets and (optionally) the per-group totals.
+    # ONE stats pass materializes the checkpoint and yields both the
+    # per-partition offsets and (optionally) the per-group totals.
     group_cols = ["__pid"] + ([count_by] if count_by else [])
     stat_rows = (
         part.groupBy(*group_cols)
@@ -92,50 +87,23 @@ def zip_with_rank(
     per_pid: dict[int, list[int]] = {}
     counts: dict = {}
     for r in stat_rows:
-        pid = r["__pid"]
-        ent = per_pid.setdefault(pid, [r["__min_mid"], 0])
+        ent = per_pid.setdefault(r["__pid"], [r["__min_mid"], 0])
         ent[0] = min(ent[0], r["__min_mid"])
         ent[1] += r["__cnt"]
         if count_by:
             counts[r[count_by]] = counts.get(r[count_by], 0) + r["__cnt"]
-    offset_rows, acc = [], 0
+    # base[pid] = rows before pid + start - min_mid; empty partitions
+    # are never looked up and keep 0
+    base = [0] * (max(per_pid, default=0) + 1)
+    acc = start
     for pid in sorted(per_pid):
         mn, cnt = per_pid[pid]
-        offset_rows.append((pid, mn, acc))
+        base[pid] = acc - mn
         acc += cnt
-    offsets = spark.createDataFrame(
-        offset_rows,
-        T.StructType(
-            [
-                T.StructField("__pid", T.IntegerType()),
-                T.StructField("__min_mid", T.LongType()),
-                T.StructField("__offset", T.LongType()),
-            ]
-        ),
+    offset = F.element_at(
+        F.array(*[F.lit(b).cast("long") for b in base]), F.col("__pid") + 1
     )
-    ranked = (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            id_col,
-            (
-                F.col("__mid")
-                - F.col("__min_mid")
-                + F.col("__offset")
-                + F.lit(start)
-            ).cast("long"),
-        )
-        .drop("__pid", "__mid", "__min_mid", "__offset")
+    ranked = part.withColumn(id_col, F.col("__mid") + offset).drop(
+        "__pid", "__mid"
     )
-    if eager:
-        # materialize, then release the persisted intermediate: callers
-        # run many builds in one session and un-unpersisted blocks
-        # accumulate. localCheckpoint also cuts the plan, keeping AQE
-        # re-optimization cost flat when builds compose (merge/diff/CC).
-        ranked = ranked.localCheckpoint(eager=True)
-        part.unpersist()
-        ranked._zwr_release = lambda: None
-    else:
-        ranked._zwr_release = lambda: part.unpersist()
-    if count_by:
-        ranked._zwr_counts = counts
-    return ranked
+    return ranked, counts

@@ -186,7 +186,7 @@ def q_kg_hdt_quads_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qendpoint_spark.hdt import hdt_to_dataframes, write_hdtq
 
     base = quad_triples_str(_docs(spark, sf_dir)).dropDuplicates()
-    qdict = build_dictionary(base).localCheckpoint(eager=True)
+    qdict = build_dictionary(base)
     encq = encode_triples(base, qdict, assume_distinct=True)
     path = _gate_tmp_path(".hdt", "qes_gate_hdtq_")
     write_hdtq(qdict, encq, path)
@@ -320,7 +320,7 @@ def q_kg_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quad mode: per-document metadata triples in per-source named
     graphs -> G-section dictionary + (s,p,o,g) encode."""
     base = quad_triples_str(_docs(spark, sf_dir))
-    qdict = build_dictionary(base).localCheckpoint(eager=True)
+    qdict = build_dictionary(base)
     return encode_triples(base, qdict)
 
 
@@ -458,7 +458,7 @@ def _inc_merge(spark: SparkSession, sf_dir: str):
             tri = extract_triples_from_documents(
                 docs.filter(cond)
             ).localCheckpoint(eager=True)
-            d = build_dictionary(tri).localCheckpoint(eager=True)
+            d = build_dictionary(tri)
             parts.append((encode_triples(tri, d), d))
         md, mt = merge_incremental(parts[0], parts[1])
         _cache_put(key, (md.cache(), mt.cache()))
@@ -665,7 +665,7 @@ def q_kg_cat_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         tri = extract_triples_from_documents(
             docs.filter(F.col("doc_id") % 2 == par)
         ).localCheckpoint(eager=True)
-        d = build_dictionary(tri).localCheckpoint(eager=True)
+        d = build_dictionary(tri)
         halves.append((encode_triples(tri, d), d))
     _, merged_triples, _ = merge_datasets(halves)
     return merged_triples

@@ -148,14 +148,12 @@ def merge_datasets(
         )
     with_graph = graphness.pop()
     keys = ["s", "p", "o"] + (["g"] if with_graph else [])
-    # localCheckpoint cuts the composed rank plan once: the merged dict
-    # feeds k remap joins and the remaps feed the triple joins, so
-    # recomputation (and AQE re-optimization of the deep plan) would
-    # otherwise multiply.
+    # the merged dict feeds k remap joins; rank_sections already returns
+    # it over a checkpoint, so those joins never recompute the rank
     merged_dict = rank_sections(
         merge_role_sections([d for _, d in inputs]),
         num_partitions=num_partitions,
-    ).localCheckpoint(eager=True)
+    )
     remaps = [build_remap(d, merged_dict) for _, d in inputs]
     remapped = [
         remap_triples(t, r) for (t, _), r in zip(inputs, remaps)

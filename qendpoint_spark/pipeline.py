@@ -71,6 +71,71 @@ def _resume(catalog: Catalog, name: str, fp: str) -> StageResult | None:
     )
 
 
+def _extractor(source_kind: str):
+    """source_kind -> the function turning source rows into
+    triples_str(s,p,o). "triples": the source already IS triples_str —
+    the rdf2hdt path, where parsing (sources.read_rdf_source) replaces
+    extraction. Parsed RDF may repeat statements (HDT stores a set; the
+    reference dedups in its triple sort) — unlike extraction, which
+    emits distinct by construction — so it dedups, quads on the full
+    (s,p,o,g) statement key."""
+    if source_kind == "triples":
+        return lambda df: df.dropDuplicates(
+            ["s", "p", "o"] + (["g"] if "g" in df.columns else [])
+        )
+    if source_kind == "documents":
+        return extract_triples_from_documents
+    return extract_triples_from_pages
+
+
+def _publish_tail(
+    catalog: Catalog,
+    report: PipelineReport,
+    fp: str,
+    header,
+    num_partitions: int | None,
+    with_pso: bool,
+    with_stats: bool,
+    force: bool,
+) -> None:
+    """OPS -> [PSO] -> [predicate/object index, header] over the
+    committed triples_spo, appending each stage to `report`. fp is the
+    triples_spo fingerprint; header(triples_spo) builds the header
+    table. One persist serves every consumer (OPS re-sort's sample +
+    shuffle passes, optional PSO, both stats aggregates, header count)
+    — 5-6 parquet re-decodes otherwise — and is released on every
+    path, failures included."""
+    n = num_partitions
+    fp_ops = _fingerprint(fp, "ops", str(report.n_triples))
+    stages = [(
+        "triples_ops", lambda t: ops_table(t, num_partitions=n),
+        ["o", "p", "s"], fp_ops,
+    )]
+    if with_pso:
+        stages.append((
+            "triples_pso", lambda t: pso_table(t, num_partitions=n),
+            ["p", "s", "o"], _fingerprint(fp, "pso", str(report.n_triples)),
+        ))
+    if with_stats:
+        fp_stats = _fingerprint(fp_ops, "stats")
+        stages += [
+            ("predicate_index", predicate_index, None, fp_stats),
+            ("object_index", object_index, None, fp_stats),
+            ("header", header, None, fp_stats),
+        ]
+    triples_spo = catalog.read("triples_spo").persist()
+    try:
+        for name, build, sort_cols, stage_fp in stages:
+            res = None if force else _resume(catalog, name, stage_fp)
+            if res is None:
+                res = catalog.write_stage(
+                    name, build(triples_spo), stage_fp, sort_cols=sort_cols, force=force
+                )
+            report.stages.append(res)
+    finally:
+        triples_spo.unpersist()
+
+
 def run_pipeline(
     spark: SparkSession,
     catalog: Catalog,
@@ -105,25 +170,10 @@ def run_pipeline(
     fp0 = _fingerprint(source_kind, source_fingerprint)
 
     # S1 extract ----------------------------------------------------------
-    # source_kind="triples": source_df already IS triples_str(s,p,o) —
-    # the rdf2hdt path, where parsing (sources.read_rdf_source) replaces
-    # extraction and the rest of the pipeline is unchanged.
     res = None if force else _resume(catalog, "triples_str", fp0)
     if res is None:
-        if source_kind == "triples":
-            # parsed RDF may repeat statements (HDT stores a set; the
-            # reference dedups in its triple sort) — unlike extraction,
-            # which emits distinct by construction. Quad input dedups
-            # on the full (s,p,o,g) statement key.
-            extractor = lambda df: df.dropDuplicates(  # noqa: E731
-                ["s", "p", "o"] + (["g"] if "g" in df.columns else [])
-            )
-        elif source_kind == "documents":
-            extractor = extract_triples_from_documents
-        else:
-            extractor = extract_triples_from_pages
         res = catalog.write_stage(
-            "triples_str", extractor(source_df), fp0, force=force
+            "triples_str", _extractor(source_kind)(source_df), fp0, force=force
         )
     report.stages.append(res)
     triples_str = catalog.read("triples_str")
@@ -167,13 +217,7 @@ def run_pipeline(
     fp1 = _fingerprint(fp0, "dict", str(res.rows))
     res = None if force else _resume(catalog, "dict_terms", fp1)
     if res is None:
-        # eager=False: the parquet write below is the single consumer, so
-        # the rank's localCheckpoint (a full extra materialize+rescan of
-        # the term table) is skipped; the write streams straight off the
-        # persisted range partitioning, released right after.
-        dict_terms = build_dictionary(
-            triples_str, num_partitions=num_partitions, eager=False
-        )
+        dict_terms = build_dictionary(triples_str, num_partitions=num_partitions)
         # MSD physical layout (MultipleSectionDictionary.java:51-60):
         # one partition directory per (section, datatype) — the object
         # sections split per literal datatype exactly as the reference's
@@ -185,18 +229,13 @@ def run_pipeline(
         # dynamic-partition write emits only ~76 files — an extra
         # (section, datatype, term) re-range was tried and cost more
         # than it saved.
-        try:
-            res = catalog.write_stage(
-                "dict_terms",
-                with_datatype(dict_terms),
-                fp1,
-                force=force,
-                partition_by=["section", "datatype"],
-            )
-        finally:
-            # release the rank's cached range partitioning even on a
-            # failed write — long-lived sessions must not leak blocks
-            dict_terms._zwr_release()
+        res = catalog.write_stage(
+            "dict_terms",
+            with_datatype(dict_terms),
+            fp1,
+            force=force,
+            partition_by=["section", "datatype"],
+        )
     report.stages.append(res)
     dict_terms = catalog.read("dict_terms")
 
@@ -245,61 +284,18 @@ def run_pipeline(
             enc.unpersist()
     report.stages.append(res)
     report.n_triples = res.rows
-    # one persist serves every downstream consumer (OPS re-sort's sample
-    # + shuffle passes, optional PSO, both stats aggregates, header
-    # count) — 5-6 parquet re-decodes otherwise; released before return
-    triples_spo = catalog.read("triples_spo").persist()
-    try:
-
-        # S4 OPS materialize ----------------------------------------------------
-        fp3 = _fingerprint(fp2, "ops", str(res.rows))
-        res = None if force else _resume(catalog, "triples_ops", fp3)
-        if res is None:
-            res = catalog.write_stage(
-                "triples_ops",
-                ops_table(triples_spo, num_partitions=num_partitions),
-                fp3,
-                sort_cols=["o", "p", "s"],
-                force=force,
-            )
-        report.stages.append(res)
-
-        # S4b optional PSO materialize (?P? / ?PS access path) -------------------
-        if with_pso:
-            fp3b = _fingerprint(fp2, "pso", str(report.n_triples))
-            res = None if force else _resume(catalog, "triples_pso", fp3b)
-            if res is None:
-                res = catalog.write_stage(
-                    "triples_pso",
-                    pso_table(triples_spo, num_partitions=num_partitions),
-                    fp3b,
-                    sort_cols=["p", "s", "o"],
-                    force=force,
-                )
-            report.stages.append(res)
-
-        # S5 stats + header ----------------------------------------------------
-        if with_stats:
-            fp4 = _fingerprint(fp3, "stats")
-            for name, fn in (
-                ("predicate_index", predicate_index),
-                ("object_index", object_index),
-                (
-                    "header",
-                    lambda t: build_header(
-                        triples_str, catalog.read("dict_terms"), t,
-                        n_triples=report.n_triples,
-                    ),
-                ),
-            ):
-                res = None if force else _resume(catalog, name, fp4)
-                if res is None:
-                    res = catalog.write_stage(name, fn(triples_spo), fp4, force=force)
-                report.stages.append(res)
-
-
-    finally:
-        triples_spo.unpersist()
+    _publish_tail(
+        catalog,
+        report,
+        fp2,
+        lambda t: build_header(
+            triples_str, catalog.read("dict_terms"), t, n_triples=report.n_triples
+        ),
+        num_partitions,
+        with_pso,
+        with_stats,
+        force,
+    )
     report.wall_s = time.time() - t_start
     return report
 
@@ -325,15 +321,10 @@ def incremental_update(
     subsequent ?P? scan. Identity proven in tests:
     pipeline(A) + incremental_update(B) == pipeline(A ∪ B).
     """
-    extractor = (
-        extract_triples_from_documents
-        if source_kind == "documents"
-        else extract_triples_from_pages
-    )
     return incremental_update_triples(
         spark,
         catalog,
-        extractor(new_docs),
+        _extractor(source_kind)(new_docs),
         batch_fingerprint=_fingerprint(
             "incremental", source_kind, batch_fingerprint
         ),
@@ -354,7 +345,7 @@ def incremental_update_triples(
     same way without re-parsing the source). new_tri must be distinct
     on (s,p,o) — streaming.compact_staging guarantees it; overlap with
     the PUBLISHED data is fine (the merge is a set union)."""
-    from qendpoint_spark.encoding import build_header
+    from qendpoint_spark.encoding import build_header, decode_triples
     from qendpoint_spark.merge import merge_datasets, merge_incremental
 
     t_start = time.time()
@@ -401,54 +392,25 @@ def incremental_update_triples(
     )
     report.stages.append(res)
     report.n_triples = res.rows
-    # same multi-consumer persist as run_pipeline (OPS/PSO/stats/header)
-    triples_spo = catalog.read("triples_spo").persist()
-    report.stages.append(
-        catalog.write_stage(
-            "triples_ops",
-            ops_table(triples_spo, num_partitions=num_partitions),
-            fp,
-            sort_cols=["o", "p", "s"],
-            force=True,
+
+    def header(triples_spo: DataFrame) -> DataFrame:
+        d = catalog.read("dict_terms")
+        return build_header(
+            decode_triples(triples_spo, d), d, triples_spo, n_triples=report.n_triples
         )
-    )
+
     # refresh every derived table that exists in the catalog so nothing
     # keeps describing the pre-merge dataset
-    if os.path.exists(catalog.table_path("triples_pso")):
-        report.stages.append(
-            catalog.write_stage(
-                "triples_pso",
-                pso_table(triples_spo, num_partitions=num_partitions),
-                fp,
-                sort_cols=["p", "s", "o"],
-                force=True,
-            )
-        )
-    for name, fn in (
-        ("predicate_index", predicate_index),
-        ("object_index", object_index),
-    ):
-        if os.path.exists(catalog.table_path(name)):
-            report.stages.append(
-                catalog.write_stage(name, fn(triples_spo), fp, force=True)
-            )
-    if os.path.exists(catalog.table_path("header")):
-        from qendpoint_spark.encoding import decode_triples
-
-        merged_str = decode_triples(
-            triples_spo, catalog.read("dict_terms")
-        )
-        report.stages.append(
-            catalog.write_stage(
-                "header",
-                build_header(
-                    merged_str, catalog.read("dict_terms"), triples_spo,
-                    n_triples=report.n_triples,
-                ),
-                fp,
-                force=True,
-            )
-        )
-    triples_spo.unpersist()
+    exists = lambda t: os.path.exists(catalog.table_path(t))  # noqa: E731
+    _publish_tail(
+        catalog,
+        report,
+        fp,
+        header,
+        num_partitions,
+        with_pso=exists("triples_pso"),
+        with_stats=any(map(exists, ("predicate_index", "object_index", "header"))),
+        force=True,
+    )
     report.wall_s = time.time() - t_start
     return report

@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's MemTotal, capped at 48g: a larger heap lets
+    the JVM grow until the kernel OOM-kills it on small hosts."""
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "qendpoint_spark",
     cores: int | None = None,
@@ -43,7 +55,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # deeply composed pipelines (decode∘encode∘build with nested
         # persisted fragments) make plan *pretty-printing* exponential:

@@ -62,7 +62,7 @@ def _bound_triples(cur: DataFrame, tmpl: list, where) -> DataFrame:
     from qendpoint_spark.encoding import encode_triples
     from qendpoint_spark.sparql.algebra import SparqlEngine, _collect_consts
 
-    d = build_dictionary(cur).localCheckpoint(eager=True)
+    d = build_dictionary(cur)
     enc = encode_triples(cur, d)
     eng = SparqlEngine(enc, d)
     q = Query("CONSTRUCT", True, [], tmpl, where, [], None, [], None, None)

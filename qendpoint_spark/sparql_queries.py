@@ -52,7 +52,7 @@ def _quad_engine(spark: SparkSession, sf_dir: str):
         from qendpoint_spark.sparql import SparqlEngine
 
         base = quad_triples_str(_docs(spark, sf_dir))
-        qdict = build_dictionary(base).localCheckpoint(eager=True)
+        qdict = build_dictionary(base)
         encq = encode_triples(base, qdict).localCheckpoint(eager=True)
         tri = encq.drop("g").dropDuplicates(["s", "p", "o"])
         _ENGINES[key] = SparqlEngine(tri, qdict, quads=encq)

@@ -61,7 +61,7 @@ def expand_docs(docs, k: int):
 
 def build(docs):
     tri = extract_triples_from_documents(docs).localCheckpoint(eager=True)
-    d = build_dictionary(tri).localCheckpoint(eager=True)
+    d = build_dictionary(tri)
     enc = encode_triples(tri, d, assume_distinct=True).localCheckpoint(eager=True)
     return tri, d, enc
 

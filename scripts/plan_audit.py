@@ -54,7 +54,7 @@ def main() -> None:
     sections.append(("extract (documents -> triples_str)", formatted(tri)))
     sections.append(("dictionary role aggregation", formatted(role_sections(tri))))
     tri_c = tri.localCheckpoint(eager=True)
-    d = build_dictionary(tri_c).localCheckpoint(eager=True)
+    d = build_dictionary(tri_c)
     enc = encode_triples(tri_c, d, assume_distinct=True)
     sections.append(("encode (P broadcast first, AQE joins)", formatted(enc)))
     enc_c = enc.localCheckpoint(eager=True)

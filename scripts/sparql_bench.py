@@ -76,7 +76,7 @@ def main() -> None:
             .drop("rep")
         )
     tri = extract_triples_from_documents(docs).localCheckpoint(eager=True)
-    d = build_dictionary(tri).localCheckpoint(eager=True)
+    d = build_dictionary(tri)
     enc = encode_triples(tri, d).localCheckpoint(eager=True)
     n_triples = enc.count()
     eng = SparqlEngine(

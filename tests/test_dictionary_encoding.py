@@ -29,46 +29,58 @@ def _doc_rows(documents):
 
 
 def test_zip_with_rank_contiguous(spark):
-    df = spark.range(0, 10_000).select(
-        F.concat(F.lit("t"), F.col("id").cast("string")).alias("term")
-    )
-    ranked = zip_with_rank(df, ["term"], "rid", num_partitions=16)
-    got = ranked.select("rid").collect()
-    ids = sorted(r.rid for r in got)
-    assert ids == list(range(1, 10_001))
-    # rank 1 must be the binary-smallest term
-    first = ranked.filter(F.col("rid") == 1).collect()[0].term
-    assert first == min((r.term for r in df.collect()), key=lambda t: t.encode())
+    # (rows, partitions): the usual shape, thousands of partitions (the
+    # per-partition base is one array literal, which must stay
+    # codegen-safe), and more partitions than rows (empty partitions)
+    for n, parts in ((10_000, 16), (10_000, 1_024), (10, 64)):
+        df = spark.range(0, n).select(
+            F.concat(F.lit("t"), F.col("id").cast("string")).alias("term")
+        )
+        ranked, counts = zip_with_rank(df, ["term"], "rid", num_partitions=parts)
+        assert counts == {}
+        got = ranked.collect()
+        assert sorted(r.rid for r in got) == list(range(1, n + 1))
+        # rank order is binary term order
+        by_rank = [r.term for r in sorted(got, key=lambda r: r.rid)]
+        assert by_rank == sorted(by_rank, key=lambda t: t.encode())
 
 
-def test_zip_with_rank_count_by_and_lazy(spark):
-    """r06 optimization internals: per-group counts piggyback on the
-    stats pass, and eager=False (lazy, persisted-range-backed) ranks
-    exactly as the eager path does."""
+def test_zip_with_rank_count_by(spark):
+    """Per-group counts piggyback on the stats pass and come back with
+    the ranked frame; each group's ranks are one contiguous run."""
     df = spark.range(0, 5_000).select(
         F.concat(F.lit("t"), F.col("id").cast("string")).alias("term"),
         (F.col("id") % 3).cast("int").alias("grp"),
     )
-    eager = zip_with_rank(df, ["grp", "term"], "rid", num_partitions=8,
-                          count_by="grp")
-    assert eager._zwr_counts == {0: 1667, 1: 1667, 2: 1666}
-    lazy = zip_with_rank(df, ["grp", "term"], "rid", num_partitions=8,
-                         count_by="grp", eager=False)
-    assert lazy._zwr_counts == eager._zwr_counts
-    got_lazy = sorted(map(tuple, lazy.collect()))
-    lazy._zwr_release()
-    assert got_lazy == sorted(map(tuple, eager.collect()))
-    ids = sorted(t[-1] for t in got_lazy)
-    assert ids == list(range(1, 5_001))
+    ranked, counts = zip_with_rank(df, ["grp", "term"], "rid", num_partitions=8,
+                                   count_by="grp")
+    assert counts == {0: 1667, 1: 1667, 2: 1666}
+    got = ranked.collect()
+    assert sorted(r.rid for r in got) == list(range(1, 5_001))
+    lo = 1
+    for grp in (0, 1, 2):
+        ids = sorted(r.rid for r in got if r.grp == grp)
+        assert ids == list(range(lo, lo + counts[grp]))
+        lo += counts[grp]
 
 
-def test_build_dictionary_lazy_matches_eager(spark, documents):
-    triples = extract_triples_from_documents(documents)
-    eager = build_dictionary(triples, num_partitions=8)
-    lazy = build_dictionary(triples, num_partitions=8, eager=False)
-    got = sorted(map(tuple, lazy.collect()))
-    lazy._zwr_release()
-    assert got == sorted(map(tuple, eager.collect()))
+def test_build_dictionary_sections_contiguous(spark, documents):
+    """build_dictionary returns a plain frame over the rank's
+    checkpoint: repeated scans see the same ids, every section ranks
+    1..n, and ids follow the global-id rule (S/O offset by |SH|)."""
+    dict_df = build_dictionary(
+        extract_triples_from_documents(documents), num_partitions=8
+    )
+    rows = sorted(map(tuple, dict_df.collect()))
+    assert rows == sorted(map(tuple, dict_df.collect()))
+    by_sec: dict[str, list[tuple[int, int]]] = {}
+    for _term, sec, rank, gid in rows:
+        by_sec.setdefault(sec, []).append((rank, gid))
+    n_sh = len(by_sec.get("SH", []))
+    for sec, ranks in by_sec.items():
+        assert sorted(r for r, _ in ranks) == list(range(1, len(ranks) + 1))
+        base = n_sh if sec in ("S", "O") else 0
+        assert all(gid == rank + base for rank, gid in ranks)
 
 
 def test_extraction_matches_oracle(spark, documents):

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import gc
+import time
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from qendpoint_spark import pipeline
 from qendpoint_spark.catalog import Catalog
 from qendpoint_spark.datagen import generate_pages, generate_sameas
 from qendpoint_spark.linking import build_alias_dict
@@ -90,3 +95,39 @@ def test_pipeline_empty_corpus(spark, tmp_path):
     assert cat.read("triples_spo").count() == 0
     hdr = cat.read("header").collect()[0]
     assert hdr.n_triples == 0 and hdr.n_distinct_subjects == 0
+
+
+def test_incremental_update_releases_cache_on_failure(spark, documents, tmp_path,
+                                                      monkeypatch):
+    """An OPS failure while republishing an incremental update must not
+    leak the cached triples_spo blocks: every RDD the call persists is
+    gone again once its frames are garbage."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    run_pipeline(spark, cat, source_df=documents.filter(F.col("doc_id") % 2 == 0),
+                 source_kind="documents", source_fingerprint="even",
+                 num_partitions=4)
+    batch = pipeline.extract_triples_from_documents(
+        documents.filter(F.col("doc_id") % 2 == 1)
+    )
+
+    def failing_ops(triples_spo, **_):
+        triples_spo.count()  # the SPO cache is populated, then the job dies
+        raise RuntimeError("injected OPS failure")
+
+    monkeypatch.setattr(pipeline, "ops_table", failing_ops)
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids() -> set[int]:
+        gc.collect()
+        spark._jvm.System.gc()
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persistent_ids()
+    with pytest.raises(RuntimeError, match="injected OPS failure"):
+        pipeline.incremental_update_triples(spark, cat, batch, num_partitions=4)
+    for _ in range(20):  # JVM weak references clear asynchronously
+        leaked = persistent_ids() - before
+        if not leaked:
+            break
+        time.sleep(0.5)
+    assert not leaked
