@@ -428,12 +428,13 @@ def q_kg_sorted_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_cat_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental KCat (big base ⊕ small delta) through the
-    delta-proportional path (merge/incremental_cat.py): base = 98% of
-    the corpus, delta = the doc_id % 50 == 0 slice, each encoded in its
-    own ID space. The oracle encodes the full corpus directly, so the
-    breakpoint/step-function rank algebra must reproduce the
-    from-scratch ID assignment exactly (KCatImpl.java:370-420)."""
+    """Incremental KCat (big base ⊕ small delta) through
+    merge_incremental, the two-input KCat id-remap merge
+    (merge/kcat.py): base = 98% of the corpus, delta = the
+    doc_id % 50 == 0 slice, each encoded in its own ID space. The
+    oracle encodes the full corpus directly, so re-ranking the merged
+    term tables and remapping both inputs' int triples must reproduce
+    the from-scratch ID assignment exactly (KCatImpl.java:370-420)."""
     return _inc_merge(spark, sf_dir)[1]
 
 

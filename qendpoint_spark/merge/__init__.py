@@ -2,9 +2,9 @@ from qendpoint_spark.merge.kcat import (
     build_remap,
     diff_datasets,
     merge_datasets,
+    merge_incremental,
     remap_triples,
 )
-from qendpoint_spark.merge.incremental_cat import merge_incremental
 
 __all__ = [
     "merge_datasets",

@@ -24,9 +24,9 @@ The Spark realization follows the same decomposition:
    int key.
 
 Nothing wider than a term string ever shuffles, and the full corpus is
-touched only as longs — the property that makes a 1 %-delta merge
-affordable at 100 TB (see merge/incremental_cat.py for the
-delta-proportional specialization).
+touched only as longs. The incremental compaction of a small batch into
+a published dataset (CatTreeImpl.doGenerationSync) is the k = 2 case of
+the same merge — merge_incremental — not a separate algorithm.
 """
 
 from __future__ import annotations
@@ -166,6 +166,18 @@ def merge_datasets(
     # 8-byte ids, never strings.
     merged = merged.dropDuplicates(keys)
     return merged_dict, merged, remaps
+
+
+def merge_incremental(
+    base: tuple[DataFrame, DataFrame],
+    delta: tuple[DataFrame, DataFrame],
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """base ⊕ delta, each (triples_id, dict_terms): merge_datasets over
+    the two inputs, returning (merged_dict, merged_triples_id) without
+    the remaps."""
+    merged_dict, merged, _ = merge_datasets([base, delta], num_partitions)
+    return merged_dict, merged
 
 
 def diff_datasets(

@@ -313,12 +313,10 @@ def incremental_update(
     CatTreeImpl.doGenerationSync: build a chunk HDT, then cat it with
     the accumulated one). The batch is extracted + dictionary-encoded
     in its OWN ID space, merged with the published dataset through the
-    KCat id-remap path (merge/kcat.py: merged dictionary from the term
-    tables, integer remap joins for the triples), and dict/SPO/OPS plus
-    EVERY derived table the pipeline may have published (PSO, predicate
-    /object stats, header) are republished — a merge that left stats
-    describing the pre-merge dataset would silently mis-plan every
-    subsequent ?P? scan. Identity proven in tests:
+    one KCat id-remap merge (merge/kcat.py: merged dictionary re-ranked
+    from the two term tables, integer remap joins for the triples), and
+    republished with every derived table (publish_merged). Identity
+    proven in tests:
     pipeline(A) + incremental_update(B) == pipeline(A ∪ B).
     """
     return incremental_update_triples(
@@ -345,35 +343,49 @@ def incremental_update_triples(
     same way without re-parsing the source). new_tri must be distinct
     on (s,p,o) — streaming.compact_staging guarantees it; overlap with
     the PUBLISHED data is fine (the merge is a set union)."""
-    from qendpoint_spark.encoding import build_header, decode_triples
-    from qendpoint_spark.merge import merge_datasets, merge_incremental
+    from qendpoint_spark.merge import merge_incremental
 
     t_start = time.time()
-    report = PipelineReport()
     new_dict = build_dictionary(new_tri, num_partitions=num_partitions)
     new_enc = encode_triples(new_tri, new_dict, assume_distinct=True)
     base = (catalog.read("triples_spo"), catalog.read("dict_terms"))
-    # strategy: a SMALL batch (the CatTree compaction norm) goes through
-    # the delta-proportional breakpoint merge — shuffle ∝ |batch|; a
-    # large batch falls back to the general k-way int-remap merge
-    # (outputs are identical; property-tested in test_incremental_cat)
-    n_delta_terms = new_dict.count()
-    if n_delta_terms <= 2_000_000:
-        merged_dict, merged_triples = merge_incremental(
-            base, (new_enc, new_dict), max_delta_terms=2_000_000
-        )
-    else:
-        merged_dict, merged_triples, _ = merge_datasets(
-            [base, (new_enc, new_dict)], num_partitions=num_partitions
-        )
-    # The merged plans lazily read the CURRENT published tables, which
-    # the republish below overwrites — materialize both first. (A
-    # versioned table format — Iceberg snapshots — would let the new
-    # version be written while readers pin the old one; the os.rename
-    # Catalog has no snapshots, so the cut is explicit here.)
-    merged_dict = merged_dict.localCheckpoint(eager=True)
+    merged_dict, merged_triples = merge_incremental(
+        base, (new_enc, new_dict), num_partitions=num_partitions
+    )
+    report = publish_merged(
+        catalog,
+        merged_dict,
+        merged_triples,
+        batch_fingerprint or _fingerprint("incremental", "triples"),
+        num_partitions,
+    )
+    report.wall_s = time.time() - t_start
+    return report
+
+
+def publish_merged(
+    catalog: Catalog,
+    merged_dict: DataFrame,
+    merged_triples: DataFrame,
+    fp: str,
+    num_partitions: int | None = None,
+) -> PipelineReport:
+    """Publish a merged (or diffed) dataset — dict_terms in the MSD
+    layout, triples_spo, then OPS plus EVERY derived table the catalog
+    already holds (PSO, predicate/object stats, header): a merge that
+    left stats describing the pre-merge dataset would silently mis-plan
+    every subsequent ?P? scan. A fresh catalog gets dict/SPO/OPS.
+
+    merged_dict arrives materialized (rank_sections checkpoints it),
+    but merged_triples may still lazily read the catalog's CURRENT
+    dict_terms/triples_spo through the merge's remap joins, and the
+    writes below overwrite both — so it is cut first. (A versioned
+    table format would let readers pin the old version; the os.rename
+    Catalog has no snapshots, so the cut is explicit here.)"""
+    from qendpoint_spark.encoding import build_header, decode_triples
+
     merged_triples = merged_triples.localCheckpoint(eager=True)
-    fp = batch_fingerprint or _fingerprint("incremental", "triples")
+    report = PipelineReport()
     report.stages.append(
         catalog.write_stage(
             "dict_terms",
@@ -399,8 +411,6 @@ def incremental_update_triples(
             decode_triples(triples_spo, d), d, triples_spo, n_triples=report.n_triples
         )
 
-    # refresh every derived table that exists in the catalog so nothing
-    # keeps describing the pre-merge dataset
     exists = lambda t: os.path.exists(catalog.table_path(t))  # noqa: E731
     _publish_tail(
         catalog,
@@ -412,5 +422,4 @@ def incremental_update_triples(
         with_stats=any(map(exists, ("predicate_index", "object_index", "header"))),
         force=True,
     )
-    report.wall_s = time.time() - t_start
     return report

@@ -479,28 +479,35 @@ class SparqlEngine:
             """Spec 18.2.2.6 joins VALUES at its syntactic position;
             the engine defers it to end-of-group so pattern-bound vars
             resolve ID spaces first. That is sound only while no
-            intervening operator OBSERVES the VALUES bindings. MINUS
-            and BIND do: a VALUES-first group followed by either one
+            intervening operator OBSERVES the VALUES bindings. MINUS,
+            OPTIONAL and BIND do: a VALUES-first group followed by one
             must see the inline data as the current solution sequence
             (otherwise '{ VALUES ?a {<e1>} MINUS { ?a <n> ?b } }'
-            keeps e1 and '{ VALUES ?x {1 2} BIND(?x+1 AS ?y) }' yields
-            NULL — ADVICE r6 high, both silent wrong answers). So:
-            with no pattern bindings yet (acc is None), join the
-            deferred VALUES now (term-level vars; _join decodes an
-            ID-space operand to terms as needed). With patterns
-            already in acc AND shared variables, an early join could
-            term/ID-mismatch a LATER pattern binding — that case stays
-            loud rather than silently wrong."""
+            keeps e1, '{ VALUES ?x {<A> <Z>} OPTIONAL { ?x <p> ?b } }'
+            drops Z and '{ VALUES ?x {1 2} BIND(?x+1 AS ?y) }' yields
+            NULL — all silent wrong answers). So: with no pattern
+            bindings yet (acc is None), join the deferred VALUES now
+            (term-level vars; _join decodes an ID-space operand to
+            terms as needed). With patterns already in acc, a shared
+            variable acc binds in EVERY row is safe to defer — joining
+            VALUES then only filters acc's rows, which commutes with
+            the operator. A shared variable acc leaves unbound in
+            some rows (never bound, or only inside OPTIONAL/UNION)
+            cannot be deferred — VALUES would bind it before the
+            operator reads it — and an early join could term/ID-
+            mismatch a LATER pattern binding, so that case stays loud
+            rather than silently wrong."""
             nonlocal acc
             if not values:
                 return
             vvars = {v.name for vc in values for v in vc.variables}
             if acc is not None:
-                if vvars & el_vars:
+                if (vvars & el_vars) - (acc.kinds.keys() - acc.maybe_null):
                     raise NotImplementedError(
                         "VALUES sharing variables with a following "
-                        "MINUS/BIND in a group that also contains "
-                        "patterns; rewrite with a subquery"
+                        "MINUS/OPTIONAL/BIND in a group that also "
+                        "contains patterns that do not bind them; "
+                        "rewrite with a subquery"
                     )
                 return
             acc = self._unit_frame()
@@ -570,6 +577,7 @@ class SparqlEngine:
                 filters.append(el.expr)
             elif isinstance(el, OptionalGroup):
                 flush()
+                seed_values(_ast_vars(el.group))
                 sub = self._compile_group(el.group)
                 acc = sub if acc is None else self._join(acc, sub, "left")
             elif isinstance(el, MinusGroup):

@@ -10,9 +10,10 @@ as a SET TRANSFORMATION over the string-triple state and republishes:
   union-distinct, DELETE DATA = anti join, DELETE/INSERT WHERE =
   CONSTRUCT the affected triples via the query engine, then set ops).
 - `apply_update(spark, catalog, text)` — publish the result through
-  the pipeline; an insert-only script routes through the
-  delta-proportional KCat incremental path (pipeline.
-  incremental_update_triples) instead of a full rebuild.
+  the pipeline; an insert-only script routes through the KCat
+  id-remap merge (pipeline.incremental_update_triples), which never
+  re-extracts or re-encodes the published triples, instead of a full
+  rebuild.
 
 Ground terms use the repo's HDT lexical forms, so the output composes
 with every other stage.
@@ -121,8 +122,8 @@ def apply_update(
     num_partitions: int | None = None,
 ):
     """Apply an update script to a published warehouse. Insert-only
-    scripts go through the delta-proportional incremental merge (the
-    reference's delta-store + merge-runner path); anything with a
+    scripts go through the KCat incremental merge (the reference's
+    delta-store + merge-runner path); anything with a
     delete rebuilds from the transformed string-triple state (the
     reference's full-recompute fallback, HDTDiff territory)."""
     ops = parse_update(text)

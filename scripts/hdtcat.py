@@ -4,8 +4,10 @@ warehouse.
 Reference: qendpoint-cli/bin/hdtCat.sh / hdtDiffCat.sh (KCatImpl /
 HDTDiff over .hdt files). Here: merge_datasets joins each input's INT
 triples through its (space, old_id -> new_id) remap — no triple string
-ever decodes or shuffles (merge/kcat.py) — then publishes the merged
-dictionary (MSD layout) + SPO/OPS tables like the main pipeline.
+ever decodes or shuffles (merge/kcat.py) — then publishes the result
+through pipeline.publish_merged, the same publish incremental_update
+uses: dictionary (MSD layout) + SPO/OPS, plus a refresh of any PSO,
+stats and header tables the output warehouse already holds.
 
 Inputs and --output may each be a warehouse dir OR a binary .hdt
 file (mix freely): `hdtcat.py --output merged.hdt a.hdt b.hdt` is the
@@ -27,9 +29,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from qendpoint_spark.catalog import Catalog  # noqa: E402
-from qendpoint_spark.encoding import ops_table, spo_table  # noqa: E402
-from qendpoint_spark.encoding.header import with_datatype  # noqa: E402
 from qendpoint_spark.merge import diff_datasets, merge_datasets  # noqa: E402
+from qendpoint_spark.pipeline import publish_merged  # noqa: E402
 from qendpoint_spark.session import get_spark  # noqa: E402
 
 
@@ -80,23 +81,12 @@ def main() -> None:
         spark.stop()
         return
 
-    out = Catalog(spark, args.output)
     fp = ("diff:" if args.diff else "cat:") + "|".join(args.inputs)
-    out.write_stage(
-        "dict_terms", with_datatype(md), fp,
-        partition_by=["section", "datatype"], force=True,
-    )
-    res = out.write_stage(
-        "triples_spo", spo_table(mt, num_partitions=args.partitions), fp,
-        sort_cols=["s", "p", "o"], force=True,
-    )
-    out.write_stage(
-        "triples_ops",
-        ops_table(out.read("triples_spo"), num_partitions=args.partitions),
-        fp, sort_cols=["o", "p", "s"], force=True,
+    report = publish_merged(
+        Catalog(spark, args.output), md, mt, fp, num_partitions=args.partitions
     )
     print(f"{'diff' if args.diff else 'cat'} -> {args.output}: "
-          f"{res.rows:,} triples")
+          f"{report.n_triples:,} triples")
     spark.stop()
 
 

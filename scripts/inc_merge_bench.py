@@ -3,15 +3,14 @@
 Compares, on the same expanded corpus (default sf0.1 x expand, same
 shape as bench.py):
 
-  rebuild      extract + dictionary + encode over base ∪ delta from
-               scratch (what a naive pipeline does per batch)
-  kcat_general merge_datasets([base, delta]) — int-remap merge, term
-               re-rank ∝ |terms(base ∪ delta)|
-  kcat_incr    merge_incremental(base, delta) — breakpoint remap,
-               shuffle ∝ |delta|
+  full_rebuild     extract + dictionary + encode over base ∪ delta from
+                   scratch (what a naive pipeline does per batch)
+  kcat_incremental merge_incremental(base, delta) — the KCat int-remap
+                   merge, term re-rank ∝ |terms(base ∪ delta)| (the
+                   delta's own build is timed as delta_build)
 
 Reports wall seconds per path and the delta fraction. The base build
-itself is excluded from all three timings (it exists already in the
+itself is excluded from both timings (it exists already in the
 compaction scenario — CatTreeImpl.doGenerationSync).
 
 Usage: python scripts/inc_merge_bench.py [expand] [delta_pct]
@@ -35,10 +34,7 @@ from qendpoint_spark.encoding import encode_triples  # noqa: E402
 from qendpoint_spark.extraction import (  # noqa: E402
     extract_triples_from_documents,
 )
-from qendpoint_spark.merge import (  # noqa: E402
-    merge_datasets,
-    merge_incremental,
-)
+from qendpoint_spark.merge import merge_incremental  # noqa: E402
 from qendpoint_spark.session import get_spark  # noqa: E402
 
 EXPAND = int(sys.argv[1]) if len(sys.argv) > 1 else 40
@@ -92,17 +88,11 @@ def main() -> None:
     timings["kcat_incremental"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    mdg, mtg, _ = merge_datasets([(base_enc, base_dict), (d_enc, d_dict)])
-    n_gen = mtg.count()
-    mdg.count()
-    timings["kcat_general"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
     _, _, full_enc = build(docs)
     n_full = full_enc.count()
     timings["full_rebuild"] = round(time.time() - t0, 2)
 
-    assert n_inc == n_gen == n_full, (n_inc, n_gen, n_full)
+    assert n_inc == n_full, (n_inc, n_full)
     out = {
         "expand": EXPAND, "delta_pct": DELTA_PCT, "cpus": CPUS,
         "base_triples": n_base, "merged_triples": n_full,

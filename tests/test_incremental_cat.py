@@ -1,7 +1,6 @@
-"""merge_incremental (delta-proportional KCat) — output parity with
-merge_datasets / from-scratch rebuilds across migration, overlap and
-namespace-collision shapes. The delta-proportional SHUFFLE property is
-asserted separately in tests/test_plans.py."""
+"""merge_incremental (two-input KCat id-remap merge) — output parity
+with a from-scratch build_dictionary + encode_triples over A ∪ B,
+across migration, overlap and namespace-collision shapes."""
 
 from __future__ import annotations
 
@@ -9,25 +8,33 @@ import random
 
 from qendpoint_spark.dictionary import build_dictionary
 from qendpoint_spark.encoding import encode_triples
-from qendpoint_spark.merge import merge_datasets, merge_incremental
+from qendpoint_spark.merge import merge_incremental
+
+_TRIPLES = "s string, p string, o string"
+_QUADS = "s string, p string, o string, g string"
 
 
-def _mk(spark, rows):
-    df = spark.createDataFrame(rows, "s string, p string, o string").distinct()
-    d = build_dictionary(df).localCheckpoint(eager=True)
+def _mk(spark, rows, schema=_TRIPLES):
+    df = spark.createDataFrame(rows, schema).distinct()
+    d = build_dictionary(df)
     return encode_triples(df, d).localCheckpoint(eager=True), d
 
 
-def _check(spark, a_rows, b_rows, label):
-    a, b = _mk(spark, a_rows), _mk(spark, b_rows)
-    md_i, mt_i = merge_incremental(a, b)
-    md_g, mt_g, _ = merge_datasets([a, b])
-    di = {tuple(r) for r in md_i.select("term", "section", "sec_rank", "id").collect()}
-    dg = {tuple(r) for r in md_g.select("term", "section", "sec_rank", "id").collect()}
-    assert di == dg, f"{label}: dict mismatch {sorted(di ^ dg)[:8]}"
-    ti = sorted(tuple(r) for r in mt_i.collect())
-    tg = sorted(tuple(r) for r in mt_g.collect())
-    assert ti == tg, f"{label}: triples mismatch {set(ti) ^ set(tg)}"
+def _check(spark, a_rows, b_rows, label, schema=_TRIPLES):
+    """merge_incremental(A, B) assigns exactly the ids a from-scratch
+    build over A ∪ B does, and remaps the triples into that space."""
+    md, mt = merge_incremental(_mk(spark, a_rows, schema), _mk(spark, b_rows, schema))
+    union = spark.createDataFrame(a_rows + b_rows, schema).distinct()
+    rd = build_dictionary(union)
+    rt = encode_triples(union, rd)
+    cols = ["term", "section", "sec_rank", "id"]
+    dm = {tuple(r) for r in md.select(*cols).collect()}
+    dr = {tuple(r) for r in rd.select(*cols).collect()}
+    assert dm == dr, f"{label}: dict mismatch {sorted(dm ^ dr)[:8]}"
+    keys = rt.columns
+    tm = sorted(tuple(r) for r in mt.select(*keys).collect())
+    tr = sorted(tuple(r) for r in rt.collect())
+    assert tm == tr, f"{label}: triples mismatch {set(tm) ^ set(tr)}"
 
 
 def test_migrations_and_overlap(spark):
@@ -74,27 +81,11 @@ def test_randomized_small_vocab(spark):
 
 
 def test_quads_incremental(spark):
-    def mkq(rows):
-        df = spark.createDataFrame(
-            rows, "s string, p string, o string, g string"
-        ).distinct()
-        d = build_dictionary(df).localCheckpoint(eager=True)
-        return encode_triples(df, d).localCheckpoint(eager=True), d
-
-    a = mkq([("a", "p", "b", "g1"), ("b", "p", "c", "g2")])
-    b = mkq([("c", "p", "a", "g1"), ("a", "p", "b", "g3")])
-    md_i, mt_i = merge_incremental(a, b)
-    md_g, mt_g, _ = merge_datasets([a, b])
-    assert {tuple(r) for r in md_i.collect()} == {tuple(r) for r in md_g.collect()}
-    assert sorted(map(tuple, mt_i.collect())) == sorted(map(tuple, mt_g.collect()))
-
-
-def test_delta_too_large_raises(spark):
-    a = _mk(spark, [("a", "p", "b")])
-    b = _mk(spark, [("c", "p", "d"), ("e", "p", "f")])
-    try:
-        merge_incremental(a, b, max_delta_terms=2)
-    except ValueError as e:
-        assert "max_delta_terms" in str(e)
-    else:
-        raise AssertionError("expected ValueError for oversized delta")
+    # g2 is a graph of A only, g3 of B only; (a p b) sits in two graphs
+    _check(
+        spark,
+        [("a", "p", "b", "g1"), ("b", "p", "c", "g2")],
+        [("c", "p", "a", "g1"), ("a", "p", "b", "g3")],
+        "quads",
+        schema=_QUADS,
+    )

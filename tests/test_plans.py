@@ -184,78 +184,6 @@ def test_dictionary_agg_is_map_side_combined(spark, documents):
     assert "partial_max" in plan, plan[:2000]
 
 
-def _shuffle_write_bytes(spark) -> int:
-    """Total shuffle WRITE bytes across all completed stages, from the
-    app status store (the per-stage numbers the UI shows)."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    store = sc._jsc.sc().statusStore()
-    stages = store.stageList(
-        jvm.java.util.ArrayList(), False, False,
-        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-    )
-    return sum(stages.apply(i).shuffleWriteBytes() for i in range(stages.size()))
-
-
-def test_incremental_merge_shuffle_scales_with_delta(spark):
-    """The KCat incremental path's defining property: merging the same
-    small delta into a 4x-larger base must NOT shuffle ~4x more bytes —
-    base triples and base terms are rewritten map-side (breakpoint step
-    functions), so shuffle scales with |delta| + O(partitions), not
-    |base|. Also: the incremental path must shuffle far less than the
-    general term-re-ranking merge on the same inputs."""
-    from qendpoint_spark.merge import merge_datasets, merge_incremental
-
-    def corpus(n):
-        df = (
-            spark.range(n)
-            .select(
-                F.concat(F.lit("http://example.org/e/"),
-                         (F.col("id") % (n // 3)).cast("string")).alias("s"),
-                F.concat(F.lit("http://example.org/p/"),
-                         (F.col("id") % 7).cast("string")).alias("p"),
-                F.concat(F.lit("http://example.org/e/"),
-                         ((F.col("id") * 31 + 7) % (n // 2)).cast("string")).alias("o"),
-            )
-            .distinct()
-        )
-        d = build_dictionary(df, num_partitions=8).localCheckpoint(eager=True)
-        return encode_triples(df, d).localCheckpoint(eager=True), d
-
-    def delta():
-        rows = [
-            (f"http://example.org/e/{i}", "http://example.org/p/new",
-             f"http://example.org/new/{i}")
-            for i in range(40)
-        ]
-        df = spark.createDataFrame(rows, "s string, p string, o string")
-        d = build_dictionary(df, num_partitions=2).localCheckpoint(eager=True)
-        return encode_triples(df, d).localCheckpoint(eager=True), d
-
-    base1, base4, b = corpus(30_000), corpus(120_000), delta()
-
-    def run_inc(base):
-        before = _shuffle_write_bytes(spark)
-        md, mt = merge_incremental(base, b)
-        n_terms, n_tri = md.count(), mt.count()
-        assert n_tri >= base[0].count()
-        return _shuffle_write_bytes(spark) - before
-
-    s1 = run_inc(base1)
-    s4 = run_inc(base4)
-    # delta-proportional: 4x base -> far less than 4x shuffle (allow
-    # 2x headroom for partition-count-proportional agg constants)
-    assert s4 < 2 * s1 + 1_000_000, (s1, s4)
-
-    before = _shuffle_write_bytes(spark)
-    md_g, mt_g, _ = merge_datasets([base4, b])
-    md_g.count(), mt_g.count()
-    s_general = _shuffle_write_bytes(spark) - before
-    # the general merge re-ranks the full term union (range shuffle of
-    # all base terms) — the incremental path must undercut it decisively
-    assert s4 < s_general / 2, (s4, s_general)
-
-
 def test_alternate_order_pushdown(spark, tmp_path, documents):
     """SOP/POS/OSP written as range-sorted parquet: composite masks
     route to them and push BOTH bound filters into the scan; ReadSchema

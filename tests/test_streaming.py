@@ -56,7 +56,7 @@ def test_sessionize_stream(spark):
 
 def test_stream_compact_incremental_merge(spark, tmp_path):
     """Streamed generations compact into the PUBLISHED dataset through
-    the delta-proportional merge: publish(drop1) + stream(drop2) +
+    the KCat merge: publish(drop1) + stream(drop2) +
     incremental_update_triples(staging) == publish(drop1 ∪ drop2) —
     the CatTree generation/cat structure end-to-end over streaming."""
     from qendpoint_spark.catalog import Catalog
