@@ -30,6 +30,24 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _storage_options(columns: list[str], sort_cols: list[str] | None) -> dict[str, str]:
+    """Parquet writer options for one committed table — the at-rest
+    analog of HDT's compact layouts. Writer v2 gives DELTA_BYTE_ARRAY
+    (front coding, like the PFC dictionary sections) where a string
+    column's dictionary does not pay, and DELTA_BINARY_PACKED for
+    integer columns written without a dictionary: the bit-packed
+    SeqY/SeqZ analog. A sorted table turns the dictionary off on its
+    leading sort key and on `s`, the columns that ascend within long
+    runs (SPO s; OPS o, s; PSO p, s); the other ID columns keep it,
+    where it measured smaller."""
+    opts = {"parquet.writer.version": "v2"}
+    if sort_cols:
+        for c in (sort_cols[0], "s"):
+            if c in columns:
+                opts[f"parquet.enable.dictionary#{c}"] = "false"
+    return opts
+
+
 @dataclass
 class StageResult:
     name: str
@@ -97,10 +115,15 @@ class Catalog:
         tmp = path + ".__tmp__"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        opts = _storage_options(df.columns, sort_cols)
+
+        def write(partitioned: bool) -> None:
+            writer = df.write.mode("overwrite").options(**opts)
+            if partitioned:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(tmp)
+
+        write(bool(partition_by))
         if partition_by and not any(
             f.endswith(".parquet")
             for _r, _d, fs in os.walk(tmp) for f in fs
@@ -109,10 +132,11 @@ class Catalog:
             # a schema), leaving the table unreadable; rewrite the
             # empty table unpartitioned so the schema is preserved
             # (the reference's empty1.nt case)
-            df.write.mode("overwrite").parquet(tmp)
-        # per-partition lineage rows (FIXTURES.md §8) from parquet footer
-        # metadata — no extra Spark job over the data (footers only; an
-        # Iceberg catalog would expose the same via its manifest files).
+            write(False)
+        # per-partition lineage rows (FIXTURES.md §8) and per-column
+        # storage (bytes + encodings) from parquet footer metadata — no
+        # extra Spark job over the data (footers only; an Iceberg
+        # catalog would expose the same via its manifest files).
         # Recursive walk covers partitionBy layouts (section=SH/...).
         files = []
         for root, _dirs, fnames in os.walk(tmp):
@@ -120,6 +144,7 @@ class Catalog:
                 if fname.endswith(".parquet"):
                     files.append(os.path.join(root, fname))
         per_part = []
+        columns: dict[str, dict] = {}
         for i, fpath in enumerate(sorted(files)):
             md = pq.read_metadata(fpath)
             per_part.append(
@@ -129,6 +154,15 @@ class Catalog:
                     "path": os.path.relpath(fpath, tmp),
                 }
             )
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for c in range(rg.num_columns):
+                    cc = rg.column(c)
+                    col = columns.setdefault(
+                        cc.path_in_schema, {"compressed_bytes": 0, "encodings": []}
+                    )
+                    col["compressed_bytes"] += cc.total_compressed_size
+                    col["encodings"] = sorted(set(col["encodings"]) | set(cc.encodings))
         rows = sum(p["row_count"] for p in per_part)
         if os.path.exists(path):
             shutil.rmtree(path)
@@ -142,6 +176,7 @@ class Catalog:
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "partitions": per_part,
             "sort_cols": sort_cols or [],
+            "columns": columns,
         }
         tmp_l = self._lineage_path(stage) + ".tmp"
         with open(tmp_l, "w") as f:

@@ -4,9 +4,13 @@ HDT's physical structures map to differently-sorted columnar tables
 (SURVEY.md §1.6):
 
 - BitmapTriples SPO layout (WriteBitmapTriples.load,
-  WriteBitmapTriples.java:202-309)  -> SPO-sorted table; Parquet
-  RLE/delta encoding on the sorted long columns plays the role of the
-  bit-packed SeqY/SeqZ sequences.
+  WriteBitmapTriples.java:202-309)  -> SPO-sorted table. At rest
+  (Parquet writer v2, set in Catalog.write_stage) the ascending sort
+  keys — SPO `s`, OPS `o` and `s`, PSO `p` and `s` — are
+  DELTA_BINARY_PACKED with no dictionary: bit-packed deltas in the
+  role of the bit-packed SeqY/SeqZ sequences. The other ID columns
+  (`p`, SPO `o`) keep the dictionary with RLE/bit-packed indexes,
+  which measured smaller there.
 - FOQ object index / OPS access (BitmapTriples.
   createIndexObjectMemoryEfficient, BitmapTriples.java:730-917)
   -> the same rows sorted (o,p,s).

@@ -277,22 +277,29 @@ def q_kg_psfc_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_datatype_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MSD layout roundtrip: the dictionary is WRITTEN partitioned by
-    (section, datatype) — the reference's typed object subsections
-    (MultipleSectionDictionary.java:51-60) as partition directories —
-    and read back, so the gate checks the physical layout, not just
-    the datatype computation. Datatype-scoped reads are file-pruned
-    (PartitionFilters assertion in tests/test_plans.py)."""
+    """MSD layout roundtrip: the dictionary is COMMITTED the way the
+    pipeline publishes it — Catalog.write_stage partitioned by
+    (section, datatype), the reference's typed object subsections
+    (MultipleSectionDictionary.java:51-60) as partition directories,
+    in the catalog's at-rest encodings — and read back, so the gate
+    checks the published format, not just the datatype computation.
+    Datatype-scoped reads are file-pruned (PartitionFilters assertion
+    in tests/test_plans.py)."""
     import hashlib
     import os
+
+    from qendpoint_spark.catalog import Catalog
 
     msd = with_datatype(_dict(spark, sf_dir))
     scratch = os.environ.get("SPARK_GRAFT_SCRATCH") or (
         "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     )
-    path = f"{scratch}/qs_msd_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    msd.write.mode("overwrite").partitionBy("section", "datatype").parquet(path)
-    return spark.read.parquet(path).select(
+    fp = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    cat = Catalog(spark, f"{scratch}/qs_msd_{fp}")
+    cat.write_stage(
+        "dict_terms", msd, fp, force=True, partition_by=["section", "datatype"]
+    )
+    return cat.read("dict_terms").select(
         "term", "section", "id", "kind", "datatype"
     )
 

@@ -256,6 +256,21 @@ SPARQL_QUERIES = {
         + "SELECT ?doc ?lang WHERE { ?doc p:lang ?lang . "
         'VALUES (?lang) { ("en"@en) (UNDEF) } }'
     ),
+    # VALUES first, then OPTIONAL (spec 18.2.2.6): OPTIONAL extends
+    # the inline rows, so the IRI with no lang edge keeps ?l unbound
+    "sparql_values_optional": _q(
+        _P
+        + "SELECT ?doc ?l WHERE { VALUES ?doc { <http://example.org/doc/1> "
+        "<http://example.org/doc/2> <http://example.org/doc/none> } "
+        "OPTIONAL { ?doc p:lang ?l } }"
+    ),
+    # a VALUES variable that BIND reads, already bound by the pattern
+    # before it: the deferred VALUES join only filters rows
+    "sparql_values_bind_shared": _q(
+        _P
+        + "SELECT ?doc ?lang ?tag WHERE { ?doc p:lang ?lang . "
+        'VALUES ?lang { "en"@en "de"@de } BIND(STR(?lang) AS ?tag) }'
+    ),
     # ORDER BY over a typed numeric literal: value order (9 < 10),
     # with a lexical tiebreak so LIMIT is deterministic
     "sparql_order_numeric": _q(
@@ -515,6 +530,19 @@ SELECT s AS doc, o AS lang FROM triples
 WHERE p = '{_LANG}' AND o = '"en"@en'
 UNION ALL
 SELECT s AS doc, o AS lang FROM triples WHERE p = '{_LANG}'
+""",
+    "sparql_values_optional": _PRE
+    + f"""
+SELECT v.doc AS doc, t.o AS l
+FROM (VALUES ('http://example.org/doc/1'), ('http://example.org/doc/2'),
+             ('http://example.org/doc/none')) v(doc)
+LEFT JOIN triples t ON t.s = v.doc AND t.p = '{_LANG}'
+""",
+    "sparql_values_bind_shared": _PRE
+    + f"""
+SELECT s AS doc, o AS lang, regexp_extract(o, '^"([^"]*)"', 1) AS tag
+FROM triples
+WHERE p = '{_LANG}' AND o IN ('"en"@en', '"de"@de')
 """,
     "sparql_order_numeric": _PRE
     + f"""

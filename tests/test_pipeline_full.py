@@ -131,3 +131,65 @@ def test_incremental_update_releases_cache_on_failure(spark, documents, tmp_path
             break
         time.sleep(0.5)
     assert not leaked
+
+
+def test_published_encodings(spark, documents, tmp_path):
+    """The published ID tables use the compact Parquet layouts (writer
+    v2): the ascending sort keys are DELTA_BINARY_PACKED with no
+    dictionary page, `p` keeps its dictionary, dictionary terms are
+    front coded (DELTA_BYTE_ARRAY), the lineage records the same, and
+    pyarrow and DuckDB read back Spark's rows."""
+    from collections import Counter
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    run_pipeline(spark, cat, source_df=documents, source_kind="documents",
+                 source_fingerprint="encodings", num_partitions=2)
+
+    def files(table):
+        return sorted(
+            str(f) for f in (tmp_path / "wh" / table).rglob("*.parquet")
+        )
+
+    def chunks(table, col):
+        out = []
+        for f in files(table):
+            md = pq.read_metadata(f)
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                out += [rg.column(i) for i in range(rg.num_columns)
+                        if rg.column(i).path_in_schema == col]
+        assert out, (table, col)
+        return out
+
+    for table, col in [("triples_spo", "s"), ("triples_ops", "o"),
+                       ("triples_ops", "s")]:
+        for cc in chunks(table, col):
+            assert "DELTA_BINARY_PACKED" in cc.encodings, (table, col, cc.encodings)
+            assert not cc.has_dictionary_page, (table, col)
+        assert "DELTA_BINARY_PACKED" in (
+            cat.lineage(table)["columns"][col]["encodings"]
+        )
+    for table in ("triples_spo", "triples_ops"):
+        assert all(cc.has_dictionary_page for cc in chunks(table, "p")), table
+    for cc in chunks("dict_terms", "term"):
+        assert "DELTA_BYTE_ARRAY" in cc.encodings, cc.encodings
+
+    con = duckdb.connect()
+    for table in ("triples_spo", "triples_ops", "dict_terms"):
+        cols = pq.read_schema(files(table)[0]).names
+        spark_rows = Counter(tuple(r) for r in cat.read(table).select(*cols).collect())
+        arrow_rows = Counter(
+            tuple(r.values())
+            for f in files(table)
+            for r in pq.read_table(f, columns=cols).to_pylist()
+        )
+        duck_rows = Counter(con.execute(
+            f"SELECT {', '.join(cols)} FROM read_parquet(?, hive_partitioning=false)",
+            [files(table)],
+        ).fetchall())
+        assert sum(spark_rows.values()) > 0, table
+        assert arrow_rows == spark_rows, table
+        assert duck_rows == spark_rows, table
