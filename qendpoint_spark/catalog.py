@@ -25,6 +25,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +47,30 @@ def _storage_options(columns: list[str], sort_cols: list[str] | None) -> dict[st
             if c in columns:
                 opts[f"parquet.enable.dictionary#{c}"] = "false"
     return opts
+
+
+def _partition_values(rel_path: str) -> dict[str, str | None]:
+    """Partition columns of a data file from its `key=value/...` path
+    (Spark escapes values as %XX and writes NULL as the Hive default)."""
+    values: dict[str, str | None] = {}
+    for seg in rel_path.split(os.sep)[:-1]:
+        key, _, val = seg.partition("=")
+        values[key] = None if val == "__HIVE_DEFAULT_PARTITION__" else unquote(val)
+    return values
+
+
+def _block_entry(rel_path: str, index: int, rg) -> dict:
+    """One block-directory entry: a row group of a `term`-keyed table,
+    with its partition values and its footer's term min/max (None when
+    the writer kept no statistics for it)."""
+    lo = hi = None
+    for c in range(rg.num_columns):
+        cc = rg.column(c)
+        st = cc.statistics
+        if cc.path_in_schema == "term" and st is not None and st.has_min_max:
+            lo, hi = st.min, st.max
+    return {"path": rel_path, "row_group": index, "rows": rg.num_rows,
+            **_partition_values(rel_path), "min": lo, "max": hi}
 
 
 @dataclass
@@ -143,16 +168,20 @@ class Catalog:
             for fname in fnames:
                 if fname.endswith(".parquet"):
                     files.append(os.path.join(root, fname))
+        # A table keyed by `term` (the dictionary) also records its
+        # block directory from the same footers: per row group, the
+        # partition values, the term min/max and the row count — the
+        # PFC block directory (PFCDictionarySection.java:96-150) that
+        # lets SparqlEngine.from_catalog resolve a term by reading one
+        # row group instead of running a Spark job.
+        blocks = [] if "term" in df.columns else None
         per_part = []
         columns: dict[str, dict] = {}
         for i, fpath in enumerate(sorted(files)):
             md = pq.read_metadata(fpath)
+            rel = os.path.relpath(fpath, tmp)
             per_part.append(
-                {
-                    "partition_id": i,
-                    "row_count": md.num_rows,
-                    "path": os.path.relpath(fpath, tmp),
-                }
+                {"partition_id": i, "row_count": md.num_rows, "path": rel}
             )
             for g in range(md.num_row_groups):
                 rg = md.row_group(g)
@@ -163,6 +192,8 @@ class Catalog:
                     )
                     col["compressed_bytes"] += cc.total_compressed_size
                     col["encodings"] = sorted(set(col["encodings"]) | set(cc.encodings))
+                if blocks is not None:
+                    blocks.append(_block_entry(rel, g, rg))
         rows = sum(p["row_count"] for p in per_part)
         if os.path.exists(path):
             shutil.rmtree(path)
@@ -178,6 +209,8 @@ class Catalog:
             "sort_cols": sort_cols or [],
             "columns": columns,
         }
+        if blocks is not None:
+            record["blocks"] = blocks
         tmp_l = self._lineage_path(stage) + ".tmp"
         with open(tmp_l, "w") as f:
             json.dump(record, f)

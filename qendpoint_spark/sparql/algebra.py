@@ -30,9 +30,14 @@ strings (predicate IDs are their own namespace).
 
 from __future__ import annotations
 
+import os
+from bisect import bisect_right
 from dataclasses import dataclass, field
-from itertools import combinations
+from itertools import accumulate, combinations
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -237,6 +242,80 @@ def _distribute_alts(node) -> list:
     return [node]
 
 
+#: dictionary sections a constant is looked up in, per ID space: SH
+#: ids are valid subject and object ids (same id, same term)
+_ROLE_SECTIONS = {"s": ("SH", "S"), "o": ("SH", "O"), "p": ("P",), "g": ("G",)}
+
+
+class BlockDirectory:
+    """Term -> id lookups over a committed dict_terms table without a
+    Spark job — HDT's PFC dictionary section, which keeps every 16th
+    term in full, binary-searches that directory and scans one block
+    (PFCDictionarySection.java:96-150). Here the blocks are the
+    table's Parquet row groups and the directory is the list the
+    catalog recorded at commit (`blocks` in the dict_terms lineage):
+    per row group its section, term min/max and row count.
+
+    A lookup binary-searches the role's sections for the row groups
+    whose [min, max] holds the term, reads only their `term` and `id`
+    columns with pyarrow and matches exactly. Row groups of one section
+    may overlap (each literal datatype is its own file), so the search
+    walks back from the last block starting at or before the term while
+    the running max of the earlier blocks still reaches it. A row group
+    without term statistics is a candidate for every term. `lookups`
+    and `row_groups_read` count the terms resolved and the row groups
+    read for them."""
+
+    def __init__(self, root: str, blocks: list[dict]):
+        self.root = root
+        self.blocks = blocks
+        self.lookups = 0
+        self.row_groups_read = 0
+        self.n_shared = sum(b["rows"] for b in blocks if b["section"] == "SH")
+        self._sections: dict[str, tuple] = {}
+        for sec in {b["section"] for b in blocks}:
+            ranged = sorted(
+                (b for b in blocks if b["section"] == sec and b["min"] is not None),
+                key=lambda b: b["min"],
+            )
+            self._sections[sec] = (
+                [b["min"] for b in ranged],
+                list(accumulate((b["max"] for b in ranged), max)),
+                ranged,
+                [b for b in blocks if b["section"] == sec and b["min"] is None],
+            )
+
+    def _candidates(self, role: str, term: str):
+        for sec in _ROLE_SECTIONS[role]:
+            if sec not in self._sections:
+                continue
+            mins, reach, ranged, unranged = self._sections[sec]
+            i = bisect_right(mins, term)
+            while i > 0 and reach[i - 1] >= term:
+                i -= 1
+                if ranged[i]["max"] >= term:
+                    yield ranged[i]
+            yield from unranged
+
+    def lookup(self, role: str, terms: list[str]) -> dict[str, int]:
+        """{term: id} for the given terms found in the role's sections."""
+        wanted: dict[tuple[str, int], list[str]] = {}
+        for term in terms:
+            for b in self._candidates(role, term):
+                wanted.setdefault((b["path"], b["row_group"]), []).append(term)
+        self.lookups += len(terms)
+        self.row_groups_read += len(wanted)
+        found: dict[str, int] = {}
+        for (path, rg), ts in wanted.items():
+            with pq.ParquetFile(os.path.join(self.root, path)) as f:
+                block = f.read_row_group(rg, columns=["term", "id"])
+            hit = block.filter(
+                pc.is_in(block["term"], value_set=pa.array(ts, pa.string()))
+            )
+            found.update(zip(hit["term"].to_pylist(), hit["id"].to_pylist()))
+        return found
+
+
 class SparqlEngine:
     """Execute SPARQL strings against one encoded dataset.
 
@@ -256,6 +335,7 @@ class SparqlEngine:
         pso: DataFrame | None = None,
         stats: PatternStats | None = None,
         quads: DataFrame | None = None,
+        directory: BlockDirectory | None = None,
     ):
         if dict_terms is None:
             raise ValueError("SparqlEngine requires dict_terms")
@@ -272,7 +352,10 @@ class SparqlEngine:
         self.stats = stats
         self.quads = quads  # encoded (s,p,o,g) for GRAPH patterns
         self.dict_terms = dict_terms
-        self._n_shared: int | None = None
+        # the committed dictionary's block directory (from_catalog):
+        # constants and n_shared resolve without a Spark job
+        self.directory = directory
+        self._n_shared = None if directory is None else directory.n_shared
         self._maps: dict[str, DataFrame] = {}
         self._consts: dict[tuple[str, str], int] = {}
 
@@ -282,9 +365,16 @@ class SparqlEngine:
         analog of pointing the reference's `hdtsparql` CLI at an .hdt
         file (qendpoint-cli/bin/hdtsparql.sh). Uses every access path
         the pipeline materialized: SPO/OPS always, PSO and the
-        predicate-stats table when present."""
-        import os
+        predicate-stats table when present.
 
+        Constants resolve through the block directory that the catalog
+        recorded in the dict_terms lineage (`BlockDirectory`): a binary
+        search over per-row-group term ranges, then a pyarrow read of
+        the candidate row groups' term and id columns. `n_shared` is
+        the sum of the directory's SH rows. So compiling a query runs
+        no Spark job for its constants. An engine built from in-memory
+        DataFrames, or over a dict_terms lineage committed without a
+        directory, resolves them with one `isin` collect per role."""
         pso = None
         if os.path.exists(catalog.table_path("triples_pso")):
             pso = catalog.read("triples_pso")
@@ -294,6 +384,7 @@ class SparqlEngine:
         quads = None
         if os.path.exists(catalog.table_path("quads_spog")):
             quads = catalog.read("quads_spog")
+        blocks = catalog.lineage("dict_terms").get("blocks")
         return cls(
             dict_terms=catalog.read("dict_terms"),
             spo=catalog.read("triples_spo"),
@@ -301,6 +392,9 @@ class SparqlEngine:
             pso=pso,
             stats=stats,
             quads=quads,
+            directory=None if blocks is None else BlockDirectory(
+                catalog.table_path("dict_terms"), blocks
+            ),
         )
 
     # -- dictionary access ----------------------------------------------
@@ -342,21 +436,24 @@ class SparqlEngine:
         return self._maps[role]
 
     def _prefetch_consts(self, pairs: set[tuple[str, str]]) -> None:
-        """Resolve all (role, lexical) constants of a query in at most
-        one bounded collect per role — the engine-side analog of a
-        SPARQL engine looking up the query's constant terms in the
-        dictionary before evaluation."""
+        """Resolve all (role, lexical) constants of a query before
+        evaluation, as a SPARQL engine looks the query's constant terms
+        up in the dictionary: through the block directory when the
+        engine has one, else in one bounded collect per role."""
         by_role: dict[str, list[str]] = {}
         for role, lex in pairs:
             if (role, lex) not in self._consts:
                 by_role.setdefault("s" if role == "so" else role, []).append(lex)
         for role, terms in by_role.items():
-            rows = (
-                self._role_map(role)
-                .filter(F.col("term").isin(terms))
-                .collect()
-            )
-            found = {r["term"]: int(r["id"]) for r in rows}
+            if self.directory is not None:
+                found = self.directory.lookup(role, terms)
+            else:
+                rows = (
+                    self._role_map(role)
+                    .filter(F.col("term").isin(terms))
+                    .collect()
+                )
+                found = {r["term"]: int(r["id"]) for r in rows}
             for lex in terms:
                 # -1 is outside every ID space: an absent term makes
                 # its pattern match nothing, exactly like the reference

@@ -94,6 +94,42 @@ def _q(text: str):
     return run
 
 
+def _catalog_engine(spark: SparkSession, sf_dir: str):
+    """Engine over a warehouse that run_pipeline published from the
+    documents corpus: constants resolve through the dict_terms block
+    directory, not a Spark lookup."""
+    key = (id(spark), sf_dir, "catalog")
+    if key not in _ENGINES:
+        import hashlib
+        import os
+
+        from qendpoint_spark.catalog import Catalog
+        from qendpoint_spark.entry_queries import _docs
+        from qendpoint_spark.pipeline import run_pipeline
+        from qendpoint_spark.sparql import SparqlEngine
+
+        scratch = os.environ.get("SPARK_GRAFT_SCRATCH") or (
+            "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+        )
+        fp = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        catalog = Catalog(spark, f"{scratch}/qs_sparql_wh_{fp}")
+        run_pipeline(
+            spark, catalog, source_df=_docs(spark, sf_dir),
+            source_kind="documents", source_fingerprint=fp, force=True,
+        )
+        _ENGINES[key] = SparqlEngine.from_catalog(catalog)
+        if len(_ENGINES) > 8:
+            _ENGINES.pop(next(iter(_ENGINES)))
+    return _ENGINES[key]
+
+
+def _qc(text: str):
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _catalog_engine(spark, sf_dir).query(text)
+
+    return run
+
+
 _UPDATE_TEXT = (
     _P
     + "DELETE { ?doc p:flag ?f } WHERE { ?doc p:flag ?f } ;\n"
@@ -338,6 +374,18 @@ SPARQL_QUERIES = {
     "sparql_path_undirected_closure": _q(
         _P
         + "SELECT ?a ?b WHERE { ?a (p:provenance|^p:provenance)+ ?b }"
+    ),
+    # constants resolved through a published warehouse's dictionary
+    # block directory: an SH entity as object and as subject, a typed
+    # and a lang literal, and an unknown IRI inside OPTIONAL (absent ->
+    # the optional part matches nothing, ?x stays unbound)
+    "sparql_catalog_consts": _qc(
+        _P
+        + "SELECT ?doc ?l ?x WHERE { ?doc p:mentions <http://example.org/ent/scan> . "
+        "<http://example.org/ent/scan> p:label ?l . "
+        '?doc p:lang "en"@en ; p:flag true '
+        "OPTIONAL { ?doc p:mentions <http://example.org/ent/__absent__> ; "
+        "p:source ?x } }"
     ),
 }
 
@@ -619,5 +667,19 @@ closure AS (
   SELECT c.src, e.dst FROM closure c JOIN edges e ON c.dst = e.src
 )
 SELECT src AS a, dst AS b FROM closure
+""",
+    "sparql_catalog_consts": _PRE
+    + f"""
+SELECT m.s AS doc, l.o AS l, opt.x AS x
+FROM triples m
+JOIN triples l ON l.s = m.o AND l.p = '{_LABEL}'
+JOIN triples g ON g.s = m.s AND g.p = '{_LANG}' AND g.o = '"en"@en'
+JOIN triples f ON f.s = m.s AND f.p = '{_FLAG}' AND f.o = '{_TRUE}'
+LEFT JOIN (
+  SELECT a.s, b.o AS x FROM triples a JOIN triples b
+    ON b.s = a.s AND b.p = '{_SOURCE}'
+  WHERE a.p = '{_MENTIONS}' AND a.o = 'http://example.org/ent/__absent__'
+) opt ON opt.s = m.s
+WHERE m.p = '{_MENTIONS}' AND m.o = 'http://example.org/ent/scan'
 """,
 }

@@ -312,6 +312,135 @@ def test_engine_from_catalog(spark, tmp_path):
     assert got == exp
 
 
+_P = "PREFIX p: <http://example.org/prop/>\n"
+_XSD_BOOL = "http://www.w3.org/2001/XMLSchema#boolean"
+
+
+@pytest.fixture(scope="module")
+def published_docs(spark, documents, tmp_path_factory):
+    """(catalog, docs): a documents corpus published by run_pipeline."""
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.pipeline import run_pipeline
+
+    docs = documents.filter(F.col("doc_id") < 80)
+    catalog = Catalog(spark, str(tmp_path_factory.mktemp("consts") / "wh"))
+    run_pipeline(
+        spark, catalog, source_df=docs, source_kind="documents",
+        source_fingerprint="sparql-consts-test", num_partitions=4,
+    )
+    return catalog, docs
+
+
+def _shared_entity(catalog) -> str:
+    """An entity IRI in the SH section: mentioned (object) and labelled
+    (subject)."""
+    return (
+        catalog.read("dict_terms")
+        .filter((F.col("section") == "SH") & F.col("term").startswith("http"))
+        .orderBy("term").first()["term"]
+    )
+
+
+def test_catalog_engine_constants_match_in_memory(spark, published_docs):
+    """The block-directory lookup of a from_catalog engine and the
+    Spark lookup of an in-memory engine give the same answers for an
+    SH term in both roles, typed and lang literals, predicates, and
+    unknown terms (absent -> the pattern matches nothing)."""
+    from qendpoint_spark.extraction import extract_triples_from_documents
+
+    catalog, docs = published_docs
+    cat_eng = SparqlEngine.from_catalog(catalog)
+    assert cat_eng.n_shared == catalog.read("dict_terms").filter(
+        F.col("section") == "SH"
+    ).count()
+    tri = extract_triples_from_documents(docs)
+    d = build_dictionary(tri).cache()
+    mem_eng = SparqlEngine(encode_triples(tri, d).cache(), d)
+    ent = _shared_entity(catalog)
+    queries = {
+        "sh_both_roles": f"SELECT ?doc ?l WHERE {{ ?doc p:mentions <{ent}> . "
+                         f"<{ent}> p:label ?l }}",
+        "typed_literal": "SELECT ?doc WHERE { ?doc p:flag true }",
+        "lang_literal": 'SELECT ?doc WHERE { ?doc p:lang "en"@en }',
+        "optional_unknown": 'SELECT ?doc ?x WHERE { ?doc p:lang "en"@en '
+                               "OPTIONAL { ?doc p:mentions <http://example.org/ent/__absent__> . "
+                               "?doc p:source ?x } }",
+        "unknown_subject": "SELECT ?o WHERE { <http://example.org/doc/__absent__> ?p ?o }",
+        "unknown_predicate": "SELECT ?s WHERE { ?s <http://example.org/prop/none> ?o }",
+    }
+    for name, text in queries.items():
+        got = _rows(cat_eng.query(_P + text))
+        assert got == _rows(mem_eng.query(_P + text)), name
+        assert bool(got) != name.startswith("unknown_"), name
+    # an SH IRI looked up as subject and as object resolves to one id
+    sid = cat_eng._const_id("s", ent)
+    assert 0 < sid <= cat_eng.n_shared and cat_eng._const_id("o", ent) == sid
+    assert cat_eng._const_id("o", f'"true"^^<{_XSD_BOOL}>') > cat_eng.n_shared
+
+
+def test_catalog_engine_query_runs_no_spark_job(spark, published_docs):
+    """Compiling a BGP with new constants against a published warehouse
+    submits no Spark job: constants come from the block directory and
+    n_shared from the dict_terms lineage."""
+    import time
+
+    catalog, _ = published_docs
+    eng = SparqlEngine.from_catalog(catalog)
+    ent = _shared_entity(catalog)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-catalog-lookup"
+    sc.setJobGroup(group, "constant lookup")
+    try:
+        df = eng.query(
+            _P + f'SELECT ?doc WHERE {{ ?doc p:mentions <{ent}> ; p:lang "en"@en }}'
+        )
+        time.sleep(1)  # the status store hears of jobs asynchronously
+        assert list(tracker.getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.count() > 0
+
+
+def test_catalog_engine_row_group_without_statistics(spark, tmp_path):
+    """A term too long for parquet-mr's footer statistics (here the
+    row group's max) leaves its row group without min/max; the directory treats such a row group
+    as a candidate for every term, so all of its terms still resolve.
+    Unicode terms check that the directory's order is the byte order
+    the writer's statistics use."""
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.pipeline import run_pipeline
+
+    long_lit = '"' + "x" * 5000 + '"'
+    rows = [
+        ("http://ex/a", "p", long_lit),
+        ("http://ex/a", "p", '"short"'),
+        ("http://ex/中文", "p", '"\U0001F600"@en'),
+        ("http://ex/z", "q", "http://ex/a"),
+    ]
+    tri = spark.createDataFrame(rows, "s string, p string, o string")
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    run_pipeline(
+        spark, catalog, source_df=tri, source_kind="triples",
+        source_fingerprint="long-term-test", num_partitions=1,
+        with_stats=False,
+    )
+    blocks = catalog.lineage("dict_terms")["blocks"]
+    assert sum(b["rows"] for b in blocks) == catalog.lineage("dict_terms")["row_count"]
+    assert any(b["min"] is None for b in blocks)
+    eng = SparqlEngine.from_catalog(catalog)
+    assert eng.n_shared == 1  # http://ex/a
+    for lit in (long_lit, '"short"'):
+        out = eng.query(f"SELECT ?s WHERE {{ ?s <p> {lit} }}")
+        assert _rows(out) == [("http://ex/a",)], lit[:10]
+    out = eng.query('SELECT ?s WHERE { ?s <p> "\U0001F600"@en }')
+    assert _rows(out) == [("http://ex/中文",)]
+    out = eng.query("SELECT ?o WHERE { <http://ex/中文> ?p ?o }")
+    assert _rows(out) == [('"\U0001F600"@en',)]
+    out = eng.query("SELECT ?z ?o WHERE { ?z <q> <http://ex/a> . <http://ex/a> <p> ?o }")
+    assert len(_rows(out)) == 2
+
+
 @pytest.fixture(scope="module")
 def quad_engine(spark):
     rows = [
