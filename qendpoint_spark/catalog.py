@@ -99,6 +99,12 @@ class Catalog:
         with open(p) as f:
             return json.load(f)
 
+    def _write_lineage(self, stage: str, record: dict) -> None:
+        tmp = self._lineage_path(stage) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(record, f)
+        os.replace(tmp, self._lineage_path(stage))
+
     def all_lineage(self) -> list[dict]:
         out = []
         for f in sorted(os.listdir(self.warehouse)):
@@ -110,6 +116,9 @@ class Catalog:
     # -- tables -----------------------------------------------------------
     def table_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
+
+    def exists(self, name: str) -> bool:
+        return os.path.exists(self.table_path(name))
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.table_path(name))
@@ -211,8 +220,29 @@ class Catalog:
         }
         if blocks is not None:
             record["blocks"] = blocks
-        tmp_l = self._lineage_path(stage) + ".tmp"
-        with open(tmp_l, "w") as f:
-            json.dump(record, f)
-        os.replace(tmp_l, self._lineage_path(stage))
+        self._write_lineage(stage, record)
         return StageResult(stage, path, rows, wall_ms, False)
+
+    def drop(self, stage: str, staging: bool = False) -> None:
+        """Delete a committed table's data. staging=True keeps its
+        lineage row (fingerprint, row counts, per-file rows), marked
+        `"staging": "data dropped"`: a staging table whose consumers
+        have all committed. Otherwise the lineage row goes too."""
+        shutil.rmtree(self.table_path(stage), ignore_errors=True)
+        record = self.lineage(stage)
+        if record is None:
+            return
+        if staging:
+            self._write_lineage(stage, {**record, "staging": "data dropped"})
+        else:
+            os.remove(self._lineage_path(stage))
+
+    def partition_rows(self, stage: str, key: str) -> dict[str, int]:
+        """Committed rows per value of the partition column `key`, from
+        the per-file rows in the stage's lineage: no data is read."""
+        rows: dict[str, int] = {}
+        for part in self.lineage(stage)["partitions"]:
+            value = _partition_values(part["path"]).get(key)
+            if value is not None:
+                rows[value] = rows.get(value, 0) + part["row_count"]
+        return rows

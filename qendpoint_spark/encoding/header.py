@@ -3,9 +3,16 @@
 The reference's header is a tiny RDF graph of dataset metadata —
 triple counts, distinct counts, original size
 (core/header/PlainHeader.java; `_:statistics <hdt:originalSize>`
-written at HDTDiskImporter.java:295). Here it is a one-row stats table
-computed with a single aggregate pass over each component (plus
-raw-size accounting from the string triples, SectionCompressor.java:268).
+written at HDTDiskImporter.java:295). Here it is a one-row stats table.
+
+A published warehouse holds exactly Header + Dictionary + Triples (no
+string triples), so the pipeline builds its header from what the
+commits already know: section counts from the dict_terms lineage's
+per-file rows, n_triples from the triples_spo lineage, and one
+aggregate over the committed statement ids for n_raw_triples and
+original_size, weighted by per-role term lengths. The same function
+also builds the header by scanning string triples and the dictionary
+(the oracle row's path); both give the same row.
 """
 
 from __future__ import annotations
@@ -13,12 +20,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from qendpoint_spark.dictionary.builder import (
+    object_map,
+    predicate_map,
+    subject_map,
+)
+
+HEADER_SECTIONS = (
+    ("SH", "n_shared"),
+    ("S", "n_subjects_only"),
+    ("O", "n_objects_only"),
+    ("P", "n_predicates"),
+    ("G", "n_graphs"),
+)
+
+
+def _raw_from_ids(triples_id: DataFrame, dict_terms: DataFrame) -> DataFrame:
+    """(n_raw_triples, original_size) over statement ids: each id joins
+    its role's term length (F.length of the dictionary term), so no
+    triple is decoded to a string. The length maps are (long, int) —
+    broadcast-sized wherever the dictionary is."""
+    out = triples_id.select("s", "p", "o")
+    for role_map, col in ((subject_map, "s"), (predicate_map, "p"), (object_map, "o")):
+        ids = role_map(dict_terms).toDF("term", col)
+        out = out.join(ids.select(col, F.length("term").alias(f"{col}_len")), col)
+    return out.agg(
+        F.count(F.lit(1)).alias("n_raw_triples"),
+        F.sum(
+            F.col("s_len") + F.col("p_len") + F.col("o_len") + F.lit(2)
+        ).cast("long").alias("original_size"),
+    )
+
 
 def build_header(
-    triples_str: DataFrame,
+    triples_str: DataFrame | None,
     dict_terms: DataFrame,
     triples_id: DataFrame,
     n_triples: int | None = None,
+    sections: dict[str, int] | None = None,
 ) -> DataFrame:
     """One row: dataset statistics for planner stats + parity with the
     reference header fields.
@@ -27,44 +66,56 @@ def build_header(
     from scanning the encoded table: the dictionary is built from these
     very triples, so every subject-space id 1..|SH|+|S| occurs (ditto
     objects/predicates/graphs) and the per-space maxima are the section
-    sizes. This removes a 3x expand shuffle of the full ID table
-    (countDistinct(s), countDistinct(p), countDistinct(o) in one agg)
-    that bench profiling showed dominating the header stage; the only
-    remaining pass over the encoded table is a map-side count(*).
-    Precondition: triples_id is the unfiltered encode of the same
-    triples_str the dictionary was built from.
+    sizes. Precondition: triples_id is the unfiltered encode of the
+    triples the dictionary was built from.
 
-    n_triples: when the caller already holds the exact encoded-triple
-    count (the pipeline reads it from the committed table's parquet
-    footers), the count pass over triples_id is skipped — same value,
-    one less job.
+    triples_str: the string triples for n_raw_triples and
+    original_size (raw-size accounting, SectionCompressor.java:268).
+    None takes both from triples_id instead — its row count, and the
+    per-role term lengths summed over its ids — which is how the
+    pipeline builds the header without keeping string triples.
+
+    n_triples: the exact encoded-triple count when the caller holds it
+    (the pipeline reads it from the committed table's lineage); else a
+    count pass over triples_id.
+
+    sections: rows per dictionary section when the caller holds them
+    (the pipeline reads them from the dict_terms lineage); else a pivot
+    over dict_terms.
     """
-    raw = triples_str.agg(
-        F.count(F.lit(1)).alias("n_raw_triples"),
-        F.sum(
-            F.length("s") + F.length("p") + F.length("o") + F.lit(2)
-        ).cast("long").alias("original_size"),
-    )
-    sections = (
-        dict_terms.groupBy()
-        .pivot("section", ["SH", "S", "O", "P", "G"])
-        .agg(F.count(F.lit(1)))
-        .select(
-            F.coalesce(F.col("SH"), F.lit(0)).alias("n_shared"),
-            F.coalesce(F.col("S"), F.lit(0)).alias("n_subjects_only"),
-            F.coalesce(F.col("O"), F.lit(0)).alias("n_objects_only"),
-            F.coalesce(F.col("P"), F.lit(0)).alias("n_predicates"),
-            F.coalesce(F.col("G"), F.lit(0)).alias("n_graphs"),
+    spark = dict_terms.sparkSession
+    if triples_str is None:
+        raw = _raw_from_ids(triples_id, dict_terms)
+    else:
+        raw = triples_str.agg(
+            F.count(F.lit(1)).alias("n_raw_triples"),
+            F.sum(
+                F.length("s") + F.length("p") + F.length("o") + F.lit(2)
+            ).cast("long").alias("original_size"),
         )
-    )
+    if sections is not None:
+        counts = spark.range(1).select(*(
+            F.lit(sections.get(sec, 0)).cast("long").alias(name)
+            for sec, name in HEADER_SECTIONS
+        ))
+    else:
+        counts = (
+            dict_terms.groupBy()
+            .pivot("section", [sec for sec, _ in HEADER_SECTIONS])
+            .agg(F.count(F.lit(1)))
+            .select(*(
+                F.coalesce(F.col(sec), F.lit(0)).alias(name)
+                for sec, name in HEADER_SECTIONS
+            ))
+        )
     if n_triples is not None:
-        enc = triples_str.sparkSession.range(1).select(
+        enc = spark.range(1).select(
             F.lit(n_triples).cast("long").alias("n_triples")
         )
     else:
         enc = triples_id.agg(F.count(F.lit(1)).alias("n_triples"))
     return (
-        raw.crossJoin(sections)
+        raw.crossJoin(counts)
         .crossJoin(enc)
         .withColumn(
             "n_distinct_subjects",

@@ -16,6 +16,8 @@ The shared SQL prelude (_KG_PRELUDE) mirrors, stage by stage:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -87,11 +89,17 @@ def _enc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- queries
 
 
+def _scratch_dir() -> str:
+    """Where the rows that commit a scratch warehouse write it."""
+    return os.environ.get("SPARK_GRAFT_SCRATCH") or (
+        "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    )
+
+
 def _gate_tmp_path(suffix: str, prefix: str) -> str:
     """Racy-free temp path for the round-trip gates: mkstemp creates
     the file (the writers truncate it) instead of the deprecated
     tempfile.mktemp name-then-open gap (ADVICE r6)."""
-    import os
     import tempfile
 
     fd, path = tempfile.mkstemp(suffix=suffix, prefix=prefix)
@@ -207,7 +215,6 @@ def q_kg_rdfxml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs the extraction oracle proves serializer and parser agree on
     every construct the corpus exercises (IRIs, typed/lang literals,
     XML escaping)."""
-    import os
     import tempfile
 
     from qendpoint_spark.sources.rdfxml import read_rdfxml, write_rdfxml
@@ -229,7 +236,6 @@ def q_kg_jsonld_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON-LD (sources/jsonld.py:serialize_jsonld) -> distributed
     re-parse (read_jsonld) -> (s, p, o). Same proof shape as the
     RDF/XML row for the second RIOT format family."""
-    import os
     import tempfile
 
     from qendpoint_spark.sources.jsonld import read_jsonld, write_jsonld
@@ -286,16 +292,12 @@ def q_kg_datatype_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
     Datatype-scoped reads are file-pruned (PartitionFilters assertion
     in tests/test_plans.py)."""
     import hashlib
-    import os
 
     from qendpoint_spark.catalog import Catalog
 
     msd = with_datatype(_dict(spark, sf_dir))
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH") or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    )
     fp = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    cat = Catalog(spark, f"{scratch}/qs_msd_{fp}")
+    cat = Catalog(spark, f"{_scratch_dir()}/qs_msd_{fp}")
     cat.write_stage(
         "dict_terms", msd, fp, force=True, partition_by=["section", "datatype"]
     )
@@ -644,15 +646,11 @@ def q_kg_ntriples_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the extraction grammar, so any export- or parse-side corruption
     hash-fails."""
     import hashlib
-    import os
 
     from qendpoint_spark.encoding.header import export_ntriples
     from qendpoint_spark.sources import read_ntriples
 
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH") or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    )
-    path = f"{scratch}/qs_nt_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+    path = f"{_scratch_dir()}/qs_nt_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
     export_ntriples(_triples(spark, sf_dir)).write.mode("overwrite").text(path)
     return read_ntriples(spark, path)
 
@@ -697,6 +695,55 @@ def q_kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return new_enc
 
 
+_DOC = "http://example.org/doc/"
+_SOURCE = "http://example.org/prop/source"
+#: the base corpus slice the update row publishes, and the documents
+#: whose source triples its DELETE DATA removes (a subset of the slice)
+_UPD_BASE, _UPD_DELETE = 5, 45
+_UPD_INSERT = (
+    f'<{_DOC}new1> <{_SOURCE}> "inserted" . '
+    f"<{_DOC}new1> <http://example.org/prop/mentions> <http://example.org/ent/shuffle> . "
+    f'<{_DOC}5> <http://example.org/prop/crawldate> '
+    f'"2024-06-06"^^<http://www.w3.org/2001/XMLSchema#date>'
+)
+
+
+def q_kg_update_insert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A delete after a merge-path publish, through the warehouse API:
+    run_pipeline over the doc_id % 5 == 0 slice, apply_update INSERT
+    DATA (the KCat merge: two new triples and one already present),
+    then DELETE DATA (the source triples of the doc_id % 45 == 0
+    documents and one inserted triple), into a scratch warehouse. The
+    decoded published state must be (base ∪ insert) − delete."""
+    import shutil
+    import tempfile
+
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.pipeline import run_pipeline
+    from qendpoint_spark.sparql import apply_update
+
+    docs = _docs(spark, sf_dir)
+    deleted = [
+        f'<{_DOC}{r.doc_id}> <{_SOURCE}> "{r.source}"'
+        for r in docs.filter(F.col("doc_id") % _UPD_DELETE == 0)
+        .select("doc_id", "source").collect()
+    ] + [f'<{_DOC}new1> <{_SOURCE}> "inserted"']
+    wh = tempfile.mkdtemp(prefix="qs_update_wh_", dir=_scratch_dir())
+    try:
+        cat = Catalog(spark, wh)
+        run_pipeline(
+            spark, cat, source_df=docs.filter(F.col("doc_id") % _UPD_BASE == 0),
+            source_kind="documents", source_fingerprint=f"update-row:{sf_dir}",
+        )
+        apply_update(spark, cat, f"INSERT DATA {{ {_UPD_INSERT} }}")
+        apply_update(spark, cat, f"DELETE DATA {{ {' . '.join(deleted)} }}")
+        return decode_triples(
+            cat.read("triples_spo"), cat.read("dict_terms")
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)
+
+
 QUERIES = {
     "kg_extract_triples": q_kg_extract,
     "kg_quads_encode": q_kg_quads,
@@ -737,6 +784,7 @@ QUERIES = {
     "kg_path_closure": q_kg_path_closure,
     "kg_path_bounded": q_kg_path_bounded,
     "kg_ntriples_ingest": q_kg_ntriples_ingest,
+    "kg_update_insert_delete": q_kg_update_insert_delete,
 }
 
 # ---------------------------------------------------------------- oracles
@@ -879,6 +927,29 @@ survivors AS (
 """
     + _dict_enc_cte("survivors")
     + "SELECT s, p, o FROM enc"
+)
+
+_UPDATE_ORACLE = (
+    "\nWITH "
+    + _triples_cte("base", f"doc_id % {_UPD_BASE} = 0")
+    + f""",
+inserted(s, p, o) AS (VALUES
+  ('{_DOC}new1', '{_SOURCE}', '"inserted"'),
+  ('{_DOC}new1', 'http://example.org/prop/mentions', 'http://example.org/ent/shuffle'),
+  ('{_DOC}5', 'http://example.org/prop/crawldate',
+   '"2024-06-06"^^<http://www.w3.org/2001/XMLSchema#date>')
+),
+deleted AS (
+  SELECT '{_DOC}' || doc_id AS s, '{_SOURCE}' AS p, '"' || source || '"' AS o
+  FROM documents WHERE doc_id % {_UPD_DELETE} = 0
+  UNION ALL
+  SELECT '{_DOC}new1', '{_SOURCE}', '"inserted"'
+)
+SELECT s, p, o FROM base
+UNION
+SELECT s, p, o FROM inserted
+EXCEPT
+SELECT s, p, o FROM deleted"""
 )
 
 _QUADS_CTE = """
@@ -1099,6 +1170,7 @@ ORACLES = {
                  sum(p)::BIGINT AS sum_p, sum(o)::BIGINT AS sum_o
           FROM enc) AS a""",
     "kg_diff": _DIFF_ORACLE,
+    "kg_update_insert_delete": _UPDATE_ORACLE,
     "kg_bgp_join": _KG_PRELUDE
     + """
     SELECT e1.s AS doc, e1.o AS ent, e2.o AS label

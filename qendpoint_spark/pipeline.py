@@ -2,23 +2,37 @@
 
 Stage graph (SURVEY.md §7.1; each stage = one committed table + lineage):
 
-  extract     pages/documents -> triples_str(s,p,o)
-  dictionary  triples_str -> dict_terms(term, section, sec_rank, id)
-  encode      triples_str x dict -> triples_spo (SPO-sorted, unique)
-  ops         triples_spo -> triples_ops (OPS-sorted)
-  stats       predicate/object index tables
+  extract     pages/documents -> triples_str(s,p,o[,g])       [staging]
+  link        triples_str -> linked_mentions        (alias_dict given)
+  canon       triples_str -> triples_canon          [staging] (sameas given)
+  dictionary  triples_str|canon -> dict_terms(term, section, sec_rank, id)
+  encode      triples_str|canon x dict -> triples_spo (SPO-sorted, unique)
+              [+ quads_spog for quad input]
+  ops         triples_spo -> triples_ops (OPS-sorted)   [+ triples_pso]
+  stats       predicate/object index tables, header
+
+Published = Header + Dictionary + Triples, as an HDT file is
+(HDTBase.java:99-119): no string triples. triples_str and triples_canon
+are staging tables. Their data is deleted once every consumer has
+committed (dictionary, encode, and link when requested); their lineage
+rows stay. The header comes from commit metadata (encoding/header.py),
+not from a scan of the staging data.
 
 Resume: each stage records its input fingerprint; rerunning with an
 unchanged input skips straight to reading the committed table —
 mirroring the reference's persisted restart step
-(MergeRunnable.java:495-519) and CatTree chunk checkpoints.
+(MergeRunnable.java:495-519) and CatTree chunk checkpoints. A staging
+stage resumes from its lineage alone, row count included, so a rerun
+after a full publish extracts nothing. When a consumer must rebuild and
+the staging data is gone, the staging stage is built again first, as in
+a fresh run.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,19 +70,49 @@ def _fingerprint(*parts: str) -> str:
     return hashlib.sha256("||".join(parts).encode()).hexdigest()[:16]
 
 
-def _resume(catalog: Catalog, name: str, fp: str) -> StageResult | None:
+def _resume(
+    catalog: Catalog, name: str, fp: str, need_data: bool = True
+) -> StageResult | None:
     """StageResult for a committed, fingerprint-matching stage whose
     table still EXISTS on disk — lineage alone is not enough (a deleted
     table directory with a surviving _lineage_*.json must trigger a
-    rebuild, mirroring Catalog.write_stage's own existence check)."""
+    rebuild, mirroring Catalog.write_stage's own existence check).
+    need_data=False: the lineage alone, for a staging stage."""
     lin = catalog.lineage(name)
     if lin is None or lin.get("input_fingerprint") != fp:
         return None
-    if not os.path.exists(catalog.table_path(name)):
+    if need_data and not catalog.exists(name):
         return None
     return StageResult(
         name, catalog.table_path(name), lin["row_count"], lin["wall_ms"], True
     )
+
+
+class _Staging:
+    """A staging stage. A fingerprint-matching lineage row resumes it
+    without its data (the data is deleted once its consumers commit);
+    frame() is its one read, and builds it again first when a consumer
+    must rebuild and the data is gone."""
+
+    def __init__(self, catalog: Catalog, report: PipelineReport, name: str,
+                 fp: str, build: Callable[[], DataFrame], force: bool):
+        self.catalog, self.name, self.fp, self.build = catalog, name, fp, build
+        self.stages, self.index = report.stages, len(report.stages)
+        self.res = (
+            None if force else _resume(catalog, name, fp, need_data=False)
+        ) or self._write()
+        report.stages.append(self.res)
+
+    def _write(self) -> StageResult:
+        return self.catalog.write_stage(self.name, self.build(), self.fp, force=True)
+
+    def frame(self) -> DataFrame:
+        if not self.catalog.exists(self.name):
+            self.res = self.stages[self.index] = self._write()
+        return self.catalog.read(self.name)
+
+    def drop(self) -> None:
+        self.catalog.drop(self.name, staging=True)
 
 
 def _extractor(source_kind: str):
@@ -88,11 +132,28 @@ def _extractor(source_kind: str):
     return extract_triples_from_pages
 
 
+def _header(catalog: Catalog, triples_spo: DataFrame) -> DataFrame:
+    """The header from commit metadata: section counts from the
+    dict_terms lineage's per-file rows, n_triples from the triples_spo
+    lineage, and one aggregate over the statement table (quads_spog
+    when it exists, else triples_spo) for n_raw_triples and
+    original_size."""
+    statements = (
+        catalog.read("quads_spog") if catalog.exists("quads_spog") else triples_spo
+    )
+    return build_header(
+        None,
+        catalog.read("dict_terms"),
+        statements,
+        n_triples=catalog.lineage("triples_spo")["row_count"],
+        sections=catalog.partition_rows("dict_terms", "section"),
+    )
+
+
 def _publish_tail(
     catalog: Catalog,
     report: PipelineReport,
     fp: str,
-    header,
     num_partitions: int | None,
     with_pso: bool,
     with_stats: bool,
@@ -100,11 +161,10 @@ def _publish_tail(
 ) -> None:
     """OPS -> [PSO] -> [predicate/object index, header] over the
     committed triples_spo, appending each stage to `report`. fp is the
-    triples_spo fingerprint; header(triples_spo) builds the header
-    table. One persist serves every consumer (OPS re-sort's sample +
-    shuffle passes, optional PSO, both stats aggregates, header count)
-    — 5-6 parquet re-decodes otherwise — and is released on every
-    path, failures included."""
+    triples_spo fingerprint. One persist serves every consumer (OPS
+    re-sort's sample + shuffle passes, optional PSO, both stats
+    aggregates, the header's size aggregate) — 5-6 parquet re-decodes
+    otherwise — and is released on every path, failures included."""
     n = num_partitions
     fp_ops = _fingerprint(fp, "ops", str(report.n_triples))
     stages = [(
@@ -121,7 +181,7 @@ def _publish_tail(
         stages += [
             ("predicate_index", predicate_index, None, fp_stats),
             ("object_index", object_index, None, fp_stats),
-            ("header", header, None, fp_stats),
+            ("header", lambda t: _header(catalog, t), None, fp_stats),
         ]
     triples_spo = catalog.read("triples_spo").persist()
     try:
@@ -154,7 +214,8 @@ def run_pipeline(
 
     source_df: the pages or documents DataFrame. source_fingerprint
     should identify the input snapshot (path + row count, config...);
-    stages resume when it is unchanged.
+    stages resume when it is unchanged. A run that resumes every
+    consumer of the extraction never reads source_df.
 
     alias_dict(alias, entity_iri, prior[, block_key]): when given, the
     `linked_mentions` stage scores every mention (the ent/<alias>
@@ -169,55 +230,50 @@ def run_pipeline(
     report = PipelineReport()
     fp0 = _fingerprint(source_kind, source_fingerprint)
 
-    # S1 extract ----------------------------------------------------------
-    res = None if force else _resume(catalog, "triples_str", fp0)
-    if res is None:
-        res = catalog.write_stage(
-            "triples_str", _extractor(source_kind)(source_df), fp0, force=force
-        )
-    report.stages.append(res)
-    triples_str = catalog.read("triples_str")
+    # S1 extract (staging) ------------------------------------------------
+    extracted = _Staging(
+        catalog, report, "triples_str", fp0,
+        lambda: _extractor(source_kind)(source_df), force,
+    )
+    staged = [extracted]
 
     # S1b entity linking (optional artifact stage) --------------------------
     if alias_dict is not None:
         from qendpoint_spark.extraction.triples import BASE, P_MENTIONS
         from qendpoint_spark.linking import link_mentions
 
-        fp_l = _fingerprint(fp0, "link", str(res.rows))
+        fp_l = _fingerprint(fp0, "link", str(extracted.res.rows))
         res_l = None if force else _resume(catalog, "linked_mentions", fp_l)
-        if res_l is not None:
-            report.stages.append(res_l)
-        else:
+        if res_l is None:
             prefix_len = len(BASE + "ent/")
             mentions = (
-                triples_str.filter(F.col("p") == P_MENTIONS)
+                extracted.frame().filter(F.col("p") == P_MENTIONS)
                 .select(
                     F.col("s").alias("doc_iri"),
                     F.col("o").substr(F.lit(prefix_len + 1), F.length("o")).alias("alias"),
                 )
             )
             linked = link_mentions(mentions, alias_dict, broadcast_dict=True)
-            report.stages.append(
-                catalog.write_stage("linked_mentions", linked, fp_l, force=force)
-            )
+            res_l = catalog.write_stage("linked_mentions", linked, fp_l, force=force)
+        report.stages.append(res_l)
 
-    # S1c canonicalization (optional; downstream consumes the rewrite) ------
+    # S1c canonicalization (optional staging; downstream consumes it) -------
+    source = extracted
     if sameas is not None:
         from qendpoint_spark.linking import canonicalize_triples
 
-        fp_c = _fingerprint(fp0, "canon", str(res.rows))
-        res = None if force else _resume(catalog, "triples_canon", fp_c)
-        if res is None:
-            canon = canonicalize_triples(triples_str, sameas)
-            res = catalog.write_stage("triples_canon", canon, fp_c, force=force)
-        report.stages.append(res)
-        triples_str = catalog.read("triples_canon")
+        source = _Staging(
+            catalog, report, "triples_canon",
+            _fingerprint(fp0, "canon", str(extracted.res.rows)),
+            lambda: canonicalize_triples(extracted.frame(), sameas), force,
+        )
+        staged.append(source)
 
     # S2 dictionary ---------------------------------------------------------
-    fp1 = _fingerprint(fp0, "dict", str(res.rows))
+    fp1 = _fingerprint(fp0, "dict", str(source.res.rows))
     res = None if force else _resume(catalog, "dict_terms", fp1)
     if res is None:
-        dict_terms = build_dictionary(triples_str, num_partitions=num_partitions)
+        dict_terms = build_dictionary(source.frame(), num_partitions=num_partitions)
         # MSD physical layout (MultipleSectionDictionary.java:51-60):
         # one partition directory per (section, datatype) — the object
         # sections split per literal datatype exactly as the reference's
@@ -237,18 +293,18 @@ def run_pipeline(
             partition_by=["section", "datatype"],
         )
     report.stages.append(res)
-    dict_terms = catalog.read("dict_terms")
 
     # S3 encode + SPO materialize -----------------------------------------
     # quad input (a `g` column): the full (s,p,o,g) encode is published
     # as quads_spog — GRAPH/FROM queries read it (sparql.algebra) — and
     # the triple tables carry the graph-projected statements, so every
-    # triple-shaped stage (OPS/PSO/stats/header) is unchanged
-    with_quads = "g" in triples_str.columns
+    # triple-shaped stage (OPS/PSO/stats) is unchanged
     fp2 = _fingerprint(fp1, "encode", str(res.rows))
     res = None if force else _resume(catalog, "triples_spo", fp2)
     if res is None:
-        if with_quads:
+        triples_str = source.frame()
+        dict_terms = catalog.read("dict_terms")
+        if "g" in triples_str.columns:
             encq = encode_triples(
                 triples_str, dict_terms, assume_distinct=True
             )
@@ -262,6 +318,9 @@ def run_pipeline(
             )
             enc = encq.drop("g").dropDuplicates(["s", "p", "o"])
         else:
+            # a quad table left by an earlier quad input would describe
+            # another dataset
+            catalog.drop("quads_spog")
             # the extraction stage emits distinct triples by construction
             enc = encode_triples(
                 triples_str, dict_terms, assume_distinct=True
@@ -284,17 +343,11 @@ def run_pipeline(
             enc.unpersist()
     report.stages.append(res)
     report.n_triples = res.rows
+    # every consumer of the staging tables has committed
+    for stage in staged:
+        stage.drop()
     _publish_tail(
-        catalog,
-        report,
-        fp2,
-        lambda t: build_header(
-            triples_str, catalog.read("dict_terms"), t, n_triples=report.n_triples
-        ),
-        num_partitions,
-        with_pso,
-        with_stats,
-        force,
+        catalog, report, fp2, num_partitions, with_pso, with_stats, force
     )
     report.wall_s = time.time() - t_start
     return report
@@ -376,14 +429,21 @@ def publish_merged(
     left stats describing the pre-merge dataset would silently mis-plan
     every subsequent ?P? scan. A fresh catalog gets dict/SPO/OPS.
 
+    A quad warehouse is refused before any write: the merge re-ranks
+    dict_terms, and quads_spog would keep the pre-merge ids, so GRAPH
+    queries would decode them to other terms.
+
     merged_dict arrives materialized (rank_sections checkpoints it),
     but merged_triples may still lazily read the catalog's CURRENT
     dict_terms/triples_spo through the merge's remap joins, and the
     writes below overwrite both — so it is cut first. (A versioned
     table format would let readers pin the old version; the os.rename
     Catalog has no snapshots, so the cut is explicit here.)"""
-    from qendpoint_spark.encoding import build_header, decode_triples
-
+    if catalog.exists("quads_spog"):
+        raise NotImplementedError(
+            "merging into a warehouse with quads_spog is not supported: "
+            "its graph statements would keep the pre-merge dictionary ids"
+        )
     merged_triples = merged_triples.localCheckpoint(eager=True)
     report = PipelineReport()
     report.stages.append(
@@ -404,22 +464,13 @@ def publish_merged(
     )
     report.stages.append(res)
     report.n_triples = res.rows
-
-    def header(triples_spo: DataFrame) -> DataFrame:
-        d = catalog.read("dict_terms")
-        return build_header(
-            decode_triples(triples_spo, d), d, triples_spo, n_triples=report.n_triples
-        )
-
-    exists = lambda t: os.path.exists(catalog.table_path(t))  # noqa: E731
     _publish_tail(
         catalog,
         report,
         fp,
-        header,
         num_partitions,
-        with_pso=exists("triples_pso"),
-        with_stats=any(map(exists, ("predicate_index", "object_index", "header"))),
+        with_pso=catalog.exists("triples_pso"),
+        with_stats=any(map(catalog.exists, ("predicate_index", "object_index", "header"))),
         force=True,
     )
     return report

@@ -13,7 +13,8 @@ as a SET TRANSFORMATION over the string-triple state and republishes:
   the pipeline; an insert-only script routes through the KCat
   id-remap merge (pipeline.incremental_update_triples), which never
   re-extracts or re-encodes the published triples, instead of a full
-  rebuild.
+  rebuild. A script with a delete folds over the published ID tables
+  decoded to strings (the warehouse keeps no string triples).
 
 Ground terms use the repo's HDT lexical forms, so the output composes
 with every other stage.
@@ -123,9 +124,12 @@ def apply_update(
 ):
     """Apply an update script to a published warehouse. Insert-only
     scripts go through the KCat incremental merge (the reference's
-    delta-store + merge-runner path); anything with a
-    delete rebuilds from the transformed string-triple state (the
-    reference's full-recompute fallback, HDTDiff territory)."""
+    delta-store + merge-runner path); anything with a delete rebuilds
+    from the transformed state of the published statements —
+    quads_spog when present, else triples_spo, decoded through
+    dict_terms — (the reference's full-recompute fallback, HDTDiff
+    territory). The published tables, not the pipeline's staging
+    triples, are the state: a merge rewrites them alone."""
     ops = parse_update(text)
     if all(isinstance(op, InsertData) for op in ops):
         from qendpoint_spark.pipeline import incremental_update_triples
@@ -142,9 +146,11 @@ def apply_update(
             batch_fingerprint=f"sparql-update:{_digest(text)}",
             num_partitions=num_partitions,
         )
+    from qendpoint_spark.encoding import decode_triples
     from qendpoint_spark.pipeline import run_pipeline
 
-    cur = catalog.read("triples_str")
+    table = "quads_spog" if catalog.exists("quads_spog") else "triples_spo"
+    cur = decode_triples(catalog.read(table), catalog.read("dict_terms"))
     new = apply_update_to_triples(cur, ops, spark)
     return run_pipeline(
         spark,

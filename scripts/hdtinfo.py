@@ -4,14 +4,15 @@ Reference: qendpoint-cli/bin/hdtInfo.sh (dump the .hdt header's
 dataset-invariant triples). The pipeline's `header` table carries the
 same invariants (counts per section, raw size — encoding/header.py);
 lineage rows add per-stage provenance the reference keeps in its
-sidecar files.
+sidecar files. A staging stage (triples_str, triples_canon), whose data
+the pipeline deletes once its consumers commit, prints as
+`staging (data dropped)` from its lineage row.
 
 Usage: python scripts/hdtinfo.py <warehouse_dir>
 """
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -41,7 +42,7 @@ def main() -> None:
         return
     spark = get_spark("hdtinfo")
     catalog = Catalog(spark, sys.argv[1])
-    if os.path.exists(catalog.table_path("header")):
+    if catalog.exists("header"):
         print("# header")
         for r in catalog.read("header").collect():
             print("  " + "\t".join(str(v) for v in r))
@@ -53,6 +54,7 @@ def main() -> None:
             f" partitions={len(ln.get('partitions', [])):>4}"
             f" completed={ln.get('completed_at', '?')}"
             f" fp={str(ln.get('input_fingerprint', ''))[:16]}"
+            + (f" staging ({ln['staging']})" if "staging" in ln else "")
         )
     spark.stop()
 

@@ -649,6 +649,78 @@ def test_update_apply(spark, mini, tmp_path):
     assert len(got) == len(_TRIPLES) + 2
 
 
+def test_update_delete_after_insert_keeps_merged_data(spark, tmp_path):
+    """A delete after a merge-path publish works on the published
+    state: publish {A p B, C p D}, INSERT DATA {X p Y}, then
+    DELETE DATA {A p B} leaves {C p D, X p Y}."""
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.encoding import decode_triples
+    from qendpoint_spark.pipeline import run_pipeline
+    from qendpoint_spark.sparql import apply_update
+
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    base = spark.createDataFrame(
+        [("A", "p", "B"), ("C", "p", "D")], "s string, p string, o string"
+    )
+    run_pipeline(
+        spark, catalog, source_df=base, source_kind="triples",
+        source_fingerprint="ins-del", num_partitions=2,
+    )
+
+    def state():
+        return _rows(decode_triples(
+            catalog.read("triples_spo"), catalog.read("dict_terms")
+        ))
+
+    apply_update(spark, catalog, "INSERT DATA { <X> <p> <Y> }", num_partitions=2)
+    assert state() == [("A", "p", "B"), ("C", "p", "D"), ("X", "p", "Y")]
+    apply_update(spark, catalog, "DELETE DATA { <A> <p> <B> }", num_partitions=2)
+    assert state() == [("C", "p", "D"), ("X", "p", "Y")]
+    header = catalog.read("header").collect()[0]
+    assert header.n_triples == header.n_raw_triples == 2
+
+
+def test_merge_into_quad_warehouse_is_refused(spark, tmp_path):
+    """The merge re-ranks dict_terms but cannot rewrite quads_spog, so
+    an insert into a quad warehouse raises before any write instead of
+    answering GRAPH queries with the pre-merge ids."""
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.pipeline import run_pipeline
+    from qendpoint_spark.sparql import apply_update
+
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    quads = spark.createDataFrame(
+        [("m", "p", "n", "g1")], "s string, p string, o string, g string"
+    )
+    run_pipeline(
+        spark, catalog, source_df=quads, source_kind="triples",
+        source_fingerprint="quad-merge", num_partitions=2,
+    )
+    tables = ("dict_terms", "triples_spo", "quads_spog", "triples_ops", "header")
+
+    def snapshot():
+        return {t: (_rows(catalog.read(t)), catalog.lineage(t)) for t in tables}
+
+    before = snapshot()
+    with pytest.raises(NotImplementedError, match="quads_spog"):
+        apply_update(spark, catalog, "INSERT DATA { <a> <p> <b> }", num_partitions=2)
+    assert snapshot() == before
+    out = SparqlEngine.from_catalog(catalog).query(
+        "SELECT ?g ?s ?o WHERE { GRAPH ?g { ?s <p> ?o } }"
+    )
+    assert _rows(out) == [("g1", "m", "n")]
+    # republished from triples, the warehouse drops its stale quad table
+    # (data and lineage), and merges again
+    run_pipeline(
+        spark, catalog, source_df=quads.drop("g"), source_kind="triples",
+        source_fingerprint="quad-merge-triples", num_partitions=2,
+    )
+    assert not catalog.exists("quads_spog")
+    assert catalog.lineage("quads_spog") is None
+    apply_update(spark, catalog, "INSERT DATA { <a> <p> <b> }", num_partitions=2)
+    assert catalog.read("header").collect()[0].n_raw_triples == 2
+
+
 def test_engine_empty_corpus_and_unicode(spark):
     """Degenerate and non-ASCII inputs through the full text->plan
     path: an empty corpus answers (not errors), and unicode terms
