@@ -679,20 +679,47 @@ def q_kg_cat_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HDTDiff through the real diff path: subtract the triples
-    extracted from the doc_id % 7 == 0 documents, rebuild dictionary +
-    encoding over the survivors (per-section re-rank). Note shared
-    terms (entity labels mentioned by surviving docs too) correctly
-    survive the subtraction — the delete set is a TRIPLE set, not a
-    document set."""
-    from qendpoint_spark.merge import diff_datasets
+    extracted from the doc_id % 7 == 0 documents in ID space, then
+    re-rank (diff_datasets + merge_datasets). Note shared terms (entity
+    labels mentioned by surviving docs too) correctly survive the
+    subtraction — the delete set is a TRIPLE set, not a document set."""
+    from qendpoint_spark.merge import diff_datasets, merge_datasets
 
-    docs = _docs(spark, sf_dir)
-    tri = _triples(spark, sf_dir)
+    d = _dict(spark, sf_dir)
     del_tri = extract_triples_from_documents(
-        docs.filter(F.col("doc_id") % 7 == 0)
+        _docs(spark, sf_dir).filter(F.col("doc_id") % 7 == 0)
     )
-    _, new_enc = diff_datasets(tri, del_tri)
+    _, new_enc, _ = merge_datasets(
+        [diff_datasets(_enc(spark, sf_dir), d, encode_triples(del_tri, d))]
+    )
     return new_enc
+
+
+def updated_state(
+    spark: SparkSession, docs: DataFrame, fp: str, scripts: list
+) -> DataFrame:
+    """Publish `docs` into a scratch warehouse, apply_update each
+    script in turn, and return the decoded published state."""
+    import shutil
+    import tempfile
+
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.pipeline import run_pipeline
+    from qendpoint_spark.sparql import apply_update
+
+    wh = tempfile.mkdtemp(prefix="qs_update_wh_", dir=_scratch_dir())
+    try:
+        cat = Catalog(spark, wh)
+        run_pipeline(
+            spark, cat, source_df=docs, source_kind="documents", source_fingerprint=fp
+        )
+        for text in scripts:
+            apply_update(spark, cat, text)
+        return decode_triples(
+            cat.read("triples_spo"), cat.read("dict_terms")
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)
 
 
 _DOC = "http://example.org/doc/"
@@ -711,37 +738,21 @@ _UPD_INSERT = (
 def q_kg_update_insert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A delete after a merge-path publish, through the warehouse API:
     run_pipeline over the doc_id % 5 == 0 slice, apply_update INSERT
-    DATA (the KCat merge: two new triples and one already present),
-    then DELETE DATA (the source triples of the doc_id % 45 == 0
-    documents and one inserted triple), into a scratch warehouse. The
-    decoded published state must be (base ∪ insert) − delete."""
-    import shutil
-    import tempfile
-
-    from qendpoint_spark.catalog import Catalog
-    from qendpoint_spark.pipeline import run_pipeline
-    from qendpoint_spark.sparql import apply_update
-
+    DATA (two new triples and one already present), then DELETE DATA
+    (the source triples of the doc_id % 45 == 0 documents and one
+    inserted triple), into a scratch warehouse. The decoded published
+    state must be (base ∪ insert) − delete."""
     docs = _docs(spark, sf_dir)
     deleted = [
         f'<{_DOC}{r.doc_id}> <{_SOURCE}> "{r.source}"'
         for r in docs.filter(F.col("doc_id") % _UPD_DELETE == 0)
         .select("doc_id", "source").collect()
     ] + [f'<{_DOC}new1> <{_SOURCE}> "inserted"']
-    wh = tempfile.mkdtemp(prefix="qs_update_wh_", dir=_scratch_dir())
-    try:
-        cat = Catalog(spark, wh)
-        run_pipeline(
-            spark, cat, source_df=docs.filter(F.col("doc_id") % _UPD_BASE == 0),
-            source_kind="documents", source_fingerprint=f"update-row:{sf_dir}",
-        )
-        apply_update(spark, cat, f"INSERT DATA {{ {_UPD_INSERT} }}")
-        apply_update(spark, cat, f"DELETE DATA {{ {' . '.join(deleted)} }}")
-        return decode_triples(
-            cat.read("triples_spo"), cat.read("dict_terms")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
+    base = docs.filter(F.col("doc_id") % _UPD_BASE == 0)
+    return updated_state(spark, base, f"update-row:{sf_dir}", [
+        f"INSERT DATA {{ {_UPD_INSERT} }}",
+        f"DELETE DATA {{ {' . '.join(deleted)} }}",
+    ])
 
 
 QUERIES = {

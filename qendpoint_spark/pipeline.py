@@ -386,24 +386,36 @@ def incremental_update(
 def incremental_update_triples(
     spark: SparkSession,
     catalog: Catalog,
-    new_tri: DataFrame,
+    new_tri: DataFrame | None,
     batch_fingerprint: str = "",
     num_partitions: int | None = None,
+    delete_tri: DataFrame | None = None,
 ) -> PipelineReport:
     """incremental_update for a PRE-EXTRACTED string-triple batch —
     the entry point the streaming ingest-compact path uses (staging
     generations are already triples; CatTreeImpl merges chunk HDTs the
     same way without re-parsing the source). new_tri must be distinct
     on (s,p,o) — streaming.compact_staging guarantees it; overlap with
-    the PUBLISHED data is fine (the merge is a set union)."""
-    from qendpoint_spark.merge import merge_incremental
+    the PUBLISHED data is fine (the merge is a set union).
+
+    delete_tri: string triples removed first, as the reference's
+    diffcat does: encoded against the published dictionary and
+    subtracted in ID space (diff_datasets). new_tri=None merges the
+    survivors alone."""
+    from qendpoint_spark import merge
 
     t_start = time.time()
-    new_dict = build_dictionary(new_tri, num_partitions=num_partitions)
-    new_enc = encode_triples(new_tri, new_dict, assume_distinct=True)
     base = (catalog.read("triples_spo"), catalog.read("dict_terms"))
-    merged_dict, merged_triples = merge_incremental(
-        base, (new_enc, new_dict), num_partitions=num_partitions
+    if delete_tri is not None:
+        delete_id = encode_triples(delete_tri, base[1], assume_distinct=True)
+        base = merge.diff_datasets(*base, delete_id)
+    inputs = [base]
+    if new_tri is not None:
+        new_dict = build_dictionary(new_tri, num_partitions=num_partitions)
+        new_enc = encode_triples(new_tri, new_dict, assume_distinct=True)
+        inputs.append((new_enc, new_dict))
+    merged_dict, merged_triples, _ = merge.merge_datasets(
+        inputs, num_partitions=num_partitions
     )
     report = publish_merged(
         catalog,

@@ -21,7 +21,8 @@ byte (compact/integer/VByte.java). The reference feeds each non-empty
 member through the parser guessed from its name and SKIPS deletions;
 `read_delta_file` reproduces that (N-Triples members — the sandbox
 parser set), and `delta_file_entries` exposes the raw (name, deleted)
-inventory so callers can drive diff_datasets with the deletion list.
+inventory so callers can turn the deletion list into the delete_tri
+of pipeline.incremental_update_triples (an ID-space diff_datasets).
 
 Spark shape: one binaryFile row per delta file (files are bounded
 change batches by construction), expanded via mapInPandas — same

@@ -12,15 +12,11 @@ plans.paths), decoding bindings to lexical terms only at the edges
 
 from qendpoint_spark.sparql.parser import parse_query, parse_update
 from qendpoint_spark.sparql.algebra import SparqlEngine
-from qendpoint_spark.sparql.update import (
-    apply_update,
-    apply_update_to_triples,
-)
+from qendpoint_spark.sparql.update import apply_update
 
 __all__ = [
     "parse_query",
     "parse_update",
     "SparqlEngine",
     "apply_update",
-    "apply_update_to_triples",
 ]

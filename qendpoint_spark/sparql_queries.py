@@ -19,9 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from qendpoint_spark.entry_queries import (
     _dict,
+    _docs,
     _enc,
-    _triples,
+    _scratch_dir,
     _triples_cte,
+    updated_state,
 )
 
 _P = "PREFIX p: <http://example.org/prop/>\n"
@@ -101,18 +103,13 @@ def _catalog_engine(spark: SparkSession, sf_dir: str):
     key = (id(spark), sf_dir, "catalog")
     if key not in _ENGINES:
         import hashlib
-        import os
 
         from qendpoint_spark.catalog import Catalog
-        from qendpoint_spark.entry_queries import _docs
         from qendpoint_spark.pipeline import run_pipeline
         from qendpoint_spark.sparql import SparqlEngine
 
-        scratch = os.environ.get("SPARK_GRAFT_SCRATCH") or (
-            "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-        )
         fp = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        catalog = Catalog(spark, f"{scratch}/qs_sparql_wh_{fp}")
+        catalog = Catalog(spark, f"{_scratch_dir()}/qs_sparql_wh_{fp}")
         run_pipeline(
             spark, catalog, source_df=_docs(spark, sf_dir),
             source_kind="documents", source_fingerprint=fp, force=True,
@@ -141,14 +138,13 @@ _UPDATE_TEXT = (
 
 
 def _sparql_update_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch SPARQL UPDATE over the extracted triple state: drop every
-    flag triple, materialize inverse mentions edges, append one
-    metadata statement — the pipeline analog of the reference's
-    delta-store UPDATE path (EndpointStoreConnection), applied as set
-    transformations (sparql/update.py)."""
-    from qendpoint_spark.sparql import apply_update_to_triples
-
-    return apply_update_to_triples(_triples(spark, sf_dir), _UPDATE_TEXT)
+    """Batch SPARQL UPDATE over a published warehouse of the corpus:
+    drop every flag triple, materialize inverse mentions edges, append
+    one metadata statement — the pipeline analog of the reference's
+    delta-store UPDATE path (EndpointStoreConnection), each op one
+    ID-space diffcat (sparql/update.py)."""
+    fp = f"sparql-update-row:{sf_dir}"
+    return updated_state(spark, _docs(spark, sf_dir), fp, [_UPDATE_TEXT])
 
 
 SPARQL_QUERIES = {

@@ -4,10 +4,12 @@ warehouse.
 Reference: qendpoint-cli/bin/hdtCat.sh / hdtDiffCat.sh (KCatImpl /
 HDTDiff over .hdt files). Here: merge_datasets joins each input's INT
 triples through its (space, old_id -> new_id) remap — no triple string
-ever decodes or shuffles (merge/kcat.py) — then publishes the result
-through pipeline.publish_merged, the same publish incremental_update
-uses: dictionary (MSD layout) + SPO/OPS, plus a refresh of any PSO,
-stats and header tables the output warehouse already holds.
+ever decodes or shuffles (merge/kcat.py); --diff remaps the delete
+input into the base's id space the same way and subtracts it there
+(diff_datasets) — then publishes the result through
+pipeline.publish_merged, the same publish incremental_update uses:
+dictionary (MSD layout) + SPO/OPS, plus a refresh of any PSO, stats
+and header tables the output warehouse already holds.
 
 Inputs and --output may each be a warehouse dir OR a binary .hdt
 file (mix freely): `hdtcat.py --output merged.hdt a.hdt b.hdt` is the
@@ -29,7 +31,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from qendpoint_spark.catalog import Catalog  # noqa: E402
-from qendpoint_spark.merge import diff_datasets, merge_datasets  # noqa: E402
+from qendpoint_spark import merge  # noqa: E402
 from qendpoint_spark.pipeline import publish_merged  # noqa: E402
 from qendpoint_spark.session import get_spark  # noqa: E402
 
@@ -60,15 +62,15 @@ def main() -> None:
         c = Catalog(spark, path)
         return c.read("triples_spo"), c.read("dict_terms")
 
-    pairs = [load(p) for p in args.inputs]
+    inputs = [load(p) for p in args.inputs]
     if args.diff:
-        from qendpoint_spark.encoding import decode_triples
-
-        base, delete = (decode_triples(enc, d) for enc, d in pairs)
-        md, mt = diff_datasets(base, delete, num_partitions=args.partitions)
-    else:
-        inputs = [(enc, d) for enc, d in pairs]
-        md, mt, _ = merge_datasets(inputs, num_partitions=args.partitions)
+        # the delete statements move into the base's id space (terms
+        # the base lacks drop out), then diff + re-rank in ID space
+        (base, base_dict), (delete, delete_dict) = inputs
+        remap = merge.build_remap(delete_dict, base_dict)
+        delete = merge.remap_triples(delete, remap)
+        inputs = [merge.diff_datasets(base, base_dict, delete)]
+    md, mt, _ = merge.merge_datasets(inputs, num_partitions=args.partitions)
 
     if args.output.endswith(".hdt"):
         from qendpoint_spark.hdt import write_hdt

@@ -131,7 +131,11 @@ def test_diff(spark, documents):
     """diff == encode of the surviving subset (HDTDiff semantics)."""
     tr = extract_triples_from_documents(documents)
     dele = tr.filter(F.col("p").contains("mentions"))
-    new_dict, new_enc = diff_datasets(tr, dele, num_partitions=4)
+    d = build_dictionary(tr, num_partitions=4)
+    new_dict, new_enc, _ = merge_datasets(
+        [diff_datasets(encode_triples(tr, d), d, encode_triples(dele, d))],
+        num_partitions=4,
+    )
     survivors = tr.join(dele, ["s", "p", "o"], "left_anti")
     exp_dict = build_dictionary(survivors, num_partitions=4)
     exp_enc = encode_triples(survivors, exp_dict)
@@ -180,8 +184,12 @@ def test_diff_quads_match_on_graph(spark):
         Row(s="http://x/s", p="http://x/p", o='"v"', g="http://x/g2"),
     ]
     quads = spark.createDataFrame(rows)
+    d = build_dictionary(quads)
     # deleting the g1 statement must keep the identical triple in g2
-    _, new_enc = diff_datasets(quads, spark.createDataFrame([rows[0]]))
+    delete = encode_triples(spark.createDataFrame([rows[0]]), d)
+    _, new_enc, _ = merge_datasets(
+        [diff_datasets(encode_triples(quads, d), d, delete)]
+    )
     assert new_enc.count() == 1
 
 

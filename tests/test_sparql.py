@@ -607,46 +607,106 @@ def test_engine_subquery_and_new_aggs(chain_engine):
     assert _rows(out) == [("e", "d1")]
 
 
+def _published(catalog):
+    from qendpoint_spark.encoding import decode_triples
+
+    return _rows(decode_triples(
+        catalog.read("triples_spo"), catalog.read("dict_terms")
+    ))
+
+
 def test_update_apply(spark, mini, tmp_path):
-    """Batch SPARQL UPDATE: data ops + a DELETE/INSERT WHERE, then the
-    insert-only fast path through the published warehouse."""
+    """Batch SPARQL UPDATE over a published warehouse: data ops + a
+    DELETE/INSERT WHERE, then an insert-only script."""
     from qendpoint_spark.catalog import Catalog
     from qendpoint_spark.pipeline import run_pipeline
-    from qendpoint_spark.sparql import apply_update, apply_update_to_triples
+    from qendpoint_spark.sparql import apply_update
 
     tri, d, enc = mini
-    out = apply_update_to_triples(
-        tri,
+
+    def publish(name):
+        catalog = Catalog(spark, str(tmp_path / name))
+        run_pipeline(
+            spark, catalog, source_df=tri, source_kind="triples",
+            source_fingerprint="upd-test", num_partitions=2, with_stats=False,
+        )
+        return catalog
+
+    catalog = publish("wh")
+    apply_update(
+        spark, catalog,
         'INSERT DATA { <N1> <q> "v" } ;'
         "DELETE DATA { <A> <p> <A> } ;"
-        "DELETE { ?x <q> ?y } INSERT { ?y <rev_q> ?x } WHERE { ?x <q> ?y }",
+        "DELETE { ?x <q> ?y } INSERT { ?y <rev_q> ?x } WHERE { ?x <q> ?y } ;"
+        # no solutions: an empty insert delta and an empty delete set
+        "DELETE { ?x <none> ?y } INSERT { ?y <none> ?x } WHERE { ?x <none> ?y }",
+        num_partitions=2,
     )
-    rows = {tuple(r) for r in out.collect()}
-    assert rows == {
+    assert _published(catalog) == [
+        ('"v"', "rev_q", "N1"),  # the inserted data row, also reversed
         ("O1", "rev_q", "S1"),   # S1-q-O1 reversed
         ("S1", "p", "O1"),
-        ('"v"', "rev_q", "N1"),  # the inserted data row, also reversed
-    }
-    # insert-only fast path: publishes through the incremental merge
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    run_pipeline(
-        spark, catalog, source_df=tri, source_kind="triples",
-        source_fingerprint="upd-test", num_partitions=2, with_stats=False,
-    )
+    ]
+    catalog = publish("wh_insert")
     apply_update(
         spark, catalog, "INSERT DATA { <X> <p> <Y> . <X> <p> <Z> }",
         num_partitions=2,
     )
-    from qendpoint_spark.encoding import decode_triples
-
-    got = sorted(
-        tuple(r)
-        for r in decode_triples(
-            catalog.read("triples_spo"), catalog.read("dict_terms")
-        ).collect()
-    )
+    got = _published(catalog)
     assert ("X", "p", "Y") in got and ("X", "p", "Z") in got
     assert len(got) == len(_TRIPLES) + 2
+
+
+def test_update_diffcat_matches_rebuild(spark, tmp_path):
+    """An update is one ID-space diffcat per op group, and its result
+    is the warehouse run_pipeline publishes from the expected set,
+    table for table. The deletes turn SH terms into S (b) and O (a),
+    drop a subject's last use (z) and a predicate's last use (q)."""
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.pipeline import run_pipeline
+    from qendpoint_spark.sparql import apply_update
+
+    schema = "s string, p string, o string"
+
+    def publish(name, rows):
+        catalog = Catalog(spark, str(tmp_path / name))
+        run_pipeline(
+            spark, catalog, source_df=spark.createDataFrame(rows, schema),
+            source_kind="triples", source_fingerprint=name, num_partitions=2,
+        )
+        return catalog
+
+    catalog = publish("wh", [
+        ("a", "p", "b"), ("b", "p", "c"), ("c", "p", "d"),
+        ("z", "q", "a"), ("d", "r", "e"), ("e", "r", "a"),
+    ])
+    apply_update(
+        spark, catalog,
+        "INSERT DATA { <n> <p> <a> } ;"
+        "DELETE DATA { <z> <q> <a> . <a> <p> <b> } ;"
+        "DELETE { ?x <r> <a> } INSERT { ?x <r2> <a> } WHERE { ?x <r> <a> }",
+        num_partitions=2,
+    )
+    expected = publish("expected", [
+        ("b", "p", "c"), ("c", "p", "d"), ("d", "r", "e"),
+        ("e", "r2", "a"), ("n", "p", "a"),
+    ])
+
+    def tables(cat):
+        return {
+            "dict_terms": _rows(cat.read("dict_terms").select(
+                "term", "section", "sec_rank", "id"
+            )),
+            "triples_spo": _rows(cat.read("triples_spo")),
+            "triples_ops": _rows(cat.read("triples_ops")),
+            "header": _rows(cat.read("header")),
+        }
+
+    got = tables(catalog)
+    assert got == tables(expected)
+    sections = {t: sec for t, sec, _, _ in got["dict_terms"]}
+    assert (sections["a"], sections["b"]) == ("O", "S")
+    assert "z" not in sections and "q" not in sections
 
 
 def test_update_delete_after_insert_keeps_merged_data(spark, tmp_path):
@@ -682,15 +742,17 @@ def test_update_delete_after_insert_keeps_merged_data(spark, tmp_path):
 
 def test_merge_into_quad_warehouse_is_refused(spark, tmp_path):
     """The merge re-ranks dict_terms but cannot rewrite quads_spog, so
-    an insert into a quad warehouse raises before any write instead of
-    answering GRAPH queries with the pre-merge ids."""
+    every update of a quad warehouse (insert, delete, DELETE WHERE)
+    raises before any write instead of answering GRAPH queries with
+    the pre-merge ids."""
     from qendpoint_spark.catalog import Catalog
     from qendpoint_spark.pipeline import run_pipeline
     from qendpoint_spark.sparql import apply_update
 
     catalog = Catalog(spark, str(tmp_path / "wh"))
     quads = spark.createDataFrame(
-        [("m", "p", "n", "g1")], "s string, p string, o string, g string"
+        [("m", "p", "n", "g1"), ("m", "p", "n", "g2"), ("a", "p", "b", "g1")],
+        "s string, p string, o string, g string",
     )
     run_pipeline(
         spark, catalog, source_df=quads, source_kind="triples",
@@ -702,13 +764,20 @@ def test_merge_into_quad_warehouse_is_refused(spark, tmp_path):
         return {t: (_rows(catalog.read(t)), catalog.lineage(t)) for t in tables}
 
     before = snapshot()
-    with pytest.raises(NotImplementedError, match="quads_spog"):
-        apply_update(spark, catalog, "INSERT DATA { <a> <p> <b> }", num_partitions=2)
-    assert snapshot() == before
+    # a DELETE DATA without GRAPH targets the default graph; it must not
+    # remove the statement from every named graph either
+    for text in (
+        "INSERT DATA { <x> <p> <y> }",
+        "DELETE DATA { <m> <p> <n> }",
+        "DELETE WHERE { ?s <p> <n> }",
+    ):
+        with pytest.raises(NotImplementedError, match="quads_spog"):
+            apply_update(spark, catalog, text, num_partitions=2)
+        assert snapshot() == before
     out = SparqlEngine.from_catalog(catalog).query(
         "SELECT ?g ?s ?o WHERE { GRAPH ?g { ?s <p> ?o } }"
     )
-    assert _rows(out) == [("g1", "m", "n")]
+    assert _rows(out) == [("g1", "a", "b"), ("g1", "m", "n"), ("g2", "m", "n")]
     # republished from triples, the warehouse drops its stale quad table
     # (data and lineage), and merges again
     run_pipeline(
@@ -717,8 +786,8 @@ def test_merge_into_quad_warehouse_is_refused(spark, tmp_path):
     )
     assert not catalog.exists("quads_spog")
     assert catalog.lineage("quads_spog") is None
-    apply_update(spark, catalog, "INSERT DATA { <a> <p> <b> }", num_partitions=2)
-    assert catalog.read("header").collect()[0].n_raw_triples == 2
+    apply_update(spark, catalog, "INSERT DATA { <x> <p> <y> }", num_partitions=2)
+    assert catalog.read("header").collect()[0].n_raw_triples == 3
 
 
 def test_engine_empty_corpus_and_unicode(spark):
