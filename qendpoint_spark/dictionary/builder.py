@@ -11,7 +11,8 @@ Reference semantics (SURVEY.md §1.3, qendpoint-core):
   id = rank(SH) or |SH| + rank(O); predicate ids are their own 1..|P|
   space (BaseDictionary.getGlobalId, BaseDictionary.java:60-81).
 
-Spark realization: one map-side-combined groupBy(term) over role facts
+Spark realization: one scan of the triples explodes each triple into
+its (term, role) facts, one map-side-combined groupBy(term) over them
 computes each term's section key (the reference's sorted co-scan of the
 subject and object streams), then ONE `zip_with_rank` over
 (sec_key, term) ranks every section at once; per-section ranks and
@@ -57,7 +58,9 @@ def build_dictionary(
 
     Shuffle budget — exactly two full shuffles of the term universe:
 
-    1. role aggregation: explode each triple into (term, role) facts and
+    1. role aggregation: one scan of triples_str explodes each triple
+       into its (term, role) facts — one explode per triple, not a
+       union of per-role scans, so a lazy input runs once — and
        groupBy(term) with max() flags. Partial (map-side) aggregation
        collapses the rdf:type-style hot terms before the shuffle, so
        term skew never concentrates on one reducer. This one pass
@@ -148,23 +151,19 @@ def _section_key(roles: DataFrame) -> DataFrame:
 def role_sections(triples_str: DataFrame) -> DataFrame:
     """(term, sec_key) with sections SH < S < O < P < G encoded as
     0..4 — the pre-rank stage of build_dictionary, exposed so plan
-    tests can assert the role aggregation is map-side combined (the
-    skew defense: hot terms collapse per-partition before the
-    exchange)."""
-    with_graph = "g" in triples_str.columns
-    # (term, flag) role facts; flags: 1=subject, 2=object, 4=predicate,
+    tests can assert the role aggregation reads its input once and is
+    map-side combined (the skew defense: hot terms collapse
+    per-partition before the exchange)."""
+    # (term, flag) role facts from ONE scan: each triple explodes into
+    # one fact per role; flags: 1=subject, 2=object, 4=predicate,
     # 8=graph. Predicates and graphs are independent ID namespaces
     # (quad dictionaries, core/dictionary/impl quad variants), so they
     # aggregate apart from the s/o universe via the ns key.
-    facts = (
-        triples_str.select(F.col("s").alias("term"), F.lit(1).alias("f"))
-        .unionByName(triples_str.select(F.col("o").alias("term"), F.lit(2).alias("f")))
-        .unionByName(triples_str.select(F.col("p").alias("term"), F.lit(4).alias("f")))
-    )
-    if with_graph:
-        facts = facts.unionByName(
-            triples_str.select(F.col("g").alias("term"), F.lit(8).alias("f"))
-        )
+    flags = [("s", 1), ("o", 2), ("p", 4), ("g", 8)]
+    facts = triples_str.select(F.explode(F.array(*[
+        F.struct(F.col(c).alias("term"), F.lit(f).alias("f"))
+        for c, f in flags if c in triples_str.columns
+    ])).alias("r")).select("r.*")
     ns = (
         F.when(F.col("f") == 4, F.lit(1))
         .when(F.col("f") == 8, F.lit(2))

@@ -53,13 +53,18 @@ def apply_update(
 ):
     """Apply an update script to a published warehouse, one ID-space
     diffcat per op group; returns the last group's PipelineReport.
-    A quad warehouse refuses every update before any write
-    (publish_merged cannot rewrite quads_spog)."""
+    A quad warehouse refuses every update before any Spark job
+    (publish_merged cannot rewrite quads_spog), a WHERE's CONSTRUCT
+    included."""
     from qendpoint_spark.pipeline import (
         PipelineReport,
         incremental_update_triples,
+        refuse_quad_merge,
     )
 
+    ops = parse_update(text)
+    if ops:
+        refuse_quad_merge(catalog)
     digest = _digest(text)
     reports: list[PipelineReport] = []
 
@@ -78,7 +83,7 @@ def apply_update(
     dels: set = set()
     # DATA ops fold on the driver; any other op (and the closing None)
     # publishes the pending fold first
-    for op in parse_update(text) + [None]:
+    for op in ops + [None]:
         if isinstance(op, InsertData):
             ins |= _ground(op.triples)
             continue

@@ -136,6 +136,40 @@ def test_incremental_update_releases_cache_on_failure(spark, documents, tmp_path
     assert not leaked
 
 
+def test_incremental_update_evaluates_batch_once(spark, documents, tmp_path):
+    """A lazy batch runs once per update: the batch dictionary and the
+    encode both read one cut of it. A Python UDF on the batch's o
+    column counts its evaluations in an accumulator; the published
+    tables still equal run_pipeline over A ∪ B."""
+    tri_b = pipeline.extract_triples_from_documents(
+        documents.filter(F.col("doc_id") % 2 == 1)
+    ).localCheckpoint(eager=True)
+    n_rows = tri_b.count()
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(o):
+        evaluated.add(1)
+        return o
+
+    cat = Catalog(spark, str(tmp_path / "inc"))
+    run_pipeline(spark, cat, source_df=documents.filter(F.col("doc_id") % 2 == 0),
+                 source_kind="documents", source_fingerprint="even",
+                 num_partitions=4)
+    batch = tri_b.withColumn("o", counted("o"))
+    pipeline.incremental_update_triples(spark, cat, batch, num_partitions=4)
+    assert evaluated.value == n_rows
+
+    full = Catalog(spark, str(tmp_path / "full"))
+    run_pipeline(spark, full, source_df=documents, source_kind="documents",
+                 source_fingerprint="all", num_partitions=4)
+    for name, cols in [("dict_terms", ["term", "section", "sec_rank", "id"]),
+                       ("triples_spo", ["s", "p", "o"]),
+                       ("triples_ops", ["o", "p", "s"])]:
+        a, b = cat.read(name).select(*cols), full.read(name).select(*cols)
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, name
+
+
 def test_published_encodings(spark, documents, tmp_path):
     """The published ID tables use the compact Parquet layouts (writer
     v2): the ascending sort keys are DELTA_BINARY_PACKED with no

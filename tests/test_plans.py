@@ -172,15 +172,25 @@ def test_bgp_stats_ordering(spark, tmp_path):
     assert got.count() > 0
 
 
-def test_dictionary_agg_is_map_side_combined(spark, documents):
+def test_dictionary_agg_is_map_side_combined(spark, tmp_path, documents):
     """Skew defense of the dictionary build: the role aggregation must
     have a partial (map-side) phase BEFORE the exchange, so a hot term
     (rdf:type-style) collapses per-partition instead of concentrating
-    on one reducer — the salting-equivalent for aggregations."""
+    on one reducer — the salting-equivalent for aggregations. The role
+    facts come from one explode per triple, so over a parquet triples
+    table the aggregation scans it once, with no Union of per-role
+    scans."""
     from qendpoint_spark.dictionary.builder import role_sections
 
     tr = extract_triples_from_documents(documents).localCheckpoint(eager=True)
     plan = _plan(role_sections(tr))
+    assert "partial_max" in plan, plan[:2000]
+
+    path = str(tmp_path / "triples_str")
+    tr.write.parquet(path)
+    plan = _plan(role_sections(spark.read.parquet(path)))
+    assert plan.count("FileScan") == 1, plan[:4000]
+    assert "Union" not in plan, plan[:4000]
     assert "partial_max" in plan, plan[:2000]
 
 

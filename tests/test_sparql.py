@@ -744,9 +744,12 @@ def test_merge_into_quad_warehouse_is_refused(spark, tmp_path):
     """The merge re-ranks dict_terms but cannot rewrite quads_spog, so
     every update of a quad warehouse (insert, delete, DELETE WHERE)
     raises before any write instead of answering GRAPH queries with
-    the pre-merge ids."""
+    the pre-merge ids — and before any Spark job, so a refused update
+    runs neither the batch cut nor the merge's rank jobs."""
+    import time
+
     from qendpoint_spark.catalog import Catalog
-    from qendpoint_spark.pipeline import run_pipeline
+    from qendpoint_spark.pipeline import incremental_update_triples, run_pipeline
     from qendpoint_spark.sparql import apply_update
 
     catalog = Catalog(spark, str(tmp_path / "wh"))
@@ -764,15 +767,30 @@ def test_merge_into_quad_warehouse_is_refused(spark, tmp_path):
         return {t: (_rows(catalog.read(t)), catalog.lineage(t)) for t in tables}
 
     before = snapshot()
+    sc = spark.sparkContext
     # a DELETE DATA without GRAPH targets the default graph; it must not
     # remove the statement from every named graph either
-    for text in (
-        "INSERT DATA { <x> <p> <y> }",
-        "DELETE DATA { <m> <p> <n> }",
-        "DELETE WHERE { ?s <p> <n> }",
-    ):
-        with pytest.raises(NotImplementedError, match="quads_spog"):
-            apply_update(spark, catalog, text, num_partitions=2)
+    updates = [
+        lambda text=text: apply_update(spark, catalog, text, num_partitions=2)
+        for text in (
+            "INSERT DATA { <x> <p> <y> }",
+            "DELETE DATA { <m> <p> <n> }",
+            "DELETE WHERE { ?s <p> <n> }",
+        )
+    ]
+    # a lazy batch straight into the pipeline entry point
+    batch = quads.drop("g").filter(F.col("s") == "m")
+    updates.append(lambda: incremental_update_triples(spark, catalog, batch))
+    for i, update in enumerate(updates):
+        group = f"test-quad-refusal-{i}"
+        sc.setJobGroup(group, "refused quad update")
+        try:
+            with pytest.raises(NotImplementedError, match="quads_spog"):
+                update()
+            time.sleep(1)  # the status store hears of jobs asynchronously
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], i
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         assert snapshot() == before
     out = SparqlEngine.from_catalog(catalog).query(
         "SELECT ?g ?s ?o WHERE { GRAPH ?g { ?s <p> ?o } }"
