@@ -29,6 +29,7 @@ from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _storage_options(columns: list[str], sort_cols: list[str] | None) -> dict[str, str]:
@@ -59,18 +60,30 @@ def _partition_values(rel_path: str) -> dict[str, str | None]:
     return values
 
 
-def _block_entry(rel_path: str, index: int, rg) -> dict:
-    """One block-directory entry: a row group of a `term`-keyed table,
-    with its partition values and its footer's term min/max (None when
-    the writer kept no statistics for it)."""
-    lo = hi = None
+def _column_range(rg, name: str) -> tuple:
+    """(min, max) of one column of a row group from its footer
+    statistics, or (None, None) when the writer kept none."""
     for c in range(rg.num_columns):
         cc = rg.column(c)
         st = cc.statistics
-        if cc.path_in_schema == "term" and st is not None and st.has_min_max:
-            lo, hi = st.min, st.max
-    return {"path": rel_path, "row_group": index, "rows": rg.num_rows,
-            **_partition_values(rel_path), "min": lo, "max": hi}
+        if cc.path_in_schema == name and st is not None and st.has_min_max:
+            return st.min, st.max
+    return None, None
+
+
+def _block_entry(rel_path: str, index: int, rg, key: str) -> dict:
+    """One row-group directory entry: the row group's file, index, row
+    count and partition values, with the footer's min/max of `key`
+    (None when the writer kept no statistics for it). A `term`-keyed
+    table (the dictionary) also records the min/max of its `id`
+    column: ids ascend with the term inside a section, so the same
+    entries locate a term by value and by id."""
+    lo, hi = _column_range(rg, key)
+    entry = {"path": rel_path, "row_group": index, "rows": rg.num_rows,
+             **_partition_values(rel_path), "min": lo, "max": hi}
+    if key == "term":
+        entry["id_min"], entry["id_max"] = _column_range(rg, "id")
+    return entry
 
 
 @dataclass
@@ -121,7 +134,14 @@ class Catalog:
         return os.path.exists(self.table_path(name))
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.table_path(name))
+        """The committed table. Its schema comes from the lineage when
+        the commit recorded one, which spares Spark the job that infers
+        a parquet schema from a footer."""
+        record = self.lineage(name)
+        reader = self.spark.read
+        if record is not None and "schema" in record:
+            reader = reader.schema(StructType.fromJson(record["schema"]))
+        return reader.parquet(self.table_path(name))
 
     def write_stage(
         self,
@@ -177,13 +197,19 @@ class Catalog:
             for fname in fnames:
                 if fname.endswith(".parquet"):
                     files.append(os.path.join(root, fname))
-        # A table keyed by `term` (the dictionary) also records its
-        # block directory from the same footers: per row group, the
-        # partition values, the term min/max and the row count — the
-        # PFC block directory (PFCDictionarySection.java:96-150) that
-        # lets SparqlEngine.from_catalog resolve a term by reading one
-        # row group instead of running a Spark job.
-        blocks = [] if "term" in df.columns else None
+        # A table keyed by `term` (the dictionary) or sorted by
+        # `sort_cols` also records its row-group directory from the
+        # same footers: per row group, the partition values, the row
+        # count and the min/max of the key (the term, or the leading
+        # sort key). The dictionary's entries are the PFC block
+        # directory (PFCDictionarySection.java:96-150) and, with their
+        # id ranges, its extract(id) directory; a sorted triple
+        # table's are the range location BitmapTriples.search does on
+        # the leading component. SparqlEngine.from_catalog resolves
+        # constants, bounded triple patterns and decodes by reading
+        # the candidate row groups instead of running a Spark job.
+        key = "term" if "term" in df.columns else (sort_cols or [None])[0]
+        blocks = [] if key is not None else None
         per_part = []
         columns: dict[str, dict] = {}
         for i, fpath in enumerate(sorted(files)):
@@ -202,7 +228,7 @@ class Catalog:
                     col["compressed_bytes"] += cc.total_compressed_size
                     col["encodings"] = sorted(set(col["encodings"]) | set(cc.encodings))
                 if blocks is not None:
-                    blocks.append(_block_entry(rel, g, rg))
+                    blocks.append(_block_entry(rel, g, rg, key))
         rows = sum(p["row_count"] for p in per_part)
         if os.path.exists(path):
             shutil.rmtree(path)
@@ -217,6 +243,7 @@ class Catalog:
             "partitions": per_part,
             "sort_cols": sort_cols or [],
             "columns": columns,
+            "schema": df.schema.jsonValue(),
         }
         if blocks is not None:
             record["blocks"] = blocks

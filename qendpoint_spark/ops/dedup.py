@@ -291,7 +291,8 @@ def simhash_table(documents: DataFrame, bits: int | None = None) -> DataFrame:
     # first computed cnt per (doc, tok) via its own groupBy — a full
     # string-keyed shuffle of every distinct (doc, tok) pair whose
     # sort/agg buffers were the superlinear-wall suspect in the r5
-    # probe (BENCH/dedup_scale_probe_r5b: 2.37x linear at 640k docs).
+    # probe (BENCH/dedup_scale_probe_r5b: 2.37x linear at 640k docs;
+    # the probe script is in git history, scripts/dedup_scale_probe.py).
     # But sum(cnt * bit_j(h_tok)) over distinct pairs equals
     # sum(bit_j(h(token))) over raw token OCCURRENCES, and sum(cnt) is
     # just the occurrence count, so the counting pass is mathematically

@@ -9,7 +9,7 @@ Stage graph (SURVEY.md §7.1; each stage = one committed table + lineage):
   encode      triples_str|canon x dict -> triples_spo (SPO-sorted, unique)
               [+ quads_spog for quad input]
   ops         triples_spo -> triples_ops (OPS-sorted)   [+ triples_pso]
-  stats       predicate/object index tables, header
+  stats       predicate_index stats table, header
 
 Published = Header + Dictionary + Triples, as an HDT file is
 (HDTBase.java:99-119): no string triples. triples_str and triples_canon
@@ -44,7 +44,7 @@ from qendpoint_spark.dictionary import build_dictionary
 from qendpoint_spark.encoding import (
     build_header,
     encode_triples,
-    object_index,
+    object_index,  # noqa: F401 -- re-exported; perfbench's layer trace wraps it
     ops_table,
     predicate_index,
     pso_table,
@@ -160,11 +160,11 @@ def _publish_tail(
     with_stats: bool,
     force: bool,
 ) -> None:
-    """OPS -> [PSO] -> [predicate/object index, header] over the
+    """OPS -> [PSO] -> [predicate index, header] over the
     committed triples_spo, appending each stage to `report`. fp is the
     triples_spo fingerprint. One persist serves every consumer (OPS
-    re-sort's sample + shuffle passes, optional PSO, both stats
-    aggregates, the header's size aggregate) — 5-6 parquet re-decodes
+    re-sort's sample + shuffle passes, optional PSO, the stats
+    aggregate, the header's size aggregate) — 4-5 parquet re-decodes
     otherwise — and is released on every path, failures included."""
     n = num_partitions
     fp_ops = _fingerprint(fp, "ops", str(report.n_triples))
@@ -181,9 +181,11 @@ def _publish_tail(
         fp_stats = _fingerprint(fp_ops, "stats")
         stages += [
             ("predicate_index", predicate_index, None, fp_stats),
-            ("object_index", object_index, None, fp_stats),
             ("header", lambda t: _header(catalog, t), None, fp_stats),
         ]
+    # an object_index left by an earlier publish would describe
+    # another dataset; nothing reads it (kg_object_index computes it)
+    catalog.drop("object_index")
     triples_spo = catalog.read("triples_spo").persist()
     try:
         for name, build, sort_cols, stage_fp in stages:
@@ -477,7 +479,7 @@ def publish_merged(
 ) -> PipelineReport:
     """Publish a merged (or diffed) dataset — dict_terms in the MSD
     layout, triples_spo, then OPS plus EVERY derived table the catalog
-    already holds (PSO, predicate/object stats, header): a merge that
+    already holds (PSO, predicate stats, header): a merge that
     left stats describing the pre-merge dataset would silently mis-plan
     every subsequent ?P? scan. A fresh catalog gets dict/SPO/OPS.
 
@@ -518,7 +520,7 @@ def publish_merged(
         fp,
         num_partitions,
         with_pso=catalog.exists("triples_pso"),
-        with_stats=any(map(catalog.exists, ("predicate_index", "object_index", "header"))),
+        with_stats=any(map(catalog.exists, ("predicate_index", "header"))),
         force=True,
     )
     return report

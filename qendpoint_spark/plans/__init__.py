@@ -2,6 +2,7 @@ from qendpoint_spark.plans.pattern import (
     PatternStats,
     choose_order,
     join_bindings,
+    plan_bgp,
     scan_bgp,
     scan_bgp_minus,
     scan_bgp_optional,
@@ -20,6 +21,7 @@ __all__ = [
     "PatternStats",
     "choose_order",
     "join_bindings",
+    "plan_bgp",
     "scan_bgp",
     "scan_bgp_minus",
     "scan_bgp_optional",

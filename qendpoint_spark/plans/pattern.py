@@ -11,12 +11,21 @@ on the leading sort key — the same leading-component range location
 rank/select provides in HDT (AdjacencyList.java), done by the columnar
 reader instead.
 
-This is the whole planner: ~20 lines, as SURVEY.md §4.1 predicted —
-everything else (pushdown, pruning, codegen) is Catalyst.
+One planner, two executors. `plan_bgp` fixes a BGP's join order (greedy,
+smallest estimate first) and its variables' ID roles. `scan_bgp` runs
+the plan on Spark, where Catalyst does pushdown, pruning and codegen.
+`plans.local.local_bgp` runs the same plan on the driver when the
+engine has the committed tables' row-group directories and every
+pattern's candidate row groups are small: pyarrow reads and bind-joins
+them with no distributed job, as the reference's in-process
+`BitmapTriples.search` answers a pattern by range location.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -79,20 +88,27 @@ def scan_pattern(
 # The reference feeds per-predicate statistics into its query optimizer
 # (EndpointStoreEvaluationStatisticsHDT.java:11-61) so BGP join order
 # follows selectivity. Here the same stats table (encoding.indexes.
-# predicate_index) drives a greedy smallest-first join order; each leaf
-# is a routed scan_pattern, so leading-key pruning composes with the
-# ordering.
+# predicate_index) drives a greedy smallest-first join order. One
+# planner (plan_bgp) feeds two executors: scan_bgp, whose leaves are
+# routed scan_pattern frames joined by Spark, and plans.local.local_bgp,
+# which evaluates a bounded BGP on the driver over the committed
+# tables' row groups.
 
 
 class PatternStats:
     """Cardinality estimates from the predicate_index stats table
-    (p, n_triples, n_subjects, n_objects, ...) — ≤|P| rows, collected
-    once; the per-predicate dicts are what the reference keeps in its
-    PredicateIndex-backed statistics object."""
+    (p, n_triples, n_subjects, n_objects, ...) — ≤|P| rows, read once;
+    the per-predicate dicts are what the reference keeps in its
+    PredicateIndex-backed statistics object. Takes the table as a
+    DataFrame (collected) or as a pyarrow Table (a committed table read
+    on the driver, no Spark job)."""
 
-    def __init__(self, predicate_stats_df):
-        rows = predicate_stats_df.collect()
-        self.by_p = {r["p"]: r.asDict() for r in rows}
+    def __init__(self, predicate_stats):
+        if isinstance(predicate_stats, pa.Table):
+            rows = predicate_stats.to_pylist()
+        else:
+            rows = [r.asDict() for r in predicate_stats.collect()]
+        self.by_p = {r["p"]: r for r in rows}
         self.total = sum(r["n_triples"] for r in rows) or 1
 
     def estimate(self, s, p, o) -> float:
@@ -118,6 +134,92 @@ class PatternStats:
 BGP_BROADCAST_ROWS = 100_000
 
 
+def pattern_vars(pat: tuple) -> dict[str, str]:
+    """{variable: first position} of one (s, p, o) pattern, in s, p, o
+    order; a variable repeated within the pattern keeps its first
+    position (the others become equality filters)."""
+    out: dict[str, str] = {}
+    for k, v in zip("spo", pat):
+        if isinstance(v, str):
+            out.setdefault(v, k)
+    return out
+
+
+@dataclass
+class BgpStep:
+    """One pattern of a planned BGP, in join order."""
+
+    pattern: tuple  # (s, p, o): int id (bound) or variable name
+    on: list[str]  # variables shared with the steps before it
+    est: float  # estimated matching rows of the pattern alone
+    distincts: dict[str, float]  # V(var) estimate per variable
+
+
+def plan_bgp(
+    patterns: list[tuple], stats: PatternStats | None = None
+) -> tuple[list[BgpStep], dict[str, str]]:
+    """(steps, roles) of a basic graph pattern.
+
+    Join order: greedy smallest-estimated-cardinality first, never
+    introducing a cartesian product while a connected pattern exists —
+    the textbook selectivity-driven BGP ordering. Without stats a
+    pattern's estimate is its number of variables.
+
+    roles: the ID space of each variable — 's', 'o' or 'p' for the
+    position it is bound in, 'so' for a variable bound in subject
+    position by one pattern and object position by another (see
+    scan_bgp's n_shared). A variable in both predicate and
+    subject/object position raises NotImplementedError: predicate ids
+    are their own namespace."""
+
+    def est(pat):
+        if stats is None:
+            return 3 - len(pattern_vars(pat))
+        return stats.estimate(*(None if isinstance(v, str) else v for v in pat))
+
+    def distincts(pat) -> dict[str, float]:
+        """V(var): distinct-value estimate per variable of one leaf,
+        from the predicate stats (n_subjects/n_objects)."""
+        s, p, o = pat
+        st = None if stats is None or isinstance(p, str) else stats.by_p.get(p)
+        if st is None:
+            return {}
+        out = {}
+        if isinstance(s, str):
+            out[s] = float(st["n_subjects"])
+        if isinstance(o, str):
+            out[o] = float(st["n_objects"])
+        return out
+
+    remaining = sorted(patterns, key=est)
+    steps: list[BgpStep] = []
+    seen: set[str] = set()
+    while remaining:
+        connected = [i for i, pat in enumerate(remaining)
+                     if set(pattern_vars(pat)) & seen]
+        pat = remaining.pop(connected[0] if connected else 0)
+        names = pattern_vars(pat)
+        steps.append(BgpStep(pat, sorted(set(names) & seen), est(pat),
+                             distincts(pat)))
+        seen |= set(names)
+    roles: dict[str, str] = {}
+    for step in steps:
+        for v, role in pattern_vars(step.pattern).items():
+            prev = roles.get(v)
+            if prev is None or prev == role:
+                roles[v] = role
+            elif prev != "p" and role != "p":
+                roles[v] = "so"  # joined across roles -> SH-only
+            else:
+                raise NotImplementedError(
+                    f"variable ?{v} is used in both predicate and "
+                    "subject/object position; predicate IDs live in a "
+                    "separate namespace — rewrite the query or join on "
+                    "decoded terms"
+                )
+    return steps, roles
+
+
 def scan_bgp(
     spo,
     ops,
@@ -128,19 +230,18 @@ def scan_bgp(
     n_shared: int | None = None,
     roles_out: dict | None = None,
 ) -> DataFrame:
-    """Execute a basic graph pattern: each pattern is an (s, p, o)
-    tuple whose elements are ints (bound) or strings (variable names).
+    """Execute a basic graph pattern on Spark: each pattern is an
+    (s, p, o) tuple whose elements are ints (bound) or strings
+    (variable names). Returns one column per variable.
 
-    Join order: greedy smallest-estimated-cardinality first, never
-    introducing a cartesian product while a connected pattern exists —
-    the textbook selectivity-driven BGP ordering. BUILD/PROBE side:
-    when stats estimate one side under `broadcast_rows`, that side is
-    explicitly broadcast (the stats-driven analog of the reference
-    feeding PredicateIndex counts to its join optimizer,
+    Join order and variable roles come from plan_bgp. BUILD/PROBE
+    side: when stats estimate one side under `broadcast_rows`, that
+    side is explicitly broadcast (the stats-driven analog of the
+    reference feeding PredicateIndex counts to its join optimizer,
     EndpointStoreEvaluationStatisticsHDT.java:11-61); the accumulated
     cardinality is propagated with the textbook |A||B|/max(V(A,y),
     V(B,y)) estimate using the per-predicate distinct-subject/object
-    counts as V. Returns one column per variable.
+    counts as V.
 
     n_shared — size of the dictionary's shared (SH) section. In the
     HDT ID scheme, subject and object IDs denote the SAME term only in
@@ -150,116 +251,41 @@ def scan_bgp(
     bound in subject position by one pattern and object position by
     another therefore joins on term identity only under `id <=
     n_shared`; passing n_shared enables that guard (a leading-range
-    filter, so it tightens Parquet pruning too). Without it the join
-    falls back to raw id equality — exact whenever the vocabulary puts
-    every cross-role join term in SH (true of this repo's extraction
-    grammar), but not in general.
+    filter on every leaf that binds the variable, so it tightens
+    Parquet pruning too). Without it the join falls back to raw id
+    equality — exact whenever the vocabulary puts every cross-role
+    join term in SH (true of this repo's extraction grammar), but not
+    in general.
     """
-
-    def parts(pat):
-        return {k: v for k, v in zip("spo", pat)}
-
-    def bound(pat):
-        return {k: v for k, v in parts(pat).items() if not isinstance(v, str)}
-
-    def variables(pat):
-        return {v for v in pat if isinstance(v, str)}
-
-    _ROLE = {"s": "s", "p": "p", "o": "o"}
-    var_roles: dict[str, str] = {}
+    steps, roles = plan_bgp(patterns, stats)
 
     def leaf(pat):
-        b = bound(pat)
-        df = scan_pattern(spo, ops, pso=pso, **b)
+        df = scan_pattern(spo, ops, pso=pso, **{
+            k: v for k, v in zip("spo", pat) if not isinstance(v, str)
+        })
         # a variable repeated WITHIN one pattern (e.g. ('x', 1, 'x'))
         # means equality between those components: filter, then emit
         # the variable's column ONCE (else downstream joins see a
         # duplicate column name)
-        var_pos: dict[str, str] = {}
-        for k, v in parts(pat).items():
-            if isinstance(v, str):
-                if v in var_pos:
-                    df = df.filter(F.col(var_pos[v]) == F.col(k))
-                    if (
-                        n_shared is not None
-                        and {_ROLE[k], _ROLE[var_pos[v]]} == {"s", "o"}
-                    ):
-                        # s==o id equality means term equality only in SH
-                        df = df.filter(F.col(k) <= F.lit(n_shared))
-                else:
-                    var_pos[v] = k
-        cols = [F.col(k).alias(v) for v, k in var_pos.items()]
-        for v, k in var_pos.items():
-            prev = var_roles.get(v)
-            role = _ROLE[k]
-            if prev is None or prev == role:
-                var_roles[v] = role
-            elif {prev, role} == {"s", "o"}:
-                var_roles[v] = "so"  # joined across roles -> SH-only below
-            else:
-                raise NotImplementedError(
-                    f"variable ?{v} is used in both predicate and "
-                    "subject/object position; predicate IDs live in a "
-                    "separate namespace — rewrite the query or join on "
-                    "decoded terms"
-                )
-        return df.select(*cols)
+        first = pattern_vars(pat)
+        for k, v in zip("spo", pat):
+            if isinstance(v, str) and first[v] != k:
+                df = df.filter(F.col(first[v]) == F.col(k))
+                if n_shared is not None and {first[v], k} == {"s", "o"}:
+                    # s==o id equality means term equality only in SH
+                    df = df.filter(F.col(k) <= F.lit(n_shared))
+        if n_shared is not None:
+            for v, k in first.items():
+                if roles[v] == "so":
+                    df = df.filter(F.col(k) <= F.lit(n_shared))
+        return df.select(*[F.col(k).alias(v) for v, k in first.items()])
 
-    def guard_shared(df, pat):
-        """Pre-filter a new leaf / the accumulated frame to the SH id
-        range on every variable that is about to join across s/o
-        roles."""
-        if n_shared is None:
-            return df
-        for v in df.columns:
-            if var_roles.get(v) == "so":
-                df = df.filter(F.col(v) <= F.lit(n_shared))
-        return df
-
-    def var_distincts(pat) -> dict[str, float]:
-        """V(var): distinct-value estimate per variable of one leaf,
-        from the predicate stats (n_subjects/n_objects)."""
-        if stats is None:
-            return {}
-        p = parts(pat)["p"]
-        st = stats.by_p.get(p) if not isinstance(p, str) else None
-        if st is None:
-            return {}
-        out = {}
-        if isinstance(parts(pat)["s"], str):
-            out[parts(pat)["s"]] = float(st["n_subjects"])
-        if isinstance(parts(pat)["o"], str):
-            out[parts(pat)["o"]] = float(st["n_objects"])
-        return out
-
-    remaining = list(patterns)
-    est = (
-        (lambda pat: stats.estimate(**{
-            k: (None if isinstance(v, str) else v)
-            for k, v in parts(pat).items()
-        }))
-        if stats is not None
-        else (lambda pat: 3 - len(variables(pat)))
-    )
-    remaining.sort(key=est)
-    first = remaining.pop(0)
-    out = leaf(first)
-    seen_vars = variables(first)
-    acc_est = est(first)
-    acc_v = var_distincts(first)
-    while remaining:
-        connected = [i for i, pat in enumerate(remaining)
-                     if variables(pat) & seen_vars]
-        idx = connected[0] if connected else 0
-        pat = remaining.pop(idx)
-        on = sorted(variables(pat) & seen_vars)
-        right = leaf(pat)
-        # leaf() recorded role conflicts; apply the SH guard to BOTH
-        # sides before an inner join across s/o roles
-        right = guard_shared(right, pat)
-        out = guard_shared(out, pat)
-        r_est = est(pat)
-        r_v = var_distincts(pat)
+    out = leaf(steps[0].pattern)
+    acc_est = steps[0].est
+    acc_v = dict(steps[0].distincts)
+    for step in steps[1:]:
+        right = leaf(step.pattern)
+        on, r_est, r_v = step.on, step.est, step.distincts
         if not on:
             out = out.crossJoin(right)
             acc_est = acc_est * r_est
@@ -278,9 +304,8 @@ def scan_bgp(
             acc_est = acc_est * r_est / max(denom, 1.0)
         for v, d in r_v.items():
             acc_v[v] = min(acc_v.get(v, d), d)
-        seen_vars |= variables(pat)
     if roles_out is not None:
-        roles_out.update(var_roles)
+        roles_out.update(roles)
     return out
 
 

@@ -54,8 +54,15 @@ from qendpoint_spark.plans import (
     path_seq,
     path_step,
     path_zero_or_more,
+    plan_bgp,
     scan_bgp,
     transitive_closure,
+)
+from qendpoint_spark.plans.local import (
+    LOCAL_BGP_ROWS,
+    RowGroupDirectory,
+    local_bgp,
+    sorted_ids,
 )
 from qendpoint_spark.sparql.parser import (
     Aggregate,
@@ -245,26 +252,37 @@ def _distribute_alts(node) -> list:
 #: dictionary sections a constant is looked up in, per ID space: SH
 #: ids are valid subject and object ids (same id, same term)
 _ROLE_SECTIONS = {"s": ("SH", "S"), "o": ("SH", "O"), "p": ("P",), "g": ("G",)}
+#: sections an id of each binding kind decodes from: an 'so' variable
+#: joined subject to object ids, which are one term only in SH
+_DECODE_SECTIONS = {**_ROLE_SECTIONS, "so": ("SH",)}
+_TERM_ID = pa.schema([("term", pa.string()), ("id", pa.int64())])
 
 
 class BlockDirectory:
-    """Term -> id lookups over a committed dict_terms table without a
-    Spark job — HDT's PFC dictionary section, which keeps every 16th
-    term in full, binary-searches that directory and scans one block
+    """Term <-> id over a committed dict_terms table without a Spark
+    job — HDT's PFC dictionary section, which keeps every 16th term in
+    full, binary-searches that directory and scans one block
     (PFCDictionarySection.java:96-150). Here the blocks are the
     table's Parquet row groups and the directory is the list the
     catalog recorded at commit (`blocks` in the dict_terms lineage):
-    per row group its section, term min/max and row count.
+    per row group its section, term min/max, id min/max and row count.
 
-    A lookup binary-searches the role's sections for the row groups
-    whose [min, max] holds the term, reads only their `term` and `id`
-    columns with pyarrow and matches exactly. Row groups of one section
-    may overlap (each literal datatype is its own file), so the search
-    walks back from the last block starting at or before the term while
-    the running max of the earlier blocks still reaches it. A row group
-    without term statistics is a candidate for every term. `lookups`
-    and `row_groups_read` count the terms resolved and the row groups
-    read for them."""
+    `lookup` (locate: term -> id) binary-searches the role's sections
+    for the row groups whose [min, max] holds the term, reads only
+    their `term` and `id` columns with pyarrow and matches exactly. Row
+    groups of one section may overlap (each literal datatype is its own
+    file), so the search walks back from the last block starting at or
+    before the term while the running max of the earlier blocks still
+    reaches it. A row group without term statistics is a candidate for
+    every term. `lookups` and `row_groups_read` count the terms
+    resolved and the row groups read for them.
+
+    `decode` (extract: id -> term) selects a role's row groups by their
+    id ranges, the PFC `extract(id)` directory, and reads their term
+    and id columns. It declines (None) when those row groups exceed
+    `LOCAL_BGP_ROWS`; the caller then decodes with a Spark join. A
+    directory recorded before id ranges were (`has_ids` False) only
+    looks terms up."""
 
     def __init__(self, root: str, blocks: list[dict]):
         self.root = root
@@ -284,6 +302,14 @@ class BlockDirectory:
                 ranged,
                 [b for b in blocks if b["section"] == sec and b["min"] is None],
             )
+        self.has_ids = all("id_min" in b for b in blocks)
+        self._ids = {
+            sec: RowGroupDirectory(root, [
+                {**b, "min": b["id_min"], "max": b["id_max"]}
+                for b in blocks if b["section"] == sec
+            ])
+            for sec in self._sections
+        } if self.has_ids else {}
 
     def _candidates(self, role: str, term: str):
         for sec in _ROLE_SECTIONS[role]:
@@ -314,6 +340,24 @@ class BlockDirectory:
             )
             found.update(zip(hit["term"].to_pylist(), hit["id"].to_pylist()))
         return found
+
+    def decode(self, role: str, columns: list) -> list | None:
+        """The terms of int64 id columns that hold one role's ids ('s',
+        'o', 'so' or 'p'), as string arrays aligned with the columns,
+        or None when the candidate row groups exceed LOCAL_BGP_ROWS."""
+        ids = sorted_ids(columns)
+        picked = [(self._ids[sec], self._ids[sec].candidates(ids))
+                  for sec in _DECODE_SECTIONS[role] if sec in self._ids]
+        if sum(b["rows"] for _d, blocks in picked for b in blocks) > LOCAL_BGP_ROWS:
+            return None
+        wanted = pa.array(ids, pa.int64())
+        parts = []
+        for d, blocks in picked:
+            t = d.read(blocks, ["term", "id"], _TERM_ID)
+            parts.append(t.filter(pc.is_in(t["id"], value_set=wanted)))
+        found = pa.concat_tables(parts) if parts else _TERM_ID.empty_table()
+        terms = found["term"].combine_chunks()
+        return [pc.take(terms, pc.index_in(c, value_set=found["id"])) for c in columns]
 
 
 class SparqlEngine:
@@ -356,6 +400,9 @@ class SparqlEngine:
         # constants and n_shared resolve without a Spark job
         self.directory = directory
         self._n_shared = None if directory is None else directory.n_shared
+        # leading key -> row-group directory of the committed table
+        # sorted on it (from_catalog): bounded BGPs run on the driver
+        self.row_groups: dict[str, RowGroupDirectory] | None = None
         self._maps: dict[str, DataFrame] = {}
         self._consts: dict[tuple[str, str], int] = {}
 
@@ -365,37 +412,62 @@ class SparqlEngine:
         analog of pointing the reference's `hdtsparql` CLI at an .hdt
         file (qendpoint-cli/bin/hdtsparql.sh). Uses every access path
         the pipeline materialized: SPO/OPS always, PSO and the
-        predicate-stats table when present.
+        predicate-stats table when present. Building it runs no Spark
+        job: the tables are read with the schemas their lineage
+        records, and the predicate stats with pyarrow.
 
         Constants resolve through the block directory that the catalog
         recorded in the dict_terms lineage (`BlockDirectory`): a binary
         search over per-row-group term ranges, then a pyarrow read of
         the candidate row groups' term and id columns. `n_shared` is
         the sum of the directory's SH rows. So compiling a query runs
-        no Spark job for its constants. An engine built from in-memory
-        DataFrames, or over a dict_terms lineage committed without a
-        directory, resolves them with one `isin` collect per role."""
+        no Spark job for its constants.
+
+        With the row-group directories of triples_spo and triples_ops
+        (and of triples_pso when present) and the dictionary's id
+        ranges, a basic graph pattern is evaluated on the driver when
+        every pattern's candidate row groups hold at most LOCAL_BGP_ROWS
+        rows and its bindings at most LOCAL_BINDING_ROWS
+        (plans.local.local_bgp): pyarrow reads
+        and bind-joins the row groups, each variable is decoded through
+        the id directory, and Spark receives the result as a local
+        relation. Any larger BGP, and any warehouse committed without
+        these directories, runs on Spark (plans.pattern.scan_bgp).
+
+        An engine built from in-memory DataFrames, or over a dict_terms
+        lineage committed without a directory, resolves constants with
+        one `isin` collect per role and runs every BGP on Spark."""
         pso = None
         if os.path.exists(catalog.table_path("triples_pso")):
             pso = catalog.read("triples_pso")
         stats = None
         if os.path.exists(catalog.table_path("predicate_index")):
-            stats = PatternStats(catalog.read("predicate_index"))
+            stats = PatternStats(pq.read_table(catalog.table_path("predicate_index")))
         quads = None
         if os.path.exists(catalog.table_path("quads_spog")):
             quads = catalog.read("quads_spog")
         blocks = catalog.lineage("dict_terms").get("blocks")
-        return cls(
+        directory = None if blocks is None else BlockDirectory(
+            catalog.table_path("dict_terms"), blocks
+        )
+        engine = cls(
             dict_terms=catalog.read("dict_terms"),
             spo=catalog.read("triples_spo"),
             ops=catalog.read("triples_ops"),
             pso=pso,
             stats=stats,
             quads=quads,
-            directory=None if blocks is None else BlockDirectory(
-                catalog.table_path("dict_terms"), blocks
-            ),
+            directory=directory,
         )
+        tables = {}
+        for name, key in (("triples_spo", "s"), ("triples_ops", "o"),
+                          ("triples_pso", "p")):
+            record = catalog.lineage(name) if catalog.exists(name) else None
+            if record is not None and record.get("blocks") is not None:
+                tables[key] = RowGroupDirectory(catalog.table_path(name), record["blocks"])
+        if directory is not None and directory.has_ids and {"s", "o"} <= tables.keys():
+            engine.row_groups = tables
+        return engine
 
     # -- dictionary access ----------------------------------------------
 
@@ -511,6 +583,7 @@ class SparqlEngine:
             scoped.ops = tri
             scoped.pso = None
             scoped.stats = None  # stats describe the full dataset
+            scoped.row_groups = None  # and so do the directories
         if q.from_named:
             ids = [self._const_id("g", t.lex) for t in q.from_named]
             scoped.quads = self.quads.filter(F.col("g").isin(ids))
@@ -647,17 +720,19 @@ class SparqlEngine:
                 batches = [pending]
             pending = []
             for batch in batches:
-                roles: dict = {}
-                df = scan_bgp(
-                    self.spo,
-                    self.ops,
-                    batch,
-                    stats=self.stats,
-                    pso=self.pso,
-                    n_shared=self.n_shared,
-                    roles_out=roles,
-                )
-                bf = _BFrame(df, dict(roles))
+                bf = None if conflicted else self._local_bgp(batch)
+                if bf is None:
+                    roles: dict = {}
+                    df = scan_bgp(
+                        self.spo,
+                        self.ops,
+                        batch,
+                        stats=self.stats,
+                        pso=self.pso,
+                        n_shared=self.n_shared,
+                        roles_out=roles,
+                    )
+                    bf = _BFrame(df, dict(roles))
                 acc = bf if acc is None else self._join(acc, bf, "inner")
 
         for el in ggp.elements:
@@ -731,8 +806,34 @@ class SparqlEngine:
                 continue
             col, _ = self._expr(expr, acc)
             acc.df = acc.df.filter(col.cast("boolean"))
-        acc.df = _drop_aux(acc.df)
+        # the __lex_ decode columns stay: a projection above the group
+        # reuses them (_to_term), and joins drop them (_join)
+        acc.df = _drop_aux(acc.df, keep_lex=True)
         return acc
+
+    def _local_bgp(self, batch: list[tuple]) -> _BFrame | None:
+        """A BGP evaluated on the driver (plans.local.local_bgp) as a
+        local relation: one id column per variable plus its decoded
+        term as `__lex_<v>`, which _lex and _to_term reuse, so a
+        projection, FILTER or LIMIT above it runs no Spark job. None —
+        run scan_bgp — without row-group directories or when a bound
+        is exceeded."""
+        if self.row_groups is None:
+            return None
+        steps, roles = plan_bgp(batch, self.stats)
+        ids = local_bgp(steps, roles, self.row_groups, self.n_shared)
+        if ids is None:
+            return None
+        cols = {v: ids[v] for v in roles}
+        by_role: dict[str, list[str]] = {}
+        for v, role in roles.items():
+            by_role.setdefault(role, []).append(v)
+        for role, names in by_role.items():
+            terms = self.directory.decode(role, [ids[v] for v in names])
+            if terms is not None:
+                cols.update((f"__lex_{v}", t) for v, t in zip(names, terms))
+        spark = self.spo.sparkSession
+        return _BFrame(spark.createDataFrame(pa.table(cols)), dict(roles))
 
     def _apply_exists(
         self, acc: _BFrame, sub: _BFrame, negated: bool
@@ -776,6 +877,7 @@ class SparqlEngine:
         scoped.ops = tri
         scoped.pso = None
         scoped.stats = None
+        scoped.row_groups = None
         return scoped
 
     def _compile_graph_group(self, gg: GraphGroup) -> _BFrame:
@@ -1431,9 +1533,16 @@ class SparqlEngine:
 
     def _to_term(self, bf: _BFrame, v: str) -> None:
         """Replace a variable's ID column with its lexical term string
-        (the ID->Value bridge). Left join so OPTIONAL NULLs survive."""
+        (the ID->Value bridge): its `__lex_<v>` decode column when the
+        frame has one, else a left join to the role's dictionary map,
+        so OPTIONAL NULLs survive."""
         k = bf.kinds[v]
         if k in ("term", "val"):
+            bf.kinds[v] = "term"
+            return
+        hidden = f"__lex_{v}"
+        if hidden in bf.df.columns:
+            bf.df = bf.df.drop(v).withColumnRenamed(hidden, v)
             bf.kinds[v] = "term"
             return
         m = self._role_map(k).select(
@@ -1980,8 +2089,11 @@ def _strip_dataset(q: Query) -> Query:
     return dataclasses.replace(q, from_graphs=[], from_named=[])
 
 
-def _drop_aux(df: DataFrame) -> DataFrame:
-    aux = [c for c in df.columns if c.startswith("__aux") or c.startswith("__lex_")]
+def _drop_aux(df: DataFrame, keep_lex: bool = False) -> DataFrame:
+    """Drop the hidden columns: `__aux*`, and the `__lex_*` decode
+    columns unless keep_lex."""
+    aux = [c for c in df.columns if c.startswith("__aux")
+           or (c.startswith("__lex_") and not keep_lex)]
     return df.drop(*aux) if aux else df
 
 

@@ -383,6 +383,16 @@ SPARQL_QUERIES = {
         "OPTIONAL { ?doc p:mentions <http://example.org/ent/__absent__> ; "
         "p:source ?x } }"
     ),
+    # a bounded BGP evaluated on the driver over the row-group
+    # directories (plans.local): a two-hop through an SH entity (object
+    # of mentions, subject of label), a star on ?doc and a FILTER
+    # over the BGP's decoded terms
+    "sparql_catalog_bgp": _qc(
+        _P
+        + "SELECT ?doc ?e ?l ?src WHERE { ?doc p:mentions ?e . ?e p:label ?l . "
+        '?doc p:source ?src ; p:lang "en"@en ; p:nchars ?n '
+        "FILTER(?n >= 500) }"
+    ),
 }
 
 _QUADS_CTE = """
@@ -677,5 +687,16 @@ LEFT JOIN (
   WHERE a.p = '{_MENTIONS}' AND a.o = 'http://example.org/ent/__absent__'
 ) opt ON opt.s = m.s
 WHERE m.p = '{_MENTIONS}' AND m.o = 'http://example.org/ent/scan'
+""",
+    "sparql_catalog_bgp": _PRE
+    + f"""
+SELECT m.s AS doc, m.o AS e, l.o AS l, src.o AS src
+FROM triples m
+JOIN triples l ON l.s = m.o AND l.p = '{_LABEL}'
+JOIN triples src ON src.s = m.s AND src.p = '{_SOURCE}'
+JOIN triples g ON g.s = m.s AND g.p = '{_LANG}' AND g.o = '"en"@en'
+JOIN triples n ON n.s = m.s AND n.p = '{_NCHARS}'
+WHERE m.p = '{_MENTIONS}'
+  AND CAST(regexp_extract(n.o, '^"([^"]*)"', 1) AS DOUBLE) >= 500
 """,
 }

@@ -219,7 +219,6 @@ def test_incremental_update_equals_full_rebuild(spark, documents, tmp_path):
                        ("triples_ops", ["o", "p", "s"]),
                        ("triples_pso", ["p", "s", "o"]),
                        ("predicate_index", None),
-                       ("object_index", None),
                        ("header", None)]:
         a = cat_inc.read(name)
         b = cat_full.read(name)

@@ -379,27 +379,35 @@ def test_catalog_engine_constants_match_in_memory(spark, published_docs):
 
 
 def test_catalog_engine_query_runs_no_spark_job(spark, published_docs):
-    """Compiling a BGP with new constants against a published warehouse
-    submits no Spark job: constants come from the block directory and
-    n_shared from the dict_terms lineage."""
+    """Building a from_catalog engine and answering point, fresh-subject,
+    two-hop and star BGPs submits no Spark job: the tables are read with
+    their recorded schemas, the predicate stats with pyarrow, constants
+    come from the block directory, n_shared from the dict_terms
+    lineage, and each BGP runs on the driver over the row-group
+    directories, so collecting its projection runs no job either."""
     import time
 
     catalog, _ = published_docs
-    eng = SparqlEngine.from_catalog(catalog)
     ent = _shared_entity(catalog)
+    doc = "http://example.org/doc/3"
+    queries = {
+        "spo_point": f"SELECT ?o WHERE {{ <{doc}> p:lang ?o }}",
+        "fresh_lookup": f"SELECT ?p ?o WHERE {{ <{doc}> ?p ?o }}",
+        "two_hop": f"SELECT ?e ?l WHERE {{ <{doc}> p:mentions ?e . ?e p:label ?l }}",
+        "star": f'SELECT ?doc WHERE {{ ?doc p:mentions <{ent}> ; p:lang "en"@en }}',
+    }
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "test-catalog-lookup"
-    sc.setJobGroup(group, "constant lookup")
+    sc.setJobGroup(group, "engine build and driver-side queries")
     try:
-        df = eng.query(
-            _P + f'SELECT ?doc WHERE {{ ?doc p:mentions <{ent}> ; p:lang "en"@en }}'
-        )
+        eng = SparqlEngine.from_catalog(catalog)
+        rows = {name: eng.query(_P + q).collect() for name, q in queries.items()}
         time.sleep(1)  # the status store hears of jobs asynchronously
         assert list(tracker.getJobIdsForGroup(group)) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert df.count() > 0
+    assert all(rows.values()), {k: len(v) for k, v in rows.items()}
 
 
 def test_catalog_engine_row_group_without_statistics(spark, tmp_path):
