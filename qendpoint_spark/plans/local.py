@@ -40,10 +40,11 @@ LOCAL_BGP_ROWS = 1_000_000
 
 #: bindings up to which a driver-side BGP is handed to Spark. Spark
 #: gets them as one single-partition local relation, built through
-#: Arrow and evaluated by Catalyst's interpreter, at about 5-10 us of
-#: CPU per row: 200k bindings took 1.3-2.7 s at sf0.1 x 40 where the
-#: Spark path took 0.7-1.0 s, and 10k took ~0.2 s on build_docs. The
-#: break-even is near 50k rows.
+#: Arrow and evaluated by Catalyst's interpreter, so the driver path's
+#: CPU grows with rows x variables. Measured on 4 vCPU (warm `count()`
+#: of the same BGP on both paths, 1-4 variables, 5k-200k bindings) the
+#: driver path costs less than the Spark path up to 75k-150k bindings
+#: (75k at four variables); at 50k it costs 32-64% of it.
 LOCAL_BINDING_ROWS = 50_000
 
 _SPO = pa.schema([("s", pa.int64()), ("p", pa.int64()), ("o", pa.int64())])
@@ -51,9 +52,11 @@ _SPO = pa.schema([("s", pa.int64()), ("p", pa.int64()), ("o", pa.int64())])
 
 class RowGroupDirectory:
     """Row groups of one committed table with their [min, max] of a key
-    column: a sorted triple table's leading sort key, or the `id` of a
-    dictionary section. A row group without statistics for the key
-    (min None) is a candidate for every value."""
+    column: a sorted triple table's leading sort key, or the `id` or
+    `term` of a dictionary section. Each row group's range is tested on
+    its own, so overlapping ranges (one dictionary section written as
+    several files) need no special case. A row group without statistics
+    for the key (min None) is a candidate for every value."""
 
     def __init__(self, root: str, blocks: list[dict]):
         self.root = root
@@ -61,11 +64,16 @@ class RowGroupDirectory:
         self.rows = sum(b["rows"] for b in blocks)
         self._ranged = [b for b in blocks if b["min"] is not None]
         self._unranged = [b for b in blocks if b["min"] is None]
-        self._mins = np.array([b["min"] for b in self._ranged], dtype=np.int64)
-        self._maxs = np.array([b["max"] for b in self._ranged], dtype=np.int64)
+        # terms compare as Python strs (code point order, which is the
+        # UTF-8 byte order of the footer statistics)
+        dtype = (object if self._ranged and isinstance(self._ranged[0]["min"], str)
+                 else np.int64)
+        self._mins = np.array([b["min"] for b in self._ranged], dtype=dtype)
+        self._maxs = np.array([b["max"] for b in self._ranged], dtype=dtype)
 
     def candidates(self, values: np.ndarray) -> list[dict]:
-        """Row groups that may hold one of the sorted, unique `values`."""
+        """Row groups that may hold one of the sorted, unique `values`
+        (int64 ids, or an object array of terms)."""
         if not len(values):
             return []
         i = np.searchsorted(values, self._mins)
@@ -95,13 +103,30 @@ def sorted_ids(columns: list) -> np.ndarray:
     return np.unique(np.concatenate(arrays)) if arrays else np.array([], np.int64)
 
 
-def _cross(a: pa.Table, b: pa.Table) -> pa.Table:
-    """Cartesian product of two binding tables (a hash join on a
-    constant key)."""
+def _join(a: pa.Table, b: pa.Table, on: list[str]) -> pa.Table:
+    """Inner join of two binding tables on `on`; with no shared
+    variable, their cartesian product (a hash join on a constant key)."""
+    if on:
+        return a.join(b, on, join_type="inner")
+
     def keyed(t):
         return t.append_column("__aux_k", pa.array(np.zeros(t.num_rows, np.int64)))
 
     return keyed(a).join(keyed(b), "__aux_k").drop_columns(["__aux_k"])
+
+
+def _join_rows(a: pa.Table, b: pa.Table, on: list[str]) -> int:
+    """Rows of `_join(a, b, on)`, from per-key counts of each side,
+    without building the join."""
+    if not on:
+        return a.num_rows * b.num_rows
+
+    def counts(t, name):
+        c = t.group_by(on).aggregate([([], "count_all")])
+        return c.rename_columns([name if n == "count_all" else n for n in c.column_names])
+
+    both = counts(a, "__n_a").join(counts(b, "__n_b"), on)
+    return pc.sum(pc.multiply(both["__n_a"], both["__n_b"])).as_py() or 0
 
 
 def _and(mask, cond):
@@ -116,8 +141,11 @@ def local_bgp(
 ) -> pa.Table | None:
     """Evaluate a planned BGP on the driver: one int64 column per
     variable (in `roles` order), or None as soon as a pattern's
-    candidate row groups exceed LOCAL_BGP_ROWS or the bindings exceed
-    LOCAL_BINDING_ROWS, in which case the caller runs scan_bgp instead.
+    candidate row groups exceed LOCAL_BGP_ROWS or a join would make
+    more than LOCAL_BINDING_ROWS bindings (counted before the join is
+    built), in which case the caller runs scan_bgp instead. A BGP of
+    patterns without variables returns zero columns and one row when
+    every pattern matches, else none.
 
     tables maps a leading key ('s', 'o', optionally 'p') to the
     directory of the table sorted on it. Each pattern reads the table
@@ -168,13 +196,20 @@ def local_bgp(
                     mask = _and(mask, pc.less_equal(t[k], n_shared))
         if mask is not None:
             t = t.filter(mask)
-        leaf = pa.table({v: t[k] for v, k in first.items()})
+        # a pattern without variables keeps its matching rows (0 or 1)
+        # as a zero-column leaf: the join below is then an existence test
+        leaf = t.select(list(first.values())).rename_columns(list(first))
         if acc is None:
             acc = leaf
-        elif step.on:
-            acc = acc.join(leaf, step.on, join_type="inner")
         else:
-            acc = _cross(acc, leaf)
+            # the bound holds before a join is built: a cross product or
+            # a low-cardinality key can make far more rows than either side
+            if (acc.num_rows * leaf.num_rows > LOCAL_BINDING_ROWS
+                    and _join_rows(acc, leaf, step.on) > LOCAL_BINDING_ROWS):
+                return None
+            acc = _join(acc, leaf, step.on)
         if acc.num_rows > LOCAL_BINDING_ROWS:
             return None
+        if not acc.num_rows:
+            return pa.schema([(v, pa.int64()) for v in roles]).empty_table()
     return acc.select(list(roles))

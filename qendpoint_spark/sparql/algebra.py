@@ -31,10 +31,10 @@ strings (predicate IDs are their own namespace).
 from __future__ import annotations
 
 import os
-from bisect import bisect_right
 from dataclasses import dataclass, field
-from itertools import accumulate, combinations
+from itertools import combinations
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -266,14 +266,14 @@ class BlockDirectory:
     table's Parquet row groups and the directory is the list the
     catalog recorded at commit (`blocks` in the dict_terms lineage):
     per row group its section, term min/max, id min/max and row count.
+    Each section has two `RowGroupDirectory`s over those row groups,
+    one keyed by term and one by id.
 
-    `lookup` (locate: term -> id) binary-searches the role's sections
-    for the row groups whose [min, max] holds the term, reads only
+    `lookup` (locate: term -> id) selects the row groups of the role's
+    sections whose term range may hold one of the terms, reads only
     their `term` and `id` columns with pyarrow and matches exactly. Row
     groups of one section may overlap (each literal datatype is its own
-    file), so the search walks back from the last block starting at or
-    before the term while the running max of the earlier blocks still
-    reaches it. A row group without term statistics is a candidate for
+    file), and a row group without term statistics is a candidate for
     every term. `lookups` and `row_groups_read` count the terms
     resolved and the row groups read for them.
 
@@ -285,59 +285,37 @@ class BlockDirectory:
     looks terms up."""
 
     def __init__(self, root: str, blocks: list[dict]):
-        self.root = root
-        self.blocks = blocks
         self.lookups = 0
         self.row_groups_read = 0
         self.n_shared = sum(b["rows"] for b in blocks if b["section"] == "SH")
-        self._sections: dict[str, tuple] = {}
-        for sec in {b["section"] for b in blocks}:
-            ranged = sorted(
-                (b for b in blocks if b["section"] == sec and b["min"] is not None),
-                key=lambda b: b["min"],
-            )
-            self._sections[sec] = (
-                [b["min"] for b in ranged],
-                list(accumulate((b["max"] for b in ranged), max)),
-                ranged,
-                [b for b in blocks if b["section"] == sec and b["min"] is None],
-            )
+        sections = {b["section"] for b in blocks}
+        self._terms = {
+            sec: RowGroupDirectory(root, [b for b in blocks if b["section"] == sec])
+            for sec in sections
+        }
         self.has_ids = all("id_min" in b for b in blocks)
         self._ids = {
             sec: RowGroupDirectory(root, [
                 {**b, "min": b["id_min"], "max": b["id_max"]}
                 for b in blocks if b["section"] == sec
             ])
-            for sec in self._sections
+            for sec in sections
         } if self.has_ids else {}
-
-    def _candidates(self, role: str, term: str):
-        for sec in _ROLE_SECTIONS[role]:
-            if sec not in self._sections:
-                continue
-            mins, reach, ranged, unranged = self._sections[sec]
-            i = bisect_right(mins, term)
-            while i > 0 and reach[i - 1] >= term:
-                i -= 1
-                if ranged[i]["max"] >= term:
-                    yield ranged[i]
-            yield from unranged
 
     def lookup(self, role: str, terms: list[str]) -> dict[str, int]:
         """{term: id} for the given terms found in the role's sections."""
-        wanted: dict[tuple[str, int], list[str]] = {}
-        for term in terms:
-            for b in self._candidates(role, term):
-                wanted.setdefault((b["path"], b["row_group"]), []).append(term)
+        wanted = np.array(sorted(set(terms)), dtype=object)
+        value_set = pa.array(wanted, pa.string())
         self.lookups += len(terms)
-        self.row_groups_read += len(wanted)
         found: dict[str, int] = {}
-        for (path, rg), ts in wanted.items():
-            with pq.ParquetFile(os.path.join(self.root, path)) as f:
-                block = f.read_row_group(rg, columns=["term", "id"])
-            hit = block.filter(
-                pc.is_in(block["term"], value_set=pa.array(ts, pa.string()))
-            )
+        for sec in _ROLE_SECTIONS[role]:
+            if sec not in self._terms:
+                continue
+            d = self._terms[sec]
+            blocks = d.candidates(wanted)
+            self.row_groups_read += len(blocks)
+            block = d.read(blocks, ["term", "id"], _TERM_ID)
+            hit = block.filter(pc.is_in(block["term"], value_set=value_set))
             found.update(zip(hit["term"].to_pylist(), hit["id"].to_pylist()))
         return found
 
@@ -417,9 +395,9 @@ class SparqlEngine:
         records, and the predicate stats with pyarrow.
 
         Constants resolve through the block directory that the catalog
-        recorded in the dict_terms lineage (`BlockDirectory`): a binary
-        search over per-row-group term ranges, then a pyarrow read of
-        the candidate row groups' term and id columns. `n_shared` is
+        recorded in the dict_terms lineage (`BlockDirectory`): the row
+        groups whose term range may hold the constant are read with
+        pyarrow (their term and id columns only). `n_shared` is
         the sum of the directory's SH rows. So compiling a query runs
         no Spark job for its constants.
 
@@ -824,7 +802,10 @@ class SparqlEngine:
         ids = local_bgp(steps, roles, self.row_groups, self.n_shared)
         if ids is None:
             return None
-        cols = {v: ids[v] for v in roles}
+        # a BGP without variables: its one row or none, as the seed
+        # column the unit solution has (_unit_frame)
+        cols = {v: ids[v] for v in roles} if roles else {
+            "__aux_unit": pa.array(np.ones(ids.num_rows, np.int32))}
         by_role: dict[str, list[str]] = {}
         for v, role in roles.items():
             by_role.setdefault(role, []).append(v)

@@ -112,6 +112,12 @@ _LOCAL_QUERIES = {
     "absent_object": "SELECT ?s WHERE { ?s <p> <http://absent> }",
     "absent_subject": "SELECT ?p ?o WHERE { <http://absent> ?p ?o }",
     "absent_predicate": "SELECT ?s ?o WHERE { ?s <absent> ?o }",
+    # a pattern without variables is an existence test on the bindings
+    "ground_only": "SELECT * WHERE { <A> <q> <B> }",
+    "ground_and_vars": "SELECT ?x ?y WHERE { <A> <q> <B> . ?x <p> ?y }",
+    "ground_filter": "SELECT ?s WHERE { ?s <n> ?v . <S2> <r> \"short\" FILTER(?v > 3) }",
+    "absent_ground": "SELECT ?x ?y WHERE { ?x <p> ?y . <A> <q> <A> }",
+    "absent_ground_only": "SELECT * WHERE { <B> <q> <A> }",
 }
 
 
@@ -138,6 +144,20 @@ def test_local_bgp_known_answers(engines):
     assert rows == [("S2",)]
 
 
+@pytest.mark.parametrize("text, answer", [
+    ("ASK { <A> <q> <B> }", True),
+    ("ASK { <A> <q> <A> }", False),
+    ("ASK { <A> <q> <B> . ?x <p> <A> }", True),
+    ("ASK { <A> <q> <http://absent> }", False),
+    ('ASK { <A> <q> <B> . <S2> <r> "short" }', True),
+])
+def test_local_bgp_ask_ground(engines, text, answer):
+    local, spark_eng = engines
+    rows, _c, _s, taken = _run(local, text)
+    assert taken == [True]
+    assert rows == _run(spark_eng, text)[0] == [(answer,)]
+
+
 def test_local_bgp_limit(engines):
     local, spark_eng = engines
     full, *_ = _run(spark_eng, "SELECT ?x ?y WHERE { ?x <p> ?y }")
@@ -161,6 +181,29 @@ def test_local_bgp_falls_back(engines, monkeypatch):
         assert taken == [False] and rows == expected, bound
 
 
+@pytest.mark.parametrize("text", [
+    # 3 x 4 rows with no shared variable: a 12-row cross product
+    "SELECT ?s ?v ?x ?y WHERE { ?s <n> ?v . ?x <p> ?y }",
+    # 4 x 4 rows on ?y, which holds A twice on each side: 6 rows
+    "SELECT ?x ?z ?y WHERE { ?x <p> ?y . ?z <p> ?y }",
+])
+def test_local_bgp_bound_checked_before_join(engines, monkeypatch, text):
+    """Both inputs of a join fit LOCAL_BINDING_ROWS but its result
+    does not: the BGP runs on Spark and the join is never built on
+    the driver."""
+    local, spark_eng = engines
+    expected = _run(spark_eng, text)[0]
+    assert len(expected) > 5
+
+    def unbuilt(*args):
+        raise AssertionError("join built past the bindings bound")
+
+    monkeypatch.setattr(local_mod, "LOCAL_BINDING_ROWS", 5)
+    monkeypatch.setattr(local_mod, "_join", unbuilt)
+    rows, _c, _s, taken = _run(local, text)
+    assert taken == [False] and rows == expected
+
+
 def test_local_bgp_runs_no_spark_job(spark, engines):
     """A projection, FILTER or LIMIT above a driver-side BGP folds into
     the local relation: collecting it submits no Spark job."""
@@ -178,14 +221,29 @@ def test_local_bgp_runs_no_spark_job(spark, engines):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_update_where_on_driver_matches_spark_path(spark, tmp_path, monkeypatch):
+_UPDATES = {
+    "delete_insert": (
+        "DELETE { ?x <q> ?y } INSERT { ?y <rev_q> ?x } "
+        "WHERE { ?x <q> ?y . ?y <p> ?z }",
+        [True, True],  # the INSERT and DELETE templates
+        [("B", "rev_q", "A")],
+        [("A", "q", "B")],
+    ),
+    "delete_where_ground": (
+        "DELETE WHERE { <A> <q> <B> . ?s <n> ?v }",
+        [True],
+        [("A", "p", "A")],
+        [("A", "q", "B"), ("S1", "n", f'"5"^^<{_INT}>')],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_UPDATES))
+def test_update_where_on_driver_matches_spark_path(spark, tmp_path, monkeypatch, name):
     """DELETE/INSERT WHERE instantiates its templates through
     from_catalog; the published result is the same whether its WHERE
     ran on the driver or on Spark."""
-    update = (
-        "DELETE { ?x <q> ?y } INSERT { ?y <rev_q> ?x } "
-        "WHERE { ?x <q> ?y . ?y <p> ?z }"
-    )
+    update, paths, kept, deleted = _UPDATES[name]
     taken = []
     plain = SparqlEngine._local_bgp
 
@@ -202,10 +260,10 @@ def test_update_where_on_driver_matches_spark_path(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(SparqlEngine, "_local_bgp", spy)
     on_driver = _publish(spark, tmp_path / "driver")
     apply_update(spark, on_driver, update, num_partitions=2)
-    assert taken == [True, True]  # the INSERT and DELETE templates
+    assert taken == paths
     monkeypatch.setattr(SparqlEngine, "_local_bgp", lambda self, batch: None)
     on_spark = _publish(spark, tmp_path / "spark")
     apply_update(spark, on_spark, update, num_partitions=2)
     got = published(on_driver)
     assert got == published(on_spark)
-    assert ("B", "rev_q", "A") in got and ("A", "q", "B") not in got
+    assert set(kept) <= set(got) and not set(deleted) & set(got)
