@@ -27,7 +27,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from qendpoint_spark.plans.pattern import BgpStep, pattern_vars
+from qendpoint_spark.plans.pattern import BgpStep, PatternStats, pattern_vars
 
 #: rows of candidate row groups up to which a pattern is read on the
 #: driver. Measured on 4 vCPU: pyarrow reads, filters and hash-joins
@@ -138,14 +138,17 @@ def local_bgp(
     roles: dict[str, str],
     tables: dict[str, RowGroupDirectory],
     n_shared: int | None = None,
+    stats: PatternStats | None = None,
 ) -> pa.Table | None:
     """Evaluate a planned BGP on the driver: one int64 column per
     variable (in `roles` order), or None as soon as a pattern's
     candidate row groups exceed LOCAL_BGP_ROWS or a join would make
     more than LOCAL_BINDING_ROWS bindings (counted before the join is
-    built), in which case the caller runs scan_bgp instead. A BGP of
-    patterns without variables returns zero columns and one row when
-    every pattern matches, else none.
+    built), in which case the caller runs scan_bgp instead. A first
+    pattern `?s <p> ?o` binds exactly the predicate's n_triples (from
+    `stats`), so past the bound it returns None before reading a row
+    group. A BGP of patterns without variables returns zero columns
+    and one row when every pattern matches, else none.
 
     tables maps a leading key ('s', 'o', optionally 'p') to the
     directory of the table sorted on it. Each pattern reads the table
@@ -155,6 +158,11 @@ def local_bgp(
     rows are filtered on the key's values, the pattern's constants,
     repeated variables and the shared-section guard of 'so'
     variables, then hash-joined to the bindings so far."""
+    s, p, o = steps[0].pattern
+    if (stats is not None and isinstance(s, str) and isinstance(o, str)
+            and s != o and not isinstance(p, str)
+            and stats.by_p.get(p, {}).get("n_triples", 0) > LOCAL_BINDING_ROWS):
+        return None
     acc: pa.Table | None = None
     for step in steps:
         pat = dict(zip("spo", step.pattern))

@@ -21,6 +21,11 @@ for set-at-a-time DataFrame ops:
                 (frontier ⋈ edges) join plus an anti-join against the
                 known set, both keyed on 8-byte ids
 
+Edge frames over quads also carry the graph id `g`, and every join,
+union and dedup below keys on it as well: `p+` inside `GRAPH ?g` is one
+closure whose pairs stay within their graph, whatever the number of
+graphs.
+
 Scale notes (north_rule): every closure round shuffles only the NEW
 pairs (the semi-naive differential — naive closure re-derives the full
 reachability set each round), the per-round plan is cut with an eager
@@ -38,6 +43,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _keys(edges: DataFrame) -> list[str]:
+    """The key columns an edge frame carries besides src and dst (the
+    graph id of a graph-scoped path)."""
+    return [c for c in edges.columns if c not in ("src", "dst")]
+
+
 def path_step(
     spo: DataFrame,
     ops: DataFrame,
@@ -46,20 +57,21 @@ def path_step(
     inverse: bool = False,
 ) -> DataFrame:
     """Base path step `p` (or `^p`): the (subject, object) pairs of
-    triples with predicate id `p`, as (src, dst). Routed through
-    scan_pattern so a materialized PSO table serves the bound-predicate
-    mask with leading-key pruning."""
+    triples with predicate id `p`, as (src, dst), plus `g` over quad
+    tables. Routed through scan_pattern so a materialized PSO table
+    serves the bound-predicate mask with leading-key pruning."""
     from qendpoint_spark.plans.pattern import scan_pattern
 
     rows = scan_pattern(spo, ops, p=p, pso=pso)
     a, b = ("o", "s") if inverse else ("s", "o")
-    return rows.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    keys = [c for c in rows.columns if c not in ("s", "p", "o")]
+    return rows.select(F.col(a).alias("src"), F.col(b).alias("dst"), *keys)
 
 
 def path_inverse(edges: DataFrame) -> DataFrame:
     """`^path`: swap endpoints — a projection, never a shuffle."""
     return edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
+        F.col("dst").alias("src"), F.col("src").alias("dst"), *_keys(edges)
     )
 
 
@@ -76,17 +88,18 @@ def path_seq(
     given both sides are clamped to `id <= n_shared` (see
     plans.pattern.scan_bgp — exact without the clamp only when every
     middle term is SH, as in this repo's grammar)."""
+    keys = _keys(first)
     mid = second.select(
-        F.col("src").alias("__mid"), F.col("dst").alias("dst2")
+        F.col("src").alias("__mid"), F.col("dst").alias("dst2"), *keys
     )
-    lhs = first
+    lhs = first.withColumnRenamed("dst", "__mid")
     if n_shared is not None:
-        lhs = lhs.filter(F.col("dst") <= F.lit(n_shared))
+        lhs = lhs.filter(F.col("__mid") <= F.lit(n_shared))
         mid = mid.filter(F.col("__mid") <= F.lit(n_shared))
     return (
-        lhs.join(mid, lhs["dst"] == mid["__mid"])
-        .select(F.col("src"), F.col("dst2").alias("dst"))
-        .dropDuplicates(["src", "dst"])
+        lhs.join(mid, ["__mid", *keys])
+        .select(F.col("src"), F.col("dst2").alias("dst"), *keys)
+        .dropDuplicates()
     )
 
 
@@ -95,7 +108,7 @@ def path_alt(*alternatives: DataFrame) -> DataFrame:
     out = alternatives[0]
     for alt in alternatives[1:]:
         out = out.unionByName(alt)
-    return out.dropDuplicates(["src", "dst"])
+    return out.dropDuplicates()
 
 
 def transitive_closure(
@@ -111,23 +124,21 @@ def transitive_closure(
     discovered in round r-1 against the base edges, then anti-joins the
     known set so already-derived pairs never re-enter the frontier —
     the frontier shrinks to empty on a diameter-d graph after d rounds.
-    Both the join and the anti-join key on single long columns; the
-    known set is re-checkpointed as it grows so the anti-join's right
-    side stays a flat scan instead of a deepening union plan.
+    Both the join and the anti-join key on long id columns (one, plus
+    the graph id when the edges carry it); the known set is
+    re-checkpointed as it grows so the anti-join's right side stays a
+    flat scan instead of a deepening union plan.
     """
     # NOTE: no src != dst filtering anywhere — SPARQL `p+` relates a
     # node to itself whenever a cycle returns to it (and a self-loop
     # edge is a valid 1-step path); the saturating anti-join terminates
     # regardless, because the reachable pair space is finite.
-    base = (
-        edges.select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
+    keys = _keys(edges)
+    base = edges.dropDuplicates().localCheckpoint(eager=True)
     # (src -> dst) joined on dst == base.src extends every known path by
     # one edge; project base once with renamed columns for the join
     ext = base.select(
-        F.col("src").alias("__mid"), F.col("dst").alias("__next")
+        F.col("src").alias("__mid"), F.col("dst").alias("__next"), *keys
     )
     if n_shared is not None:
         # extension joins object-role dst to subject-role src: term
@@ -139,12 +150,13 @@ def transitive_closure(
     while hops != max_hops and max_iterations > 0:
         max_iterations -= 1
         grown = (
-            frontier.join(ext, frontier["dst"] == ext["__mid"])
-            .select(F.col("src"), F.col("__next").alias("dst"))
-            .dropDuplicates(["src", "dst"])
+            frontier.withColumnRenamed("dst", "__mid")
+            .join(ext, ["__mid", *keys])
+            .select(F.col("src"), F.col("__next").alias("dst"), *keys)
+            .dropDuplicates()
         )
         new = grown.join(
-            known, ["src", "dst"], "left_anti"
+            known, ["src", "dst", *keys], "left_anti"
         ).localCheckpoint(eager=True)
         if not new.take(1):
             break
@@ -162,11 +174,12 @@ def path_zero_or_more(
     scoped here to the nodes incident to the edge set unless a wider
     `nodes(src)` universe is supplied."""
     plus = transitive_closure(edges)
+    keys = _keys(edges)
     if nodes is None:
         nodes = (
-            edges.select("src")
-            .unionByName(edges.select(F.col("dst").alias("src")))
+            edges.select("src", *keys)
+            .unionByName(edges.select(F.col("dst").alias("src"), *keys))
             .distinct()
         )
-    zero = nodes.select("src", F.col("src").alias("dst"))
+    zero = nodes.select("src", F.col("src").alias("dst"), *keys)
     return path_alt(plus, zero)

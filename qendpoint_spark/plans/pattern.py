@@ -66,21 +66,23 @@ def scan_pattern(
     pos: DataFrame | None = None,
     osp: DataFrame | None = None,
 ) -> DataFrame:
-    """Return matching (s,p,o) rows using the best-sorted table.
-    Without an alternate-order materialization the mask degrades to the
-    nearest mandatory table (SPO/OPS) — correct, less pruned; the
-    reference has the same fallback when an alternate-order index was
-    not generated."""
+    """Return matching (s,p,o) rows using the best-sorted table, with
+    the graph id `g` when the tables are quads. Without an
+    alternate-order materialization the mask degrades to the nearest
+    mandatory table (SPO/OPS) — correct, less pruned; the reference
+    has the same fallback when an alternate-order index was not
+    generated."""
     tables = {"spo": spo, "ops": ops, "pso": pso, "sop": sop,
               "pos": pos, "osp": osp}
     order = choose_order(s, p, o)
     if tables[order] is None:
         order = _FALLBACK[order]
     df = tables[order]
+    keep = [c for c in ("s", "p", "o", "g") if c in df.columns]
     for col, val in (("s", s), ("p", p), ("o", o)):
         if val is not None:
             df = df.filter(F.col(col) == val)
-    return df.select("s", "p", "o")
+    return df.select(*keep)
 
 
 # --- cardinality-driven BGP planning ------------------------------------
@@ -135,11 +137,12 @@ BGP_BROADCAST_ROWS = 100_000
 
 
 def pattern_vars(pat: tuple) -> dict[str, str]:
-    """{variable: first position} of one (s, p, o) pattern, in s, p, o
-    order; a variable repeated within the pattern keeps its first
-    position (the others become equality filters)."""
+    """{variable: first position} of one (s, p, o) pattern, or of an
+    (s, p, o, g) pattern over quads, in s, p, o, g order; a variable
+    repeated within the pattern keeps its first position (the others
+    become equality filters)."""
     out: dict[str, str] = {}
-    for k, v in zip("spo", pat):
+    for k, v in zip("spog", pat):
         if isinstance(v, str):
             out.setdefault(v, k)
     return out
@@ -149,7 +152,7 @@ def pattern_vars(pat: tuple) -> dict[str, str]:
 class BgpStep:
     """One pattern of a planned BGP, in join order."""
 
-    pattern: tuple  # (s, p, o): int id (bound) or variable name
+    pattern: tuple  # (s, p, o[, g]): int id (bound) or variable name
     on: list[str]  # variables shared with the steps before it
     est: float  # estimated matching rows of the pattern alone
     distincts: dict[str, float]  # V(var) estimate per variable
@@ -165,22 +168,22 @@ def plan_bgp(
     the textbook selectivity-driven BGP ordering. Without stats a
     pattern's estimate is its number of variables.
 
-    roles: the ID space of each variable — 's', 'o' or 'p' for the
-    position it is bound in, 'so' for a variable bound in subject
-    position by one pattern and object position by another (see
-    scan_bgp's n_shared). A variable in both predicate and
-    subject/object position raises NotImplementedError: predicate ids
-    are their own namespace."""
+    roles: the ID space of each variable — 's', 'o', 'p' or 'g' for
+    the position it is bound in, 'so' for a variable bound in subject
+    position and in object position (see scan_bgp's n_shared). A
+    variable in predicate or graph position and in any other position
+    raises NotImplementedError: predicate and graph ids are their own
+    namespaces."""
 
     def est(pat):
         if stats is None:
-            return 3 - len(pattern_vars(pat))
-        return stats.estimate(*(None if isinstance(v, str) else v for v in pat))
+            return len(pat) - len(pattern_vars(pat))
+        return stats.estimate(*(None if isinstance(v, str) else v for v in pat[:3]))
 
     def distincts(pat) -> dict[str, float]:
         """V(var): distinct-value estimate per variable of one leaf,
         from the predicate stats (n_subjects/n_objects)."""
-        s, p, o = pat
+        s, p, o = pat[:3]
         st = None if stats is None or isinstance(p, str) else stats.by_p.get(p)
         if st is None:
             return {}
@@ -204,18 +207,20 @@ def plan_bgp(
         seen |= set(names)
     roles: dict[str, str] = {}
     for step in steps:
-        for v, role in pattern_vars(step.pattern).items():
+        for role, v in zip("spog", step.pattern):
+            if not isinstance(v, str):
+                continue
             prev = roles.get(v)
             if prev is None or prev == role:
                 roles[v] = role
-            elif prev != "p" and role != "p":
+            elif {prev, role} <= {"s", "o", "so"}:
                 roles[v] = "so"  # joined across roles -> SH-only
             else:
                 raise NotImplementedError(
-                    f"variable ?{v} is used in both predicate and "
-                    "subject/object position; predicate IDs live in a "
-                    "separate namespace — rewrite the query or join on "
-                    "decoded terms"
+                    f"variable ?{v} is used in both {prev!r} and {role!r} "
+                    "position; predicate and graph IDs live in separate "
+                    "namespaces — rewrite the query or join on decoded "
+                    "terms"
                 )
     return steps, roles
 
@@ -232,7 +237,11 @@ def scan_bgp(
 ) -> DataFrame:
     """Execute a basic graph pattern on Spark: each pattern is an
     (s, p, o) tuple whose elements are ints (bound) or strings
-    (variable names). Returns one column per variable.
+    (variable names). Returns one column per variable. Over quad
+    tables (s, p, o, g) a pattern may carry a fourth element, the
+    variable that binds the quad's graph id: patterns that share it
+    join within one graph (a constant graph is a filter on the
+    tables instead).
 
     Join order and variable roles come from plan_bgp. BUILD/PROBE
     side: when stats estimate one side under `broadcast_rows`, that
@@ -268,7 +277,7 @@ def scan_bgp(
         # the variable's column ONCE (else downstream joins see a
         # duplicate column name)
         first = pattern_vars(pat)
-        for k, v in zip("spo", pat):
+        for k, v in zip("spog", pat):
             if isinstance(v, str) and first[v] != k:
                 df = df.filter(F.col(first[v]) == F.col(k))
                 if n_shared is not None and {first[v], k} == {"s", "o"}:

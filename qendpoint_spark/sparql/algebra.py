@@ -19,7 +19,7 @@ Supported subset (documented, raising loudly outside it):
   COALESCE/IF/isIRI/isLiteral/isBlank/sameTerm); GROUP BY + COUNT/SUM/
   AVG/MIN/MAX/SAMPLE/GROUP_CONCAT + HAVING; DISTINCT; ORDER BY;
   LIMIT/OFFSET. Not supported: SERVICE, UNDEF in VALUES, aggregate
-  expressions over computed args, paths/nested groups inside GRAPH.
+  expressions over computed args.
 
 ID-space correctness: a variable joining subject- against object-role
 bindings is clamped to the shared section (id <= n_shared) — see
@@ -30,6 +30,7 @@ strings (predicate IDs are their own namespace).
 
 from __future__ import annotations
 
+import copy
 import os
 from dataclasses import dataclass, field
 from itertools import combinations
@@ -53,7 +54,6 @@ from qendpoint_spark.plans import (
     path_inverse,
     path_seq,
     path_step,
-    path_zero_or_more,
     plan_bgp,
     scan_bgp,
     transitive_closure,
@@ -100,6 +100,12 @@ from qendpoint_spark.sparql.parser import (
 #: joined across subject/object roles (known SH); 'term' = lexical
 #: term string; 'val' = computed plain value (BIND / aggregate).
 _ID_KINDS = ("s", "o", "p", "so", "g")
+
+#: the graph key: inside a GRAPH body every binding frame carries the
+#: graph id of its solutions in this column (kind 'g'). It is not a
+#: SPARQL variable, so FILTER and BIND in the body do not see it; the
+#: GRAPH boundary renames it to the graph variable or drops it.
+_GKEY = "__g"
 
 # extracts the lexical value of a literal: group 1 of `"<value>"` with
 # an optional @lang / ^^<dt> suffix; (?s) so embedded newlines match
@@ -344,7 +350,16 @@ class SparqlEngine:
     Parameters mirror what the rest of the repo materializes: the
     encoded (s,p,o) table (or prebuilt spo/ops sorted tables), the
     dictionary, optionally the PSO table and PatternStats for routed
-    scans and stats-driven BGP ordering.
+    scans and stats-driven BGP ordering, and the encoded (s,p,o,g)
+    quads that GRAPH patterns and FROM / FROM NAMED range over.
+
+    GRAPH follows SPARQL 1.1 §18.6: Graph(?g, P) is the union over the
+    named graphs i of Join(eval(D[i], P), {?g -> i}). Every GRAPH body
+    compiles once through `_compile_group`, whatever its shape and
+    however many graphs there are (`_compile_graph_group`): its leaves
+    read the quads and carry the graph id as a key column that joins,
+    unions, MINUS, EXISTS, DISTINCT, GROUP BY and LIMIT keep, so no
+    named graph is enumerated.
     """
 
     def __init__(
@@ -383,6 +398,9 @@ class SparqlEngine:
         self.row_groups: dict[str, RowGroupDirectory] | None = None
         self._maps: dict[str, DataFrame] = {}
         self._consts: dict[tuple[str, str], int] = {}
+        # the graph domain (one _GKEY column) of the GRAPH body this
+        # engine copy compiles; None outside GRAPH
+        self._graphs: DataFrame | None = None
 
     @classmethod
     def from_catalog(cls, catalog) -> "SparqlEngine":
@@ -543,8 +561,6 @@ class SparqlEngine:
         and whose GRAPH patterns range only over the FROM NAMED set —
         the SPARQL 1.1 dataset construction, done as quad-table
         filters (gid IN (...) pushes to the scan)."""
-        import copy
-
         if self.quads is None:
             raise NotImplementedError(
                 "FROM / FROM NAMED need a quads table"
@@ -622,6 +638,8 @@ class SparqlEngine:
         filters: list = []
         values: list[ValuesClause] = []
         bn = [0]
+        # inside a GRAPH body every pattern also binds the graph key
+        graph = () if self._graphs is None else (_GKEY,)
 
         def seed_values(el_vars: set[str]) -> None:
             """Spec 18.2.2.6 joins VALUES at its syntactic position;
@@ -718,6 +736,7 @@ class SparqlEngine:
                 if isinstance(el.p, (Term, Var)):
                     pending.append(
                         (conv(el.s, "s"), conv(el.p, "p"), conv(el.o, "o"))
+                        + graph
                     )
                 else:
                     flush()
@@ -799,7 +818,7 @@ class SparqlEngine:
         if self.row_groups is None:
             return None
         steps, roles = plan_bgp(batch, self.stats)
-        ids = local_bgp(steps, roles, self.row_groups, self.n_shared)
+        ids = local_bgp(steps, roles, self.row_groups, self.n_shared, self.stats)
         if ids is None:
             return None
         # a BGP without variables: its one row or none, as the seed
@@ -834,156 +853,70 @@ class SparqlEngine:
             acc, sub, "left_anti" if negated else "left_semi", exists=True
         )
 
-    # GRAPH ?g { <complex body> } evaluates the body once per named
-    # graph; above this many graphs the plan (a Catalyst union of that
-    # many subtrees) stops being reasonable and we fail loudly. Plain
-    # BGP+FILTER bodies never enumerate — they thread ?g through the
-    # quad scan and scale to any graph count.
-    max_graph_enum = 64
-
-    def _graph_scoped(self, gid: int) -> "SparqlEngine":
-        """Shallow engine copy whose default graph is one named graph:
-        spo/ops become the gid-filtered quad scan (the filter pushes to
-        the parquet scan), dataset-wide stats/pso are dropped. The
-        named-graph set (self.quads) is kept — a GRAPH nested inside a
-        GRAPH ranges over the dataset's graphs, not the outer one."""
-        import copy
-
-        scoped = copy.copy(self)
-        tri = (
-            self.quads.filter(F.col("g") == F.lit(gid))
-            .select("s", "p", "o")
-        )
-        scoped.spo = tri
-        scoped.ops = tri
-        scoped.pso = None
-        scoped.stats = None
-        scoped.row_groups = None
-        return scoped
-
     def _compile_graph_group(self, gg: GraphGroup) -> _BFrame:
-        """GRAPH (iri|var) { group } over the encoded quads table.
+        """GRAPH (iri|var) { group }, as SPARQL 1.1 §18.6 defines it:
+        the union over the named graphs i of Join(eval(D[i], P),
+        {?g -> i}).
 
-        Plain bodies (triple patterns + FILTER) thread the graph
-        component through each quad scan: bound (const gid) or
-        projected (?g, kind 'g' — its own ID namespace, decoded via
-        the broadcast G section); leaves join through the same
-        role-guarded _join as everything else, at any graph count.
+        The body compiles once, through `_compile_group`, on an engine
+        copy whose default-graph tables are the named graphs' quads.
+        Every leaf there carries the quad's graph id as the key column
+        `_GKEY`, so one plan evaluates the body in every graph at once:
+        joins, unions, OPTIONAL, EXISTS and path closures match only
+        within a graph, DISTINCT, GROUP BY and a subselect's LIMIT
+        apply per graph, and what does not depend on the graph (the
+        unit solution, VALUES, a nested GRAPH) is repeated over the
+        scope's graph domain. MINUS removes nothing when the two sides
+        share no variable other than the key (§8.3). No named graph is
+        enumerated, so the plan's size does not depend on their number.
 
-        Complex bodies (property paths, OPTIONAL/MINUS/UNION, nested
-        groups, BIND, subselects) compile through the ENTIRE group
-        machinery on a graph-scoped engine (`_graph_scoped`): for a
-        constant graph that is one pushed-down gid filter; for a graph
-        variable the body runs once per named graph (G section) and
-        the branches union, guarded by `max_graph_enum`. Reference
-        anchor: RDF4J evaluates these via its dataset-aware
-        StatementPattern scoping (qendpoint-store ComplianceTest.java
-        pins the W3C semantics)."""
+        The body does not see the graph variable: a FILTER on ?g inside
+        it tests an unbound variable, as in the per-graph evaluation.
+        At the boundary the key becomes ?g, decoded through the G
+        section, or is dropped for a constant graph, which is a
+        pushed-down `g = gid` filter on the quads. The named graphs are
+        the quads' (after FROM NAMED); a nested GRAPH ranges over them
+        too, not over the enclosing graph."""
         if self.quads is None:
             raise NotImplementedError(
                 "GRAPH patterns need a quads table: "
                 "SparqlEngine(..., quads=encoded_spog)"
             )
-        simple = all(
-            isinstance(el, FilterClause)
-            or (
-                isinstance(el, TriplePattern)
-                and isinstance(el.p, (Term, Var))
-            )
-            for el in gg.group.elements
-        )
-        if not simple:
-            if isinstance(gg.graph, Term):
-                gid = self._const_id("g", gg.graph.lex)
-                return self._graph_scoped(gid)._compile_group(gg.group)
-            from qendpoint_spark.dictionary.builder import graph_map
-
-            gids = [
-                int(r["gid"])
-                for r in graph_map(self.dict_terms)
-                .select("gid")
-                .collect()
-            ]
-            if len(gids) > self.max_graph_enum:
+        quads = self.quads
+        if isinstance(gg.graph, Term):
+            gid = self._const_id("g", gg.graph.lex)
+            quads = quads.filter(F.col("g") == F.lit(gid))
+        scoped = copy.copy(self)
+        scoped._n_shared = self.n_shared
+        scoped.spo = scoped.ops = quads
+        scoped.pso = scoped.stats = scoped.row_groups = None
+        scoped._graphs = quads.select(F.col("g").alias(_GKEY)).distinct()
+        bf = scoped._compile_group(gg.group)
+        del bf.kinds[_GKEY]
+        if isinstance(gg.graph, Var):
+            name = gg.graph.name
+            if name in bf.kinds:
                 raise NotImplementedError(
-                    f"GRAPH ?{gg.graph.name} over a complex body "
-                    f"enumerates named graphs; {len(gids)} graphs "
-                    f"exceed max_graph_enum={self.max_graph_enum}. "
-                    "Raise engine.max_graph_enum, or rewrite the body "
-                    "as plain triple patterns (which scale to any "
-                    "graph count)."
+                    f"?{name} names the graph and is bound inside its "
+                    "GRAPH body; graph ids are their own namespace"
                 )
-            if not gids:
-                bf = self._graph_scoped(-1)._compile_group(gg.group)
-                bf.df = bf.df.withColumn(
-                    gg.graph.name, F.lit(None).cast("long")
-                ).limit(0)
-                bf.kinds[gg.graph.name] = "g"
-                return bf
-            branches = []
-            for gid in sorted(gids):
-                bf = self._graph_scoped(gid)._compile_group(gg.group)
-                gname = gg.graph.name
-                if gname in bf.kinds:
-                    raise ValueError(
-                        f"GRAPH variable ?{gname} rebound inside body"
-                    )
-                bf.df = bf.df.withColumn(gname, F.lit(gid))
-                bf.kinds[gname] = "g"
-                branches.append(bf)
-            return self._union(branches)
-        acc: _BFrame | None = None
-        filters = []
-        for el in gg.group.elements:
-            if isinstance(el, FilterClause):
-                filters.append(el.expr)
-                continue
-            df = self.quads
-            kinds: dict = {}
-            var_pos: dict[str, str] = {}
-            for col, x, role in (
-                ("s", el.s, "s"),
-                ("p", el.p, "p"),
-                ("o", el.o, "o"),
-                ("g", gg.graph, "g"),
-            ):
-                if isinstance(x, Var):
-                    name = x.name
-                elif isinstance(x, Term) and x.lex.startswith("_:"):
-                    name = f"__bn_{x.lex[2:]}"
-                else:
-                    t = x.as_term() if isinstance(x, NumLit) else x
-                    df = df.filter(
-                        F.col(col) == F.lit(self._const_id(role, t.lex))
-                    )
-                    continue
-                if name in var_pos:
-                    cond = F.col(var_pos[name]) == F.col(col)
-                    prev_role = kinds[name]
-                    if {prev_role, role} == {"s", "o"}:
-                        cond = cond & (F.col(col) <= F.lit(self.n_shared))
-                        kinds[name] = "so"
-                    elif prev_role != role:
-                        raise NotImplementedError(
-                            f"?{name} repeats across {prev_role}/{role} "
-                            "roles within one quad pattern"
-                        )
-                    df = df.filter(cond)
-                else:
-                    var_pos[name] = col
-                    kinds.setdefault(name, role)
-            df = df.select(
-                *[F.col(c).alias(v) for v, c in var_pos.items()]
-            )
-            bf = _BFrame(df, kinds)
-            acc = bf if acc is None else self._join(acc, bf, "inner")
-        if acc is None:
-            raise NotImplementedError("empty GRAPH group")
-        for expr in filters:
-            col, _ = self._expr(expr, acc)
-            acc.df = acc.df.filter(col.cast("boolean"))
-        acc.df = _drop_aux(acc.df)
-        return acc
+            bf.df = bf.df.withColumnRenamed(_GKEY, name)
+            bf.kinds[name] = "g"
+        else:
+            bf.df = bf.df.drop(_GKEY)
+        return self._in_scope(bf)
+
+    def _in_scope(self, bf: _BFrame) -> _BFrame:
+        """A frame that does not depend on the active graph (the unit
+        solution, inline data, a nested GRAPH's result) inside a GRAPH
+        body: one copy per graph of the scope's domain, keyed."""
+        if self._graphs is None or _GKEY in bf.kinds:
+            return bf
+        return _BFrame(
+            bf.df.crossJoin(self._graphs),
+            {**bf.kinds, _GKEY: "g"},
+            set(bf.maybe_null),
+        )
 
     def _union(self, branches: list[_BFrame]) -> _BFrame:
         """UNION: concatenate solution sets, padding absent variables
@@ -1033,11 +966,12 @@ class SparqlEngine:
         """The unit solution (one row, no bindings) — the identity of
         Join, so a group may legally start with BIND / MINUS or hold
         only VALUES (spec 18.2.2.6 translates them over the empty
-        pattern). The seed column is __aux so joins drop it."""
+        pattern). The seed column is __aux so joins drop it. Inside a
+        GRAPH body, one unit solution per graph."""
         spark = self.spo.sparkSession
-        return _BFrame(
+        return self._in_scope(_BFrame(
             spark.range(1).select(F.lit(1).alias("__aux_unit")), {}
-        )
+        ))
 
     def _values_frame(self, vc: ValuesClause, acc: _BFrame) -> _BFrame:
         """Inline data: resolve each term in the ID space its variable
@@ -1108,18 +1042,18 @@ class SparqlEngine:
                 edges = self.spo.filter(~F.col("p").isin(ids))
                 return (
                     edges.select(
-                        F.col("s").alias("src"), F.col("o").alias("dst")
+                        F.col("s").alias("src"), F.col("o").alias("dst"),
+                        *self._edge_keys(),
                     ),
                     "s",
                     "o",
                 )
             ids = [self._const_id("p", iri) for iri in node.bwd]
-            edges = self.ops.select("s", "p", "o").filter(
-                ~F.col("p").isin(ids)
-            )
+            edges = self.ops.filter(~F.col("p").isin(ids))
             return (
                 edges.select(
-                    F.col("o").alias("src"), F.col("s").alias("dst")
+                    F.col("o").alias("src"), F.col("s").alias("dst"),
+                    *self._edge_keys(),
                 ),
                 "o",
                 "s",
@@ -1166,6 +1100,12 @@ class SparqlEngine:
             )
         raise NotImplementedError(f"unsupported path node {node!r}")
 
+    def _edge_keys(self) -> list[str]:
+        """The key column an edge frame over this engine's tables
+        carries besides (src, dst): the quads' graph id `g` inside a
+        GRAPH body (plans.paths joins and dedups on it), none outside."""
+        return [] if self._graphs is None else ["g"]
+
     def _edges_to_terms(
         self, edges: DataFrame, src_role: str, dst_role: str
     ) -> DataFrame:
@@ -1178,14 +1118,15 @@ class SparqlEngine:
         )
         edges = (
             edges.join(ms, edges["src"] == ms["__ei"])
-            .select(F.col("__et").alias("src"), F.col("dst"))
+            .select(F.col("__et").alias("src"), F.col("dst"),
+                    *self._edge_keys())
         )
         md = self._role_map(dst_role).select(
             F.col("id").alias("__ei"), F.col("term").alias("__et")
         )
         return (
             edges.join(md, edges["dst"] == md["__ei"])
-            .select("src", F.col("__et").alias("dst"))
+            .select("src", F.col("__et").alias("dst"), *self._edge_keys())
         )
 
     def _compile_path_terms(self, node) -> DataFrame:
@@ -1237,56 +1178,44 @@ class SparqlEngine:
             # node, whose id may come from either endpoint's ID space —
             # built as two single-role frames so _union reconciles the
             # spaces (decoding to terms only if the roles conflict).
-            plus = self._compile_path_pattern(
-                TriplePattern(
-                    tp.s, PathRepeat(tp.p.inner, 1, tp.p.max_hops), tp.o
-                ),
-                bn,
+            # Inside a GRAPH body the nodes are the graph's.
+            plus_tp = TriplePattern(
+                tp.s, PathRepeat(tp.p.inner, 1, tp.p.max_hops), tp.o
             )
-            spark = self.spo.sparkSession
-
-            def const_lex(x) -> str:
-                t = x.as_term() if isinstance(x, NumLit) else x
-                return t.lex
-
+            if not isinstance(tp.s, Var) and not isinstance(tp.o, Var):
+                # both constant: the zero-length path matches iff the
+                # terms are equal, and then the unit solution is all
+                if _const_lex(tp.s) == _const_lex(tp.o):
+                    return self._unit_frame()
+                return self._compile_path_pattern(plus_tp, bn)
+            plus = self._compile_path_pattern(plus_tp, bn)
             if isinstance(tp.s, Var) and isinstance(tp.o, Var):
                 sv, ov = tp.s.name, tp.o.name
-                zero_src = _BFrame(
-                    self.spo.select(
-                        F.col("s").alias(sv), F.col("s").alias(ov)
-                    ).distinct(),
-                    {sv: "s", ov: "s"},
-                )
-                zero_dst = _BFrame(
-                    self.ops.select(
-                        F.col("o").alias(sv), F.col("o").alias(ov)
-                    ).distinct(),
-                    {sv: "o", ov: "o"},
-                )
-                u = self._union([plus, zero_src, zero_dst])
-            elif isinstance(tp.s, Var) or isinstance(tp.o, Var):
+                gk = {} if self._graphs is None else {_GKEY: "g"}
+
+                def nodes(table, col):
+                    return _BFrame(
+                        table.select(
+                            F.col(col).alias(sv), F.col(col).alias(ov),
+                            *[F.col("g").alias(k) for k in gk],
+                        ).distinct(),
+                        {sv: col, ov: col, **gk},
+                    )
+
+                u = self._union([plus, nodes(self.spo, "s"), nodes(self.ops, "o")])
+            else:
                 # one constant endpoint: the zero-length path binds the
                 # variable to THAT term (one term-kind row; _union
                 # reconciles against the plus-half's id binding)
                 var = (tp.s if isinstance(tp.s, Var) else tp.o).name
-                lex = const_lex(tp.o if isinstance(tp.s, Var) else tp.s)
-                zero = _BFrame(
+                lex = _const_lex(tp.o if isinstance(tp.s, Var) else tp.s)
+                spark = self.spo.sparkSession
+                zero = self._in_scope(_BFrame(
                     spark.createDataFrame([(lex,)], f"{var} string"),
                     {var: "term"},
-                )
+                ))
                 u = self._union([plus, zero])
-            else:
-                # both constant: zero-length matches iff the terms are
-                # equal; keep the plus-half's existence-frame shape
-                if const_lex(tp.s) == const_lex(tp.o):
-                    aux = plus.df.columns[0]
-                    one = spark.range(1).select(F.lit(1).alias(aux))
-                    u = _BFrame(
-                        plus.df.unionByName(one), dict(plus.kinds)
-                    )
-                else:
-                    u = plus
-            u.df = u.df.dropDuplicates(sorted(u.kinds) or None)
+            u.df = u.df.dropDuplicates(sorted(u.kinds))
             return u
         if _path_roles(tp.p) is None:
             # role conflict (e.g. p|^p, !(p|^q) after normalization):
@@ -1356,7 +1285,12 @@ class SparqlEngine:
 
         endpoint(tp.s, "src", src_role)
         endpoint(tp.o, "dst", dst_role)
-        if not kinds:  # both endpoints constant: pure existence
+        if self._graphs is not None:
+            df = df.withColumnRenamed("g", _GKEY)
+            if not kinds:  # both endpoints constant: per-graph existence
+                df = df.select(_GKEY).distinct()
+            kinds[_GKEY] = "g"
+        elif not kinds:  # both endpoints constant: pure existence
             bn[0] += 1
             df = df.select(F.lit(1).alias(f"__aux_e{bn[0]}")).limit(1)
         return _BFrame(df, kinds)
@@ -1370,6 +1304,10 @@ class SparqlEngine:
         a.df = _drop_aux(a.df)
         b.df = _drop_aux(b.df)
         on = sorted(set(a.kinds) & set(b.kinds))
+        if how == "left_anti" and not exists and not set(on) - {_GKEY}:
+            # MINUS with no shared variable removes nothing (§8.3); the
+            # graph key of a GRAPH body is not a variable
+            return a
         for v in on:
             ka, kb = a.kinds[v], b.kinds[v]
             id_a, id_b = ka in _ID_KINDS, kb in _ID_KINDS
@@ -1466,7 +1404,8 @@ class SparqlEngine:
 
         MINUS additionally requires a variable bound in BOTH solutions
         (SPARQL 1.1 §8.3): the all-null mask removes nothing when it
-        covers every shared variable.
+        covers every shared variable. The graph key of a GRAPH body is
+        never null and never such a variable.
         """
         if len(nullable_shared) > 3:
             raise NotImplementedError(
@@ -1490,13 +1429,18 @@ class SparqlEngine:
                 sub_roles = {
                     v: k for v, k in roles_a.items() if v not in mask
                 }
-                if how == "left_anti" and exists and mask >= on:
-                    # NOT EXISTS with every shared var unbound: the
-                    # unbound row is compatible with ANY match, so it
-                    # is dropped iff the subgroup matches at all —
-                    # unlike MINUS, which keeps it (no common bound
-                    # variable, SPARQL 1.1 §8.3)
-                    joined = sub.join(right, F.lit(True), "left_anti")
+                if how == "left_anti" and mask >= on - {_GKEY}:
+                    # every shared var unbound: MINUS keeps the row (no
+                    # common bound variable, SPARQL 1.1 §8.3); NOT
+                    # EXISTS drops it iff the subgroup matches at all
+                    # (in the row's graph, inside a GRAPH body)
+                    keys = sorted(on & {_GKEY})
+                    if not exists:
+                        joined = sub
+                    elif keys:
+                        joined = sub.join(right.select(*keys), keys, "left_anti")
+                    else:
+                        joined = sub.join(right, F.lit(True), "left_anti")
                 else:
                     joined = join_bindings(
                         sub, right, how, sub_roles, roles_b, self.n_shared
@@ -1855,6 +1799,22 @@ class SparqlEngine:
                 )
             else:
                 df = df.dropDuplicates(out_cols)
+        if _GKEY in out_cols:
+            # a subselect inside a GRAPH body: OFFSET/LIMIT slice each
+            # graph's solutions, in ORDER BY order (else in an
+            # arbitrary but fixed one)
+            if q.offset or q.limit is not None:
+                w = Window.partitionBy(_GKEY).orderBy(
+                    *(order_exprs or [F.col(c) for c in out_cols])
+                )
+                lo = q.offset or 0
+                rn = F.col("__rn")
+                keep = rn > lo
+                if q.limit is not None:
+                    keep = keep & (rn <= lo + q.limit)
+                df = (df.withColumn("__rn", F.row_number().over(w))
+                      .filter(keep).drop("__rn"))
+            return df
         if sort_cols:
             df = df.sort(*order_exprs)
         if q.offset:
@@ -1896,6 +1856,8 @@ class SparqlEngine:
         names = [
             p.name if isinstance(p, Var) else p.alias for p in q.projection
         ] or list(bf.kinds)
+        if _GKEY in bf.kinds and _GKEY not in names:
+            names.append(_GKEY)  # inside a GRAPH body: per graph
         df = self._order_distinct_slice(bf, q, names)
         return _BFrame(
             df.select(*names),
@@ -1904,7 +1866,9 @@ class SparqlEngine:
         )
 
     def _aggregate(self, bf: _BFrame, q: Query) -> _BFrame:
-        group_vars = [v.name for v in q.group_by]
+        # inside a GRAPH body each graph's solutions group on their own
+        keyed = [_GKEY] if _GKEY in bf.kinds else []
+        group_vars = [v.name for v in q.group_by] + keyed
         aggs = [p for p in q.projection if isinstance(p, Aggregate)]
         # aggregates nested inside projection expressions
         # ((SUM(?x)/COUNT(*) AS ?m)) or HAVING conditions get synthetic
@@ -1991,6 +1955,15 @@ class SparqlEngine:
             gdf = bf.df.groupBy(*[bf.df[v] for v in group_vars]).agg(*exprs)
         else:
             gdf = bf.df.agg(*exprs)
+        if keyed and not q.group_by:
+            # without GROUP BY every graph has one group, also a graph
+            # without a solution: there the aggregates are those of an
+            # empty group, as the ungrouped aggregate above gives them
+            gdf = self._graphs.join(gdf, _GKEY, "left")
+            for a in aggs:
+                if a.func in ("COUNT", "GROUP_CONCAT"):
+                    empty = F.lit(0) if a.func == "COUNT" else F.lit("")
+                    gdf = gdf.withColumn(a.alias, F.coalesce(a.alias, empty))
         kinds = {v: bf.kinds[v] for v in group_vars}
         kinds.update(agg_kinds)
         out = _BFrame(

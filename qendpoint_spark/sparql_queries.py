@@ -43,17 +43,24 @@ _TRUE = '"true"^^<http://www.w3.org/2001/XMLSchema#boolean>'
 _ENGINES: dict[tuple[int, str], object] = {}
 
 
-def _quad_engine(spark: SparkSession, sf_dir: str):
-    """Engine over the quad grammar (per-source named graphs): quads
-    table for GRAPH patterns, default graph = union of all graphs."""
-    key = (id(spark), sf_dir, "quads")
+def _quad_engine(spark: SparkSession, sf_dir: str, per_doc: bool = False):
+    """Engine over the quad grammar (per-source named graphs, or one
+    named graph per document): quads table for GRAPH patterns, default
+    graph = union of all graphs."""
+    key = (id(spark), sf_dir, "quads", per_doc)
     if key not in _ENGINES:
+        from pyspark.sql import functions as F
+
         from qendpoint_spark.dictionary import build_dictionary
         from qendpoint_spark.encoding import encode_triples
         from qendpoint_spark.entry_queries import _docs, quad_triples_str
         from qendpoint_spark.sparql import SparqlEngine
 
         base = quad_triples_str(_docs(spark, sf_dir))
+        if per_doc:
+            base = base.withColumn("g", F.regexp_replace(
+                "s", "^http://example.org/doc/", "http://example.org/graph/doc/"
+            ))
         qdict = build_dictionary(base)
         encq = encode_triples(base, qdict).localCheckpoint(eager=True)
         tri = encq.drop("g").dropDuplicates(["s", "p", "o"])
@@ -63,9 +70,9 @@ def _quad_engine(spark: SparkSession, sf_dir: str):
     return _ENGINES[key]
 
 
-def _qq(text: str):
+def _qq(text: str, per_doc: bool = False):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _quad_engine(spark, sf_dir).query(text)
+        return _quad_engine(spark, sf_dir, per_doc).query(text)
 
     return run
 
@@ -327,9 +334,8 @@ SPARQL_QUERIES = {
         "(COUNT(DISTINCT STR(?doc)) AS ?docs) "
         "WHERE { ?doc p:lang ?lang . ?doc p:nchars ?nc } GROUP BY ?lang"
     ),
-    # OPTIONAL inside a constant GRAPH (round 5): the body compiles
-    # through the full group machinery on a graph-scoped engine — the
-    # gid filter pushes into the quad scan
+    # OPTIONAL inside a constant GRAPH: the body compiles through the
+    # group machinery over the quads, the gid filter pushed into the scan
     "sparql_graph_optional": _qq(
         _P
         + "SELECT ?doc ?l WHERE { GRAPH "
@@ -345,13 +351,21 @@ SPARQL_QUERIES = {
         "WHERE { ?doc p:lang ?lang . ?doc p:nchars ?nc } "
         "GROUP BY ?lang HAVING(COUNT(*) > 10)"
     ),
-    # property path (alternation) under a graph VARIABLE (round 5):
-    # evaluated per named graph and unioned (bag semantics), ?g
-    # projected from each branch
+    # property path (alternation) under a graph VARIABLE: the path's
+    # edges carry the graph id, ?g is that key at the GRAPH boundary
     "sparql_graph_path": _qq(
         _P
         + "SELECT ?g ?doc ?v WHERE { GRAPH ?g "
         "{ ?doc (p:lang|p:source) ?v } }"
+    ),
+    # OPTIONAL under a graph VARIABLE over one named graph per document
+    # (500 graphs at sf0.01, 5,000 at sf0.1): one plan keyed on the
+    # graph id, whatever the number of graphs
+    "sparql_graph_var_optional": _qq(
+        _P
+        + "SELECT ?g ?doc ?src ?l WHERE { GRAPH ?g "
+        "{ ?doc p:source ?src OPTIONAL { ?doc p:lang ?l } } }",
+        per_doc=True,
     ),
     # mixed-role path alternative (round 5): p|^p binds conflicting ID
     # spaces per branch — decomposed into per-branch pattern compiles
@@ -395,23 +409,31 @@ SPARQL_QUERIES = {
     ),
 }
 
-_QUADS_CTE = """
+
+def _quads_cte(graph: str) -> str:
+    """The quad grammar as a `quads` CTE, each statement in the named
+    graph of the SQL expression `graph`."""
+    return f"""
 WITH quads AS (
   SELECT DISTINCT * FROM (
     SELECT 'http://example.org/doc/' || doc_id AS s,
            'http://example.org/prop/lang' AS p,
            '"' || lang || '"@' || lang AS o,
-           'http://example.org/graph/' || source AS g
+           {graph} AS g
     FROM documents
     UNION ALL
     SELECT 'http://example.org/doc/' || doc_id,
            'http://example.org/prop/source',
            '"' || source || '"',
-           'http://example.org/graph/' || source
+           {graph}
     FROM documents
   )
 )
 """
+
+
+_QUADS_CTE = _quads_cte("'http://example.org/graph/' || source")
+_DOC_QUADS_CTE = _quads_cte("'http://example.org/graph/doc/' || doc_id")
 
 
 SPARQL_ORACLES = {
@@ -642,6 +664,13 @@ WHERE s.p = '{_SOURCE}' AND s.g = 'http://example.org/graph/src3'
     + f"""
 SELECT g, s AS doc, o AS v FROM quads
 WHERE p IN ('{_LANG}', '{_SOURCE}')
+""",
+    "sparql_graph_var_optional": _DOC_QUADS_CTE
+    + f"""
+SELECT s.g, s.s AS doc, s.o AS src, l.o AS l
+FROM quads s LEFT JOIN quads l
+  ON l.s = s.s AND l.g = s.g AND l.p = '{_LANG}'
+WHERE s.p = '{_SOURCE}'
 """,
     "sparql_path_mixed_alt": _PRE
     + f"""

@@ -181,6 +181,28 @@ def test_local_bgp_falls_back(engines, monkeypatch):
         assert taken == [False] and rows == expected, bound
 
 
+def test_local_bgp_large_predicate_reads_nothing(engines, monkeypatch):
+    """A first pattern `?s <p> ?o` binds exactly the predicate's
+    n_triples: past LOCAL_BINDING_ROWS the BGP runs on Spark without
+    reading a row group first, and gives the Spark path's answer."""
+    local, spark_eng = engines
+    text = "SELECT ?x ?y WHERE { ?x <p> ?y }"  # <p> has 4 triples
+    expected = _run(spark_eng, text)[0]
+    assert _run(local, text)[0] == expected  # resolves <p> beforehand
+    reads = []
+    plain = local_mod.RowGroupDirectory.read
+
+    def counted(self, *args, **kwargs):
+        reads.append(self.root)
+        return plain(self, *args, **kwargs)
+
+    monkeypatch.setattr(local_mod, "LOCAL_BINDING_ROWS", 3)
+    monkeypatch.setattr(local_mod.RowGroupDirectory, "read", counted)
+    rows, _c, _s, taken = _run(local, text)
+    assert taken == [False] and rows == expected
+    assert reads == []
+
+
 @pytest.mark.parametrize("text", [
     # 3 x 4 rows with no shared variable: a 12-row cross product
     "SELECT ?s ?v ?x ?y WHERE { ?s <n> ?v . ?x <p> ?y }",

@@ -5,6 +5,8 @@ the extraction grammar never produces — see plans.pattern.scan_bgp)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -156,6 +158,10 @@ def test_engine_bgp_guard(engine):
         "SELECT ?x ?z WHERE { ?x <p> ?y . ?y <q> ?z }"
     )
     assert _rows(out) == []
+    # one pattern binding a variable as predicate and as subject would
+    # compare ids of two namespaces
+    with pytest.raises(NotImplementedError, match="namespaces"):
+        engine.query("SELECT ?x WHERE { ?x ?x ?o }")
 
 
 def test_engine_select_and_filter(engine):
@@ -1285,6 +1291,10 @@ def test_graph_const_complex_bodies(rich_quad_engine):
         "SELECT ?x WHERE { GRAPH <g1> { ?x <n>* ?y } FILTER(?x = ?y) }"
     )
     assert _rows(out) == [("A",), ("a",), ("b",), ("c",)]
+    # a graph that is not a named graph of the dataset has no solution,
+    # not even the unit solution a BIND extends
+    out = e.query("SELECT ?x WHERE { GRAPH <absent> { BIND(1 AS ?x) } }")
+    assert _rows(out) == []
 
 
 def test_graph_var_complex_bodies(rich_quad_engine):
@@ -1309,15 +1319,185 @@ def test_graph_var_complex_bodies(rich_quad_engine):
     assert _rows(out) == [("g1",), ("g1",)]  # from a and from b
 
 
-def test_graph_var_enum_guard(rich_quad_engine):
-    e = rich_quad_engine
-    old = e.max_graph_enum
-    try:
-        e.max_graph_enum = 1
-        with pytest.raises(NotImplementedError, match="max_graph_enum"):
-            e.query("SELECT ?g WHERE { GRAPH ?g { ?x <n>+ ?y } }")
-    finally:
-        e.max_graph_enum = old
+def _quad_engine(spark, rows):
+    """(engine, encoded quads, dictionary) over (s, p, o, g) rows; the
+    default graph is the union of the named graphs."""
+    q = spark.createDataFrame(rows, "s string, p string, o string, g string")
+    d = build_dictionary(q).cache()
+    encq = encode_triples(q, d).localCheckpoint(eager=True)
+    tri = encq.drop("g").dropDuplicates(["s", "p", "o"])
+    return SparqlEngine(tri, d, quads=encq), encq, d
+
+
+def _many_graphs(n):
+    """n named graphs g0..g{n-1}, each with a -n-> b; the even ones
+    also label b, and every tenth chains b -n-> c."""
+    rows = []
+    for i in range(n):
+        g = f"g{i}"
+        rows.append(("a", "n", "b", g))
+        if i % 2 == 0:
+            rows.append(("b", "lab", f"L{i}", g))
+        if i % 10 == 0:
+            rows.append(("b", "n", "c", g))
+    return rows
+
+
+_GRAPH_OPTIONAL = (
+    "SELECT ?g ?s ?l WHERE { GRAPH ?g { ?s <n> ?o OPTIONAL { ?o <lab> ?l } } }"
+)
+
+
+@pytest.fixture(scope="module")
+def thousand_graphs(spark):
+    return _quad_engine(spark, _many_graphs(1000))
+
+
+def test_graph_var_thousand_graphs(thousand_graphs):
+    """GRAPH ?g over 1,000 named graphs with OPTIONAL, MINUS and p+
+    bodies: one plan, whatever the number of graphs."""
+    e = thousand_graphs[0]
+    got = _rows(e.query(_GRAPH_OPTIONAL))
+    want = sorted(
+        [(f"g{i}", "a", f"L{i}" if i % 2 == 0 else None) for i in range(1000)]
+        + [(f"g{i}", "b", None) for i in range(0, 1000, 10)],
+        key=lambda r: tuple(x or "" for x in r),
+    )
+    assert sorted(got, key=lambda r: tuple(x or "" for x in r)) == want
+    got = _rows(e.query(
+        "SELECT ?g WHERE { GRAPH ?g { ?s <n> ?o MINUS { ?o <lab> ?l } } }"
+    ))
+    assert got == sorted(
+        [(f"g{i}",) for i in range(1, 1000, 2)]
+        + [(f"g{i}",) for i in range(0, 1000, 10)]
+    )
+    got = _rows(e.query("SELECT ?g ?x ?y WHERE { GRAPH ?g { ?x <n>+ ?y } }"))
+    want = [(f"g{i}", "a", "b") for i in range(1000)] + [
+        (f"g{i}", x, "c") for i in range(0, 1000, 10) for x in ("a", "b")
+    ]
+    assert got == sorted(want)
+
+
+def _plan_nodes(df) -> int:
+    def count(node):
+        kids = node.children()
+        return 1 + sum(count(kids.apply(i)) for i in range(kids.size()))
+
+    return count(df._jdf.queryExecution().optimizedPlan())
+
+
+def test_graph_plan_size_independent_of_graph_count(thousand_graphs):
+    """The optimized plan of a GRAPH ?g query has as many nodes over
+    10 named graphs as over 1,000."""
+    e, encq, d = thousand_graphs
+    first_ten = [e._const_id("g", f"g{i}") for i in range(10)]
+    quads = encq.filter(F.col("g").isin(first_ten))
+    ten = SparqlEngine(quads.drop("g").dropDuplicates(["s", "p", "o"]), d, quads=quads)
+    assert ten.query("SELECT DISTINCT ?g WHERE { GRAPH ?g { ?s <n> ?o } }").count() == 10
+    assert _plan_nodes(ten.query(_GRAPH_OPTIONAL)) == _plan_nodes(e.query(_GRAPH_OPTIONAL))
+
+
+#: (s, p, o, g): g1 chains a-n->b-n->c; b's label is in g2, so an
+#: OPTIONAL in g1 must not see it. g3 is a two-node cycle without
+#: labels. The <m> rows are the ground-pattern case of quad_engine.
+_PARITY_QUADS = [
+    ("a", "n", "b", "g1"),
+    ("b", "n", "c", "g1"),
+    ("a", "lab", "A", "g1"),
+    ("c", "lab", "C", "g1"),
+    ("d1", "m", "x", "g1"),
+    ("a", "n", "x", "g2"),
+    ("x", "lab", "X", "g2"),
+    ("a", "lab", "A2", "g2"),
+    ("b", "lab", "B2", "g2"),
+    ("d1", "m", "y", "g2"),
+    ("d2", "m", "x", "g2"),
+    ("p", "n", "q", "g3"),
+    ("q", "n", "p", "g3"),
+]
+
+#: GRAPH bodies; each is also run as a query over one graph's triples
+_PARITY_BODIES = {
+    "optional": "?s <n> ?o OPTIONAL { ?o <lab> ?l }",
+    "minus_shared": "?s <n> ?o MINUS { ?o <lab> ?l }",
+    "minus_disjoint": "?s <n> ?o MINUS { ?x <lab> ?y }",
+    "not_exists": "?s <n> ?o FILTER NOT EXISTS { ?o <lab> ?l }",
+    "exists_disjoint": "?s <n> ?o FILTER EXISTS { ?x <lab> ?y }",
+    "union": "{ ?s <n> ?o } UNION { ?s <lab> ?o }",
+    "bind": "?s <n> ?o BIND(STR(?o) AS ?t)",
+    "bind_only": 'BIND("k" AS ?k)',
+    "values": "?s <n> ?o VALUES ?s { <a> <p> }",
+    "values_only": "VALUES ?v { <a> <z> }",
+    "plus": "?x <n>+ ?y",
+    "star": "?x <n>* ?y",
+    "zero_or_one_const": "<a> <n>? ?y",
+    "seq": "?x <n>/<n> ?y",
+    "ground": "<d1> <m> <x> . <d2> <m> ?z",
+    "nested_graph": "?s <n> ?o . GRAPH ?h { ?o <lab> ?l }",
+    "filter_graph_var": "?s <n> ?o FILTER(?g = <g1>)",
+    "filter_graph_var_optional": "?s <n> ?o OPTIONAL { ?o <lab> ?l } FILTER(?g = <g1>)",
+    "subselect_group_by": "{ SELECT ?s (COUNT(?o) AS ?c) WHERE { ?s <n> ?o } GROUP BY ?s }",
+    "subselect_count": "{ SELECT (COUNT(?o) AS ?c) WHERE { ?s <lab> ?o } }",
+    "subselect_limit": "{ SELECT ?s ?o WHERE { ?s <n> ?o } ORDER BY ?s ?o LIMIT 1 }",
+}
+
+
+#: no graph holds both ground statements, and the body sees no ?g: a
+#: FILTER on it tests an unbound variable
+_EMPTY_BODIES = {"ground", "filter_graph_var", "filter_graph_var_optional"}
+
+
+@pytest.fixture(scope="module")
+def parity_quads(spark):
+    """The dataset's engine, and per named graph an engine whose
+    default graph is that graph's triples (same dictionary)."""
+    e, encq, d = _quad_engine(spark, _PARITY_QUADS)
+    per_graph = {}
+    for g in ("g1", "g2", "g3"):
+        gid = e._const_id("g", g)
+        tri = encq.filter(F.col("g") == gid).drop("g")
+        per_graph[g] = SparqlEngine(tri, d, quads=encq)
+    return e, per_graph
+
+
+def _bag(df, graph=None):
+    """Solutions as a multiset of sorted (var, term) tuples, hidden
+    columns dropped, with ("g", graph) added when given."""
+    cols = [c for c in df.columns if not c.startswith("__")]
+    extra = [] if graph is None else [("g", graph)]
+    return Counter(
+        tuple(sorted([(c, r[c]) for c in cols] + extra, key=str))
+        for r in df.collect()
+    )
+
+
+def _per_graph_reference(per_graph, body, graphs):
+    """SPARQL 1.1 §18.6 built by hand: the body run as a query over
+    each named graph's triples, ?g added, then the union."""
+    out = Counter()
+    for g in graphs:
+        out.update(_bag(per_graph[g].query(f"SELECT * WHERE {{ {body} }}"), g))
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(_PARITY_BODIES))
+def test_graph_var_matches_per_graph_evaluation(parity_quads, name):
+    e, per_graph = parity_quads
+    body = _PARITY_BODIES[name]
+    got = _bag(e.query(f"SELECT * WHERE {{ GRAPH ?g {{ {body} }} }}"))
+    want = _per_graph_reference(per_graph, body, ("g1", "g2", "g3"))
+    assert got == want
+    assert bool(want) != (name in _EMPTY_BODIES)
+
+
+def test_graph_from_named_matches_per_graph_evaluation(parity_quads):
+    e, per_graph = parity_quads
+    body = _PARITY_BODIES["optional"]
+    got = _bag(e.query(f"SELECT * FROM NAMED <g2> WHERE {{ GRAPH ?g {{ {body} }} }}"))
+    assert got == _per_graph_reference(per_graph, body, ("g2",))
+    # FROM without FROM NAMED: no named graph, so no solution
+    got = e.query(f"SELECT * FROM <g1> WHERE {{ GRAPH ?g {{ {body} }} }}")
+    assert got.collect() == []
 
 
 def test_aggregate_expression_args(num_engine):
