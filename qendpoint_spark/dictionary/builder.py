@@ -40,6 +40,9 @@ SECTION_SUBJECT = "S"
 SECTION_OBJECT = "O"
 SECTION_PREDICATE = "P"
 SECTION_GRAPH = "G"
+# the SH < S < O < P < G section order as the sec_key role_sections uses
+SECTION_KEYS = [SECTION_SHARED, SECTION_SUBJECT, SECTION_OBJECT,
+                SECTION_PREDICATE, SECTION_GRAPH]
 
 
 def build_dictionary(
@@ -106,8 +109,7 @@ def rank_sections(
                   4: n_sh + n_s + n_o + counts.get(3, 0)}
     # global id: SH -> sec_rank, S/O -> n_sh + sec_rank, P/G -> sec_rank
     id_base = {0: 0, 1: n_sh, 2: n_sh, 3: 0, 4: 0}
-    sec_name = {0: SECTION_SHARED, 1: SECTION_SUBJECT, 2: SECTION_OBJECT,
-                3: SECTION_PREDICATE, 4: SECTION_GRAPH}
+    sec_name = dict(enumerate(SECTION_KEYS))
 
     sec_col = F.col("sec_key")
     rank_col = F.col("grank")
@@ -179,31 +181,30 @@ def role_sections(triples_str: DataFrame) -> DataFrame:
 
 
 def merge_role_sections(dicts: list[DataFrame]) -> DataFrame:
-    """(term, sec_key) for the UNION of k dictionaries' term tables —
-    the merge analog of role_sections that never touches triples.
+    """(term, sec_key) for the UNION of k term tables — the merge
+    analog of role_sections that never touches triples.
 
-    Each input dictionary row already encodes the term's roles
-    (SH = subject+object, S = subject-only, O = object-only; P/G are
-    separate namespaces), so the merged section split is a groupBy(term)
-    max() over role flags recovered from the section labels — exactly
+    Each input row already encodes the term's roles: a dictionary row
+    by its section label (SH = subject+object, S = subject-only, O =
+    object-only; P/G are separate namespaces), a role table row
+    (role_sections, no ids) by its sec_key. The merged section split
+    is a groupBy(term) max() over the recovered role flags — exactly
     the co-scan KCatMerger does over the k sorted section streams
     (KCatMerger.java:49-511), as one map-side-combined aggregation.
     Cost ∝ Σ|terms_i|, independent of triple count.
     """
     facts = None
     for d in dicts:
+        key = (
+            F.col("sec_key") if "sec_key" in d.columns
+            else F.array_position(
+                F.array(*map(F.lit, SECTION_KEYS)), F.col("section")) - 1
+        )
         f = d.select(
             "term",
-            F.when(F.col("section") == SECTION_PREDICATE, F.lit(1))
-            .when(F.col("section") == SECTION_GRAPH, F.lit(2))
-            .otherwise(F.lit(0))
-            .alias("ns"),
-            F.when(F.col("section").isin(SECTION_SHARED, SECTION_SUBJECT), 1)
-            .otherwise(0)
-            .alias("is_s"),
-            F.when(F.col("section").isin(SECTION_SHARED, SECTION_OBJECT), 1)
-            .otherwise(0)
-            .alias("is_o"),
+            F.when(key == 3, 1).when(key == 4, 2).otherwise(0).alias("ns"),
+            F.when(key.isin(0, 1), 1).otherwise(0).alias("is_s"),
+            F.when(key.isin(0, 2), 1).otherwise(0).alias("is_o"),
         )
         facts = f if facts is None else facts.unionByName(f)
     return _section_key(

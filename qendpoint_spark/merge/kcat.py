@@ -10,23 +10,28 @@ GroupBySubjectMapIterator.java:26).
 
 The Spark realization follows the same decomposition:
 
-1. merged dictionary = rank of the UNION OF INPUT DICTIONARIES' TERM
-   TABLES (role flags recovered from section labels, one
+1. merged dictionary = ONE rank of the union of the inputs' term
+   tables (role flags recovered from section labels, one
    map-side-combined groupBy(term)) — cost ∝ Σ|terms_i|, the triples
-   are never decoded;
-2. per-input remap tables (space, old_id -> new_id) = the old
-   dictionary joined to the merged one on term — string joins over the
-   TERM tables only;
-3. merged triples = each input's INT triples joined to its remap per
-   component (three 8-byte-key joins; Catalyst broadcasts the remaps
-   under the adaptive threshold — predicates/graphs virtually always —
-   and falls back to shuffled joins above it), unioned, deduped on the
-   int key.
+   are never decoded. A STRING input (triples plus role_sections: no
+   ids) joins the same rank and gets no id space of its own;
+2. per id-space input, one remap table (space, old_id -> new_id) = the
+   old dictionary joined to the merged one on (term, namespace), cut
+   once — a string join over the TERM tables only;
+3. merged triples = each id-space input's INT triples joined to its
+   remap per component (8-byte-key joins; Catalyst broadcasts the
+   remaps under the adaptive threshold — predicates/graphs virtually
+   always — and falls back to shuffled joins above it), plus each
+   string input encoded straight against the merged dictionary
+   (encode_triples), unioned, deduped on the int key.
 
-Nothing wider than a term string ever shuffles, and the full corpus is
-touched only as longs. The incremental compaction of a small batch into
-a published dataset (CatTreeImpl.doGenerationSync) is the k = 2 case of
-the same merge — merge_incremental — not a separate algorithm.
+Nothing wider than a term string ever shuffles, and the id-space
+inputs are touched only as longs. The incremental compaction of a
+small batch into a published dataset (CatTreeImpl.doGenerationSync)
+is the same merge with the batch as its string input: the reference
+builds a chunk HDT only because it keeps chunks on disk, and a batch
+id space that is never published would cost a rank and a remap for
+nothing.
 
 A diff (HDTDiff, the delete half of a diffcat) is a left_anti on the id
 key plus the live dictionary — diff_datasets — and then this same
@@ -35,49 +40,59 @@ merge, alone (k = 1) or beside an insert delta.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qendpoint_spark.dictionary import merge_role_sections, rank_sections
+from qendpoint_spark.encoding import encode_triples
 
 
-def _by_space(d: DataFrame, sec_col: str, id_col: str) -> DataFrame:
-    """Explode dictionary rows into (term, space) membership: SH terms
-    belong to BOTH the subject and the object ID space (and a section
-    can change across the merge, e.g. old O -> new SH when another
-    input uses the term as a subject)."""
-    spaces = (
-        F.when(F.col(sec_col) == "SH", F.array(F.lit("subj"), F.lit("obj")))
-        .when(F.col(sec_col) == "S", F.array(F.lit("subj")))
-        .when(F.col(sec_col) == "O", F.array(F.lit("obj")))
-        .when(F.col(sec_col) == "G", F.array(F.lit("graph")))
+def _spaces(sec: Column) -> Column:
+    """The id spaces a section's ids live in: SH terms belong to BOTH
+    the subject and the object space."""
+    return (
+        F.when(sec == "SH", F.array(F.lit("subj"), F.lit("obj")))
+        .when(sec == "S", F.array(F.lit("subj")))
+        .when(sec == "O", F.array(F.lit("obj")))
+        .when(sec == "G", F.array(F.lit("graph")))
         .otherwise(F.array(F.lit("pred")))
     )
-    return d.withColumn("space", F.explode(spaces))
+
+
+def _namespace(sec: Column) -> Column:
+    """0 = the shared subject/object universe, 1 = P, 2 = G."""
+    return F.when(sec == "P", 1).when(sec == "G", 2).otherwise(0)
 
 
 def build_remap(old_dict: DataFrame, merged_dict: DataFrame) -> DataFrame:
     """(term, space, old_section, old_id, section, new_id) — the analog
-    of KCatMerger's per-input SyncSeq arrays, derived as a term-keyed
-    join of the input dictionary with the merged one. Every old id is
-    covered: the merged dictionary's term set is a superset of each
-    input's by construction."""
-    new_d = _by_space(
-        merged_dict.select("term", "section", F.col("id").alias("new_id")),
+    of KCatMerger's per-input SyncSeq arrays: ONE (term, namespace)
+    join of the input dictionary with the merged one, exploded to the
+    spaces both sections share (old O -> new SH when another input
+    uses the term as a subject), cut once for remap_triples' per-space
+    filters. merge_datasets' merged dictionary covers every old id;
+    against another dictionary (hdtcat --diff) an id whose term or
+    space it lacks drops out."""
+    old = old_dict.select(
+        "term",
+        _namespace(F.col("section")).alias("ns"),
+        F.col("section").alias("old_section"),
+        F.col("id").alias("old_id"),
+    )
+    new = merged_dict.select(
+        "term",
+        _namespace(F.col("section")).alias("ns"),
         "section",
-        "new_id",
+        F.col("id").alias("new_id"),
     )
-    old = _by_space(
-        old_dict.select(
-            "term",
-            F.col("section").alias("old_section"),
-            F.col("id").alias("old_id"),
-        ),
-        "old_section",
-        "old_id",
+    shared = F.array_intersect(
+        _spaces(F.col("old_section")), _spaces(F.col("section"))
     )
-    return old.join(new_d, ["term", "space"], "inner").select(
-        "term", "space", "old_section", "old_id", "section", "new_id"
+    return (
+        old.join(new, ["term", "ns"])
+        .select("term", F.explode(shared).alias("space"),
+                "old_section", "old_id", "section", "new_id")
+        .localCheckpoint(eager=False)
     )
 
 
@@ -128,17 +143,20 @@ def remap_triples(triples_id: DataFrame, remap: DataFrame) -> DataFrame:
 def merge_datasets(
     inputs: list[tuple[DataFrame, DataFrame]],
     num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """inputs: [(triples_id, dict_terms), ...] (k >= 1; one input
-    re-ranks a diff_datasets result).
+) -> tuple[DataFrame, DataFrame, list[DataFrame | None]]:
+    """inputs: [(triples, terms), ...] (k >= 1; one input re-ranks a
+    diff_datasets result). An id-space input is (triples_id,
+    dict_terms); a string input is (triples_str, role table) — its
+    distinct string triples and role_sections(triples_str), terms
+    without ids.
 
     Returns (merged_dict, merged_triples_id, remaps) where remaps[i] is
-    the per-input (space, old_id, new_id) map. The merged dictionary is
-    built from the union of the input dictionaries' term tables (cost
-    ∝ |terms|) and the merged triples from per-input integer remap
-    joins (cost ∝ |triples| as longs) — the triples are never decoded
-    to strings, matching KCatImpl's id-space merge
-    (KCatImpl.java:370-420).
+    input i's build_remap, None for a string input. The merged
+    dictionary is ONE rank of the union of the inputs' term tables
+    (cost ∝ |terms|); id-space triples move into it through integer
+    remap joins (cost ∝ |triples| as longs, never decoded, as in
+    KCatImpl.java:370-420) and string triples are encoded against it
+    directly, so a batch never gets an id space of its own.
 
     Quad datasets merge too (all inputs must agree: either every input
     has a `g` column or none — a mixed merge would silently drop graph
@@ -153,19 +171,23 @@ def merge_datasets(
         )
     with_graph = graphness.pop()
     keys = ["s", "p", "o"] + (["g"] if with_graph else [])
-    # the merged dict feeds k remap joins; rank_sections already returns
-    # it over a checkpoint, so those joins never recompute the rank
+    # the merged dict feeds every remap join and encode; rank_sections
+    # already returns it over a checkpoint, so none recomputes the rank
     merged_dict = rank_sections(
         merge_role_sections([d for _, d in inputs]),
         num_partitions=num_partitions,
     )
-    remaps = [build_remap(d, merged_dict) for _, d in inputs]
-    remapped = [
-        remap_triples(t, r) for (t, _), r in zip(inputs, remaps)
+    remaps = [
+        build_remap(d, merged_dict) if "id" in d.columns else None
+        for _, d in inputs
     ]
-    merged = remapped[0]
-    for m in remapped[1:]:
-        merged = merged.unionByName(m)
+    merged = None
+    for (t, _), r in zip(inputs, remaps):
+        part = (
+            encode_triples(t, merged_dict, assume_distinct=True)
+            if r is None else remap_triples(t, r)
+        )
+        merged = part if merged is None else merged.unionByName(part)
     # inputs are individually distinct and each remap is injective per
     # space, so duplicates only arise ACROSS inputs; the dedup shuffles
     # 8-byte ids, never strings.
@@ -214,9 +236,7 @@ def diff_datasets(
     role becomes S or O, a term with no use left is dropped. Only ids
     in the delete set can lose a role, so only those are checked."""
     keys = ["s", "p", "o"] + (["g"] if "g" in triples_id.columns else [])
-    # the merge's rank (sample and stats passes) and publish's cut each
-    # re-run this lineage, so the two delete-sized sets it derives from
-    # are materialized once (1-3 s less per DELETE DATA on 4 vCPU)
+    # survivors and the roles they lost both read the delete set
     delete_id = delete_id.select(*keys).localCheckpoint()
     survivors = triples_id.join(delete_id, keys, "left_anti")
     touched = _role_ids(delete_id).distinct()
@@ -225,7 +245,6 @@ def diff_datasets(
     lost = (
         touched.join(still, ["space", "id"], "left_anti")
         .groupBy("id").pivot("space", ["subj", "obj", "pred", "graph"]).count()
-        .localCheckpoint()
     )
     sec = F.col("section")
     is_s = sec.isin("SH", "S") & F.col("subj").isNull()
@@ -237,9 +256,11 @@ def diff_datasets(
         .when(is_s, F.lit("S"))
         .when(is_o, F.lit("O"))
     )
+    # cut once: the merge's rank and its remap join both read it
     live_dict = (
         dict_terms.join(lost, "id", "left")
         .select("term", section.alias("section"), "id")
         .filter(F.col("section").isNotNull())
+        .localCheckpoint()
     )
     return survivors, live_dict

@@ -33,6 +33,7 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import time
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -41,6 +42,7 @@ from pyspark.sql import functions as F
 
 from qendpoint_spark.catalog import Catalog, StageResult
 from qendpoint_spark.dictionary import build_dictionary
+from qendpoint_spark.dictionary.builder import role_sections
 from qendpoint_spark.encoding import (
     build_header,
     encode_triples,
@@ -367,11 +369,12 @@ def incremental_update(
     """KCat-style compaction of a new document batch into the PUBLISHED
     tables — the reference's CatTree incremental generation (§2D,
     CatTreeImpl.doGenerationSync: build a chunk HDT, then cat it with
-    the accumulated one). The batch is extracted + dictionary-encoded
-    in its OWN ID space, merged with the published dataset through the
-    one KCat id-remap merge (merge/kcat.py: merged dictionary re-ranked
-    from the two term tables, integer remap joins for the triples), and
-    republished with every derived table (publish_merged). Identity
+    the accumulated one). The batch is extracted and merged as string
+    triples with the published dataset through the one KCat merge
+    (merge/kcat.py: one rank of the published and batch term tables,
+    integer remap joins for the published triples, the batch encoded
+    straight into the merged ids), and republished with every derived
+    table (publish_merged). Identity
     proven in tests:
     pipeline(A) + incremental_update(B) == pipeline(A ∪ B).
     """
@@ -406,30 +409,35 @@ def incremental_update_triples(
     subtracted in ID space (diff_datasets). new_tri=None merges the
     survivors alone.
 
-    The batch is cut once (localCheckpoint) before the batch dictionary:
-    its role aggregation and encode_triples both read it, and a lazy
-    batch — the pages extraction's pandas UDF, a CONSTRUCT's WHERE
-    query, compact_staging's dropDuplicates — would otherwise run once
-    per read. On the pages batch persist() cost 2-3x the CPU of the
-    cut for the batch dictionary plus encode (4 vCPU), with or without
-    an eager count."""
+    The batch never gets an id space of its own: it enters
+    merge_datasets as its last input, as string triples plus their
+    role table (role_sections), so the update ranks ONE dictionary and
+    encodes the batch once, against it. Both reads go through one cut
+    of the batch (localCheckpoint): a lazy batch — the pages
+    extraction's pandas UDF, a CONSTRUCT's WHERE query,
+    compact_staging's dropDuplicates — would otherwise run once per
+    read. persist() made the whole update ~1.5x the CPU on the pages
+    batch, and a row cache that keeps the batch's lineage ~1.1x (4
+    vCPU). Every block the update caches is released when it returns
+    (_released); on success the batch cut stays until its two frames
+    are garbage, since a caller may still hold the merge inputs.
+    """
     from qendpoint_spark import merge
 
     refuse_quad_merge(catalog)
     t_start = time.time()
-    with _released_on_failure(spark):
+    with _released(spark) as keep:
+        if new_tri is not None:
+            new_tri = new_tri.localCheckpoint()
+            batch = (new_tri, role_sections(new_tri))
+            keep(*batch)
         base = (catalog.read("triples_spo"), catalog.read("dict_terms"))
         if delete_tri is not None:
             delete_id = encode_triples(delete_tri, base[1], assume_distinct=True)
             base = merge.diff_datasets(*base, delete_id)
-        inputs = [base]
-        if new_tri is not None:
-            new_tri = new_tri.localCheckpoint()
-            new_dict = build_dictionary(new_tri, num_partitions=num_partitions)
-            new_enc = encode_triples(new_tri, new_dict, assume_distinct=True)
-            inputs.append((new_enc, new_dict))
         merged_dict, merged_triples, _ = merge.merge_datasets(
-            inputs, num_partitions=num_partitions
+            [base] + ([batch] if new_tri is not None else []),
+            num_partitions=num_partitions,
         )
         report = publish_merged(
             catalog,
@@ -443,21 +451,45 @@ def incremental_update_triples(
 
 
 @contextlib.contextmanager
-def _released_on_failure(spark: SparkSession):
-    """Unpersist every RDD persisted inside the block when it raises.
-    An update's localCheckpoint blocks (the batch cut, both ranks, the
+def _released(spark: SparkSession):
+    """Unpersist every RDD persisted inside the block when it exits.
+    An update's cached blocks (the batch cut, the rank, the remap, the
     merged triples, diff_datasets' sets) are otherwise released only
     when the JVM drops the RDDs, which in a fresh session took more
-    than 10 s after the frames became garbage."""
+    than 10 s after the frames became garbage.
+
+    Yields keep(*frames): on success, what the block persisted before
+    the call stays until the last of those frames is garbage (CPython
+    frees a frame when its last reference goes), so a frame the caller
+    still holds keeps reading; on failure it goes with the rest."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
+    kept: set[int] = set()
+
+    def keep(*frames: DataFrame) -> None:
+        rdds = {i: r for i, r in jsc.getPersistentRDDs().items() if i not in before}
+        kept.update(rdds)
+        alive = [len(frames)]
+
+        def collected() -> None:
+            alive[0] -= 1
+            if not alive[0]:
+                for rdd in rdds.values():
+                    rdd.unpersist(False)
+
+        for frame in frames:
+            weakref.finalize(frame, collected).atexit = False
+
     try:
-        yield
+        yield keep
     except BaseException:
-        for rdd_id, rdd in jsc.getPersistentRDDs().items():
-            if rdd_id not in before:
-                rdd.unpersist(False)
+        kept.clear()
         raise
+    finally:
+        stay = before | kept
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in stay:
+                rdd.unpersist(False)
 
 
 def refuse_quad_merge(catalog: Catalog) -> None:

@@ -1312,7 +1312,8 @@ class SparqlEngine:
             ka, kb = a.kinds[v], b.kinds[v]
             id_a, id_b = ka in _ID_KINDS, kb in _ID_KINDS
             if id_a and id_b:
-                if "p" in (ka, kb) and ka != kb:
+                # P and G are id namespaces of their own: compare terms
+                if ka != kb and {"p", "g"} & {ka, kb}:
                     self._to_term(a, v)
                     self._to_term(b, v)
             elif ka == "term" and kb == "term":

@@ -136,9 +136,42 @@ def test_incremental_update_releases_cache_on_failure(spark, documents, tmp_path
     assert not leaked
 
 
+# Spark jobs of one small update: the merge's one rank, the base remap,
+# the publish cut and the table writes, most of them AQE query stages
+# (36-37 measured; the update that also ranked and remapped the batch
+# in an id space of its own ran 51)
+UPDATE_JOB_BUDGET = 40
+
+
+def test_incremental_update_job_budget_and_release(spark, documents, tmp_path):
+    """One update of a small batch stays within UPDATE_JOB_BUDGET Spark
+    jobs, and on success leaves the persistent RDDs as it found them,
+    without waiting for garbage collection."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    run_pipeline(spark, cat, source_df=documents.filter(F.col("doc_id") % 2 == 0),
+                 source_kind="documents", source_fingerprint="even",
+                 num_partitions=4)
+    batch = pipeline.extract_triples_from_documents(
+        documents.filter(F.col("doc_id") % 2 == 1)
+    )
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    group = f"update-budget-{time.time_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        pipeline.incremental_update_triples(spark, cat, batch, num_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= UPDATE_JOB_BUDGET, jobs
+    # nothing the update persisted outlives it, with no GC in between
+    # (an earlier frame's RDD may be cleaned meanwhile, so not ==)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_incremental_update_evaluates_batch_once(spark, documents, tmp_path):
-    """A lazy batch runs once per update: the batch dictionary and the
-    encode both read one cut of it. A Python UDF on the batch's o
+    """A lazy batch runs once per update: the merge's rank and the
+    encode both read one cached copy of it. A Python UDF on the batch's o
     column counts its evaluations in an accumulator; the published
     tables still equal run_pipeline over A ∪ B."""
     tri_b = pipeline.extract_triples_from_documents(

@@ -529,6 +529,35 @@ def test_engine_graph_patterns(quad_engine):
     assert _rows(out) == [("g2",)]
 
 
+def test_graph_var_joins_subject_and_object_outside_graph(spark):
+    """A graph variable also used as a subject or object outside its
+    GRAPH joins on the term: graph ids and subject/object ids are
+    different namespaces. The metadata sits in graph gm, so the
+    default graph (the union of graphs here) holds it."""
+    rows = [
+        ("a", "n", "b", "g1"),
+        ("c", "n", "d", "g2"),
+        ("e", "n", "f", "g3"),
+        ("g1", "meta", "m1", "gm"),
+        ("g2", "meta", "m2", "gm"),
+        ("gx", "meta", "m3", "gm"),
+        ("r", "about", "g2", "gm"),
+    ]
+    q = spark.createDataFrame(rows, "s string, p string, o string, g string")
+    d = build_dictionary(q)
+    encq = encode_triples(q, d)
+    eng = SparqlEngine(encq.drop("g").dropDuplicates(["s", "p", "o"]), d,
+                       quads=encq)
+    out = eng.query(
+        "SELECT ?g ?m WHERE { GRAPH ?g { ?s <n> ?o } ?g <meta> ?m }"
+    )
+    assert _rows(out) == [("g1", "m1"), ("g2", "m2")]
+    out = eng.query(
+        "SELECT ?g ?x WHERE { ?x <about> ?g GRAPH ?g { ?s <n> ?o } }"
+    )
+    assert _rows(out) == [("g2", "r")]
+
+
 def test_engine_from_dataset_clauses(quad_engine):
     # FROM narrows the default graph to g1's triples
     out = quad_engine.query("SELECT ?s ?o FROM <g1> WHERE { ?s <m> ?o }")
